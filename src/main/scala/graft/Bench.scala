@@ -252,7 +252,7 @@ object Bench {
       // localCheckpoint frames that later cache misses must still be
       // able to read — r13 advice), so the sweep skips exactly the
       // RDD ids live SharedFrames plans reference and drops the rest.
-      // (FrameStore caches are parquet, untouched by definition.)
+      // (Store entries are parquet, untouched by definition.)
       if (sinceGc >= 16) {
         // isCheckpointed (public) is true only for (locally)
         // checkpointed-and-materialized RDDs — SharedFrames persist()

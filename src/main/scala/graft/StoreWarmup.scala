@@ -2,9 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Warms every cross-session persisted store (FrameStore /
-  * SketchStore / AnnIndexStore) at a given data directory, so a bench
-  * or service session pays the one-off build costs OFF the clock and
+/** Warms every cross-session [[graft.functions.Store]] kind at a given
+  * data directory, so a bench or service session pays the one-off
+  * build costs OFF the clock and
   * reports them as their own figures (VERDICT r14 item 1: the driver's
   * BENCH_r14 shot paid q237's 28.5 s cold pair-matrix build inside the
   * timed window because the warmup pass only ran at sf0.001).
@@ -12,7 +12,7 @@ import org.apache.spark.sql.SparkSession
   * Each warmer is a thin call into the SAME store-keyed code path its
   * catalog queries read — `AgreementQueries.btPairsStored`,
   * `DedupQueries.fuzzyFullClusters`, `PipelineQueries.warmCleanClusters`,
-  * `WarehouseQueries.warmSketchStore`, `SimilarityQueries
+  * `WarehouseQueries.warmKmvPartials`, `SimilarityQueries
   * .ivfCentroidsStored` — never a re-statement of the keying, so the
   * warmer and the consumers cannot drift apart. A warm store makes
   * every warmer a fingerprint scan + validated load (sub-second); a
@@ -27,8 +27,8 @@ import org.apache.spark.sql.SparkSession
   */
 object StoreWarmup {
 
-  /** (store family label, forcing action) — the label matches the
-    * StoreEvents kind prefix the family records. */
+  /** (store kind, forcing action) — the label is the kind the
+    * family's builds record in StoreEvents. */
   def warmers: Seq[(String, (SparkSession, String) => Unit)] = Seq(
     "bt_pairs" -> ((s, d) => { operators.AgreementQueries.btPairsStored(s, d); () }),
     "fuzzy_clusters" -> ((s, d) => {
@@ -36,7 +36,7 @@ object StoreWarmup {
     }),
     "fuzzy_clusters_clean" -> ((s, d) =>
       operators.PipelineQueries.warmCleanClusters(s, d)),
-    "kmv" -> ((s, d) => operators.WarehouseQueries.warmSketchStore(s, d)),
+    "kmv" -> ((s, d) => operators.WarehouseQueries.warmKmvPartials(s, d)),
     "ivf" -> ((s, d) => { operators.SimilarityQueries.ivfCentroidsStored(s, d); () })
   )
 

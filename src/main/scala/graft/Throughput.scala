@@ -157,7 +157,7 @@ object Throughput {
         regexp_replace(col("text"), "(\\S+)", "$1r" + m).as("text")))
       val t0 = System.nanoTime()
       val out = graft.operators.DedupQueries
-        .fuzzyFullClusters(docs, store = false) // probe the REAL fixpoint
+        .fuzzyClusterFixpoint(docs) // probe the REAL fixpoint
         .selectExpr("count(*)", "sum(if(is_canonical, 0, 1))").collect()
       val sec = (System.nanoTime() - t0) / 1e9
       println(f"""{"metric":"fuzzy_cluster_scale","docs":${out.head.getLong(0)},"non_canonical":${out.head.getLong(1)},"sec":$sec%.2f}""")
@@ -426,7 +426,7 @@ object Throughput {
       }
       // finally: the 256x float replica alone is ~135 MB, and a failed
       // require/job mid-loop must not orphan it in /tmp
-      finally graft.functions.AtomicDir.deleteRecursively(pqDir.toPath)
+      finally graft.functions.Store.deleteRecursively(pqDir.toPath)
     }
     spark.stop()
   }

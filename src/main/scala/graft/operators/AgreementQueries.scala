@@ -160,10 +160,10 @@ object AgreementQueries {
         .cast("long").as("w_vu"))
 
   /** The ONE persisted + session-shared smoothed duel-pair matrix:
-    * FrameStore keys it by the content fingerprint of the (orderkey,
-    * partkey, quantity) stream it is a pure function of (cross-session
-    * — only the first session per data snapshot pays the ~6.5 s duel
-    * build at sf0.1), and SharedFrames keeps the loaded frame hot
+    * [[graft.functions.Store]] keys it by the content fingerprint of
+    * the (orderkey, partkey, quantity) stream it is a pure function of
+    * (cross-session — only the first session per data snapshot pays
+    * the ~6.5 s duel build at sf0.1), and SharedFrames keeps the loaded frame hot
     * within the session for every consumer iteration. Single
     * definition shared by q237 (Bradley-Terry), q251 (Copeland), and
     * [[graft.StoreWarmup]] — the bench warms EXACTLY the store entry
@@ -172,11 +172,10 @@ object AgreementQueries {
   def btPairsStored(s: org.apache.spark.sql.SparkSession,
       d: String): DataFrame =
     graft.plans.SharedFrames(s, d, "bt_pairs") {
-      graft.functions.FrameStore.loadOrBuild(s, "bt_pairs",
-        version = 1,
-        base = Tables.lineitem(s, d).select(
-          col("l_orderkey"), col("l_partkey"), col("l_quantity")),
-        expectCols = Seq("u", "v", "w_uv", "w_vu")) {
+      graft.functions.Store.loadOrBuild(s, "bt_pairs", 1,
+        graft.functions.Store.fingerprint(Tables.lineitem(s, d).select(
+          col("l_orderkey"), col("l_partkey"), col("l_quantity"))))(
+        Seq("u", "v", "w_uv", "w_vu")) {
         btPairs(Tables.lineitem(s, d))
       }
     }
@@ -700,7 +699,7 @@ object AgreementQueries {
       "iteration so lineage stays linear, and ReuseExchange dedups " +
       "the shared pair subtree across iterations exactly as in q95. " +
       "The pair matrix itself persists across sessions via the " +
-      "FrameStore lifecycle (fingerprint-keyed on the (o,p,q) " +
+      "Store lifecycle (fingerprint-keyed on the (o,p,q) " +
       "stream, atomic publish, validate-or-rebuild), so only the " +
       "first session per data snapshot pays the duel build.",
       s"""WITH op AS MATERIALIZED (SELECT l_orderkey AS o, l_partkey AS p,
@@ -727,7 +726,7 @@ object AgreementQueries {
         |ORDER BY rank LIMIT 20""".stripMargin) { (s, d) =>
       graft.plans.LazyStage.defer(s, btSchema) { () =>
         // Cross-session: the one-time pair-matrix build persists via
-        // FrameStore (fingerprint of the (o, p, q) stream it is a pure
+        // Store (fingerprint of the (o, p, q) stream it is a pure
         // function of), so a fresh session pays one combinable
         // fingerprint scan + a parquet load, not the ~6.5 s duel
         // self-join (VERDICT r11 item 5); see btPairsStored.

@@ -187,7 +187,7 @@ object CurationQueries {
       "item's Copeland score is its point sum over opponents and " +
       "the Condorcet flag marks items that beat EVERY opponent " +
       "(copeland2 = 2*n_opp). Pure integer comparisons -> " +
-      "hash-exact. The Spark side reads q237's FrameStore-persisted " +
+      "hash-exact. The Spark side reads q237's Store-persisted " +
       "SMOOTHED pair matrix: head-to-head verdicts are invariant " +
       "under the Laplace +1 applied to BOTH orientations (w_uv+1 > " +
       "w_vu+1 iff w_uv > w_vu), so the cross-session asset is shared " +

@@ -338,29 +338,30 @@ object DedupQueries {
     * propagation fixpoint, or one fingerprint scan on a store hit) —
     * catalog entries defer it via LazyStage.
     *
-    * The cluster assignment rides [[graft.functions.FrameStore]]
+    * The cluster assignment rides [[graft.functions.Store]]
     * (r12 verdict item 4 — the q237 pattern): q66/q141/q143 share one
     * build per (doc_id, text) content fingerprint instead of each
     * re-running the LSH fixpoint, q70's cleaned-subset clustering gets
-    * its own fingerprint-keyed entry, and later sessions load warm.
-    * The assignment is a pure deterministic function of the input
-    * (min-doc_id labels), so a cache hit is value-identical; bump the
-    * version when the signature/banding/threshold algebra changes
-    * (the fingerprint cannot see code). */
+    * its own `kind`, and later sessions load warm. The assignment is a
+    * pure deterministic function of the input (min-doc_id labels), so
+    * a cache hit is value-identical; bump the version when the
+    * signature/banding/threshold algebra changes (the fingerprint
+    * cannot see code). */
   private[graft] def fuzzyFullClusters(docs: DataFrame,
-      store: Boolean = true): DataFrame = {
-    def build: DataFrame = {
-      val e0 = lshConfirmedPairs(docs, 0.5)
-        .select(col("doc_a").as("a"), col("doc_b").as("b"))
-      val edges = e0.union(e0.select(col("b").as("a"), col("a").as("b")))
-      clustersOf(docs.select("doc_id"), edges)
-    }
-    // store=false: the Throughput scale probe and build-cost tests
-    // measure the real fixpoint, never a warm cache hit
-    if (!store) build
-    else graft.functions.FrameStore.loadOrBuild(docs.sparkSession,
-      "fuzzy_clusters", 1, docs.select(col("doc_id"), col("text")),
-      Seq("doc_id", "cluster_id", "is_canonical", "cluster_size"))(build)
+      kind: String = "fuzzy_clusters"): DataFrame =
+    graft.functions.Store.loadOrBuild(docs.sparkSession, kind, 1,
+      graft.functions.Store.fingerprint(docs.select(col("doc_id"), col("text"))))(
+      Seq("doc_id", "cluster_id", "is_canonical", "cluster_size"))(
+      fuzzyClusterFixpoint(docs))
+
+  /** The unstored build behind [[fuzzyFullClusters]]: the Throughput
+    * scale probe, the cross-check gate and build-cost tests measure the
+    * real fixpoint, never a warm store hit. */
+  private[graft] def fuzzyClusterFixpoint(docs: DataFrame): DataFrame = {
+    val e0 = lshConfirmedPairs(docs, 0.5)
+      .select(col("doc_a").as("a"), col("doc_b").as("b"))
+    val edges = e0.union(e0.select(col("b").as("a"), col("a").as("b")))
+    clustersOf(docs.select("doc_id"), edges)
   }
 
   /** Asymmetric LSH candidate pairs: incoming docs probed against a
@@ -408,9 +409,8 @@ object DedupQueries {
   }
 
   /** The standing-corpus asset q75 probes — at 100 TB these three frames
-    * are what an ingest pipeline persists between deltas
-    * ([[graft.functions.DedupIndexStore]]) and republishes on corpus
-    * growth:
+    * are what an ingest pipeline builds once per corpus snapshot and
+    * probes with every delta:
     *
     *   - hashIndex    (hh, exact_id): md5 -> canonical (min) doc id
     *   - bandIndex    (band, bucket, cand_id): LSH 8x2 over MinHash(16)
@@ -424,9 +424,9 @@ object DedupQueries {
     * text). Shingle-less corpus docs are excluded from the band index
     * (their degenerate all-null signature would form one giant bucket per
     * band) but present in the hash index (a byte-exact dup of a 2-token
-    * doc is still exact). Shared by batch q75, the streaming twin
-    * ([[graft.streaming.IncrementalDedupStream]]) and the persisted
-    * store, so all three probe the SAME index definition. */
+    * doc is still exact). Shared by batch q75 and the streaming twin
+    * ([[graft.streaming.IncrementalDedupStream]]), so both probe the
+    * SAME index definition. */
   def indexCorpus(corpus: DataFrame): CorpusDedupIndex = {
     val hashIndex = corpus
       .groupBy(md5(col("text").cast("binary")).as("hh"))
@@ -463,10 +463,9 @@ object DedupQueries {
   private[graft] def incrementalDedup(corpus: DataFrame, incoming: DataFrame): DataFrame =
     incrementalDedupIndexed(indexCorpus(corpus), incoming)
 
-  /** [[incrementalDedup]] against an already-built (possibly loaded from
-    * [[graft.functions.DedupIndexStore]]) index — the production daily
-    * shape, where the corpus cost was paid once at publish time and each
-    * delta pays only the probe. */
+  /** [[incrementalDedup]] against an already-built index — the
+    * production daily shape, where the corpus cost was paid once per
+    * snapshot and each delta pays only the probe. */
   private[graft] def incrementalDedupIndexed(index: CorpusDedupIndex,
       incoming: DataFrame): DataFrame = {
     val exact = incoming

@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
   * equi-join + O(log diameter) propagation (dedup), in-row chunking
   * (chunk), shard-parallel prefix windows with only the one-row-per-
   * 1,000-docs shard table through a global window (pack). Since r13
-  * the dedup stage's cluster assignment rides FrameStore (keyed by
+  * the dedup stage's cluster assignment rides the Store (keyed by
   * the cleaned subset's content fingerprint), so repeated runs — and
   * every session after the first — pay one fingerprint scan + a
   * parquet load instead of re-running the LSH fixpoint.
@@ -49,19 +49,20 @@ object PipelineQueries {
     * q65/q66. */
   /** Stage-1 cleaned subset (q55 gates, unsorted form; the semi join
     * needs no order) — factored so [[warmCleanClusters]] keys the q70
-    * FrameStore entry with the IDENTICAL cleaned frame. */
+    * Store entry with the IDENTICAL cleaned frame. */
   private def cleanedDocs(docs: DataFrame): DataFrame =
     docs.join(
       TextQueries.corpusCleanGates(docs).select("doc_id"),
       Seq("doc_id"), "left_semi")
 
-  /** Warm q70's cleaned-subset FrameStore entry (fuzzy clustering over
+  /** Warm q70's cleaned-subset Store entry (fuzzy clustering over
     * the gated corpus) without running the chunk/pack stages — the
     * [[graft.StoreWarmup]] hook, sharing [[cleanedDocs]] with
     * [[pretrainPack]] so the content fingerprint cannot drift. */
   private[graft] def warmCleanClusters(
       s: org.apache.spark.sql.SparkSession, d: String): Unit = {
-    DedupQueries.fuzzyFullClusters(cleanedDocs(Tables.documents(s, d)))
+    DedupQueries.fuzzyFullClusters(cleanedDocs(Tables.documents(s, d)),
+      "fuzzy_clusters_clean")
     ()
   }
 
@@ -71,7 +72,7 @@ object PipelineQueries {
     val clean = cleanedDocs(docs)
     // stage 2 — q66 full-corpus fuzzy clustering over the CLEANED set;
     // keep one canonical doc per near-dup cluster
-    val canonicalIds = DedupQueries.fuzzyFullClusters(clean)
+    val canonicalIds = DedupQueries.fuzzyFullClusters(clean, "fuzzy_clusters_clean")
       .where(col("is_canonical")).select("doc_id")
     val kept = clean.join(canonicalIds, Seq("doc_id"), "left_semi")
     // stage 3 — q68 chunking: doc-local, stays inside the row

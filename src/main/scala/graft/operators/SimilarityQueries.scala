@@ -124,7 +124,7 @@ object SimilarityQueries {
     *
     * The index is STAGED, not retrained per execution: one fingerprint
     * aggregate over the corpus (which also supplies N for sizing — no
-    * separate count scan), then [[graft.functions.AnnIndexStore]] loads
+    * separate count scan), then [[graft.functions.Store]] loads
     * the persisted centroid table on fingerprint hit and only runs the
     * distributed Lloyd build on miss, persisting for every later query.
     * Build cost thereby amortizes across executions/sessions the way a
@@ -138,21 +138,44 @@ object SimilarityQueries {
 
   /** The ONE staged coarse quantizer behind q47 and q269 (and the
     * bench's [[graft.StoreWarmup]]): corpus fingerprint -> sqrt(N)
-    * sizing -> AnnIndexStore load-or-train. Single definition so the
-    * store KEY (fingerprint, k, iterations, sample budget) can never
-    * drift between the queries that read the index and the warmup
-    * that builds it off the clock (VERDICT r14 item 1). Returns
+    * sizing -> Store load-or-train. Single definition so the store key
+    * can never drift between the queries that read the index and the
+    * warmup that builds it off the clock (VERDICT r14 item 1). Returns
     * (corpus row count, k, centroids ordered by cell). */
   private[graft] def ivfCentroidsStored(s: SparkSession, d: String)
       : (Long, Int, Array[Array[Double]]) = {
     val corpus = normed(s, d)
-    val (n, fp) = graft.functions.AnnIndexStore.fingerprint(corpus, "vec_id", "v")
-    val k = graft.functions.AnnIndex.chooseK(n)
-    val (cents, _) = graft.functions.AnnIndexStore.loadOrTrain(
-      s, corpus, "vec_id", "v", k = k, iterations = 10,
-      key = graft.functions.AnnIndexStore.contentKey(n, fp),
-      knownCount = Some(n))
-    (n, k, cents)
+    val fp = graft.functions.Store.fingerprint(corpus.select("vec_id", "v"))
+    val k = graft.functions.AnnIndex.chooseK(fp._1)
+    (fp._1, k, centroidsStored(corpus, fp, k))
+  }
+
+  /** The `ivf` Store entry of `corpus` (vec_id, v) under its
+    * fingerprint `fp`: k distributed-Lloyd centroids kept as a one-file
+    * (cell, c) table — k rows, and parquet round-trips doubles
+    * bit-exactly. A loaded table must hold exactly the dense cells
+    * 0..k-1 at one width, else it is retrained, never trusted. The k
+    * needs no place in the key: it is a function of the row count. */
+  private[graft] def centroidsStored(corpus: DataFrame, fp: (Long, Long, Long),
+      k: Int, iterations: Int = 10,
+      dir: String = graft.functions.Store.root("ivf")): Array[Array[Double]] = {
+    val s = corpus.sparkSession
+    import s.implicits._
+    def cells(t: DataFrame) = t.orderBy("cell").collect()
+      .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
+    def dense(t: DataFrame) = {
+      val cs = cells(t)
+      cs.length == k && cs.indices.forall(i => cs(i)._1 == i) &&
+        cs.forall(_._2.length == cs.head._2.length)
+    }
+    val table = graft.functions.Store.loadOrBuild(s, "ivf", 1, fp)(
+      Seq("cell", "c"), dense, dir) {
+      graft.functions.AnnIndex.trainCentroidsDistributed(corpus, "vec_id", "v",
+          k = k, iterations = iterations, knownCount = Some(fp._1))
+        .zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
+        .toDF("cell", "c").coalesce(1)
+    }
+    cells(table).map(_._2)
   }
 
   /** The exact q38 top-5 frame (qid, rnk, vid) — the shared engine-
@@ -318,12 +341,12 @@ object SimilarityQueries {
     * list is probed and at C >= N-1 every candidate survives to the
     * re-rank, which then reproduces the exact top-5 under the same
     * (cos DESC, vid) election. The coarse index is STAGED through
-    * AnnIndexStore exactly like q47 (built once per corpus fingerprint,
+    * the Store exactly like q47 (built once per corpus fingerprint,
     * loaded thereafter); PQ codebooks retrain from the bounded sample
     * (driver cost is 1,024 doubles — cheaper than a store round-trip). */
   def ivfpqTopKCertified(s: SparkSession, d: String, exact: DataFrame,
       floorTimes10: Long = 7L): (DataFrame, Long, Long) = {
-    import graft.functions.{AnnIndex, AnnIndexStore, ProductQuantizer}
+    import graft.functions.{AnnIndex, ProductQuantizer}
     import s.implicits._
     val corpus = normed(s, d)
     val m = 8
@@ -601,7 +624,7 @@ object SimilarityQueries {
       "floor; codes, cells, and candidate sets are engine-internal so " +
       "the emitted rows are the engine-independent exact top-5 — the " +
       "q39/q47/q268 conversion). Composition, not new machinery: q47's " +
-      "STAGED sqrt(N)-cell coarse quantizer (AnnIndexStore fingerprint " +
+      "STAGED sqrt(N)-cell coarse quantizer (Store fingerprint " +
       "hit after the first build) assigns cells in the same narrow pass " +
       "that q268's codebooks encode packed codes, candidates come ONLY " +
       "from the (cell) equi-join of probed postings, ADC scores them " +

@@ -810,7 +810,7 @@ object WarehouseQueries {
       "their v1 partials verbatim (cost proportional to CHANGED " +
       "partitions, the economics that make partial tables worth " +
       "persisting; the v1 partials themselves live in " +
-      "functions/SketchStore with AnnIndexStore's fingerprint-keyed " +
+      "functions/Store with its fingerprint-keyed " +
       "atomic-publish staleness contract). The audit made visible per " +
       "bucket: refreshed partial == full-recompute partial (kth hash " +
       "AND kept-count equality — the self-maintainability identity, " +
@@ -1057,18 +1057,19 @@ object WarehouseQueries {
       .orderBy("g")
   }
 
-  /** q211's Spark plan, factored for SketchLifecycleSpec. The v1
-    * partials route through [[graft.functions.SketchStore]] (persist
-    * once per content fingerprint, load thereafter — values identical
-    * either way, so the oracle compare is storage-transparent). */
-  /** Warm q211's KMV-partial SketchStore entry off the clock: frame
-    * CONSTRUCTION runs the eager loadOrBuild, so building the plan is
-    * the warm ([[graft.StoreWarmup]] hook). */
-  private[graft] def warmSketchStore(s: SparkSession, d: String): Unit = {
+  /** Warm q211's `kmv` Store entry off the clock: frame CONSTRUCTION
+    * runs the eager loadOrBuild, so building the plan is the warm
+    * ([[graft.StoreWarmup]] hook). */
+  private[graft] def warmKmvPartials(s: SparkSession, d: String): Unit = {
     sketchLifecycle(s, d)
     ()
   }
 
+  /** q211's Spark plan, factored for SketchLifecycleSpec. The v1
+    * partials route through [[graft.functions.Store]] as kind `kmv`
+    * (persist once per content fingerprint, load thereafter — values
+    * identical either way, so the oracle compare is
+    * storage-transparent). */
   private[operators] def sketchLifecycle(s: SparkSession, d: String)
       : DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -1092,14 +1093,16 @@ object WarehouseQueries {
     // of (g, hv); <= 10 bucket rows) makes every consumer read a
     // materialized root: ~2.4 s -> ~1.0 s steady at sf0.1. Values are
     // identical (checkpoint is content-transparent), so the
-    // SketchStore content fingerprint and the oracle rows are
+    // Store content fingerprint and the oracle rows are
     // untouched.
     val h1 = hashed(stateAt(s, d, 1L).select("k")).localCheckpoint()
     val h3 = hashed(stateAt(s, d, 3L).select("k")).localCheckpoint()
     // v1 partials: the persisted side of the lifecycle (fingerprint-
     // keyed store; on a hit the window pass above is skipped entirely)
-    val part1 = graft.functions.SketchStore.loadOrBuild(s, h1,
-      buildPartials = partials)
+    val part1 = graft.functions.Store.loadOrBuild(s, "kmv", 1,
+      graft.functions.Store.fingerprint(h1))(Seq("g", "hv")) {
+      partials(h1).coalesce(1)
+    }
     val part3 = partials(h3)
     // membership-aware refresh signal: a KEY-SET sketch only moves on
     // insert/delete — update_pre/postimage rows change cents, not

@@ -153,15 +153,8 @@ object AsyncMap {
   /** Per-task share of a cluster-global in-flight budget (ceil split over
     * the stage's partitions, from inside the task — see
     * [[mapConcurrentGlobal]] for why not driver-side). */
-  private def taskBudget(globalBudget: Int): Int = {
+  private[pipeline] def taskBudget(globalBudget: Int): Int = {
     val p = Option(TaskContext.get()).map(c => math.max(1, c.numPartitions())).getOrElse(1)
-    math.max(1, (globalBudget + p - 1) / p)
-  }
-
-  /** Driver-side budget split; prefer mapConcurrentGlobal (no plan
-    * materialization). */
-  def perPartitionBudget(ds: Dataset[_], globalBudget: Int): Int = {
-    val p = math.max(1, ds.rdd.getNumPartitions)
     math.max(1, (globalBudget + p - 1) / p)
   }
 }

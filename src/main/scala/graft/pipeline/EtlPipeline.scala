@@ -24,12 +24,7 @@ final case class EtlConfig(
     lenientCast: Boolean = true,
     // Counting rejects is an extra scan job; the reference only logs them
     // as it goes (main.go:415-417). Off for latency-critical runs.
-    countRejected: Boolean = true,
-    // None = round-robin routing like the reference's index%workers
-    // (O9, main.go:143-145). Some(col) = hash routing on that column —
-    // the by-key variant that co-locates a device's records with one
-    // loader (useful when the sink benefits from per-key batching).
-    routeKey: Option[String] = None)
+    countRejected: Boolean = true)
 
 final case class EtlRunStats(
     inputRows: Long,
@@ -56,12 +51,9 @@ class EtlPipeline(spark: SparkSession, cfg: EtlConfig) {
     * a post-extract shuffle would be a stage barrier that serializes the
     * 24 s extract and the sink flushes. */
   def deviceData(): (DataFrame, DataFrame) = {
-    import org.apache.spark.sql.functions.col
     val src = ApplianceSource.read(spark, cfg.csvPath)
-    val routed = cfg.routeKey match {
-      case Some(k) => src.ok.repartition(cfg.loadPartitions, col(k))
-      case None => src.ok.repartition(cfg.loadPartitions)
-    }
+    // round-robin routing, like the reference's index % workers (O9)
+    val routed = src.ok.repartition(cfg.loadPartitions)
     val cpu = cfg.extractor.extract(spark, routed)
     (Transform.toDeviceData(cpu, cfg.lenientCast), src.rejected)
   }

@@ -24,7 +24,7 @@ import org.apache.spark.sql.types.StructType
   * return (cluster assignments, centroid tables) this is noise; the win
   * is that catalog/plan construction is free and the iterative cost lands
   * on the action that deliberately materializes the stage — the same
-  * attribution q47's index build gets via AnnIndexStore.
+  * attribution q47's index build gets via the Store.
   *
   * The deferred frame's logical plan is an opaque ExistingRDD — filters
   * do not push INTO the staged computation. Use it at stage boundaries

@@ -45,7 +45,7 @@ import org.apache.spark.sql.functions._
   *     sure no more candidate rows for that arrival can appear).
   *   - INDEX STALENESS: verdicts are relative to the corpus AS OF index
   *     build — docs ingested since do not match until the index is
-  *     republished (q47's AnnIndexStore staleness contract, same trade).
+  *     republished (q47's Store staleness contract, same trade).
   *   - IN-DELTA DUPS: two near-identical arrivals both get 'keep' if
   *     neither matches the corpus — identical to batch q75's contract
   *     (in-batch dedup is the exact/fuzzy twins' job).
@@ -53,10 +53,9 @@ import org.apache.spark.sql.functions._
 object IncrementalDedupStream {
 
   /** The published corpus asset — the SAME index definition batch q75
-    * builds and [[graft.functions.DedupIndexStore]] persists
-    * ([[graft.operators.DedupQueries.CorpusDedupIndex]]): hash index
-    * (hh, exact_id), LSH band index (band, bucket, cand_id) and shingle
-    * index (cand_id, sh_c). One definition, three consumers. */
+    * builds ([[graft.operators.DedupQueries.CorpusDedupIndex]]): hash
+    * index (hh, exact_id), LSH band index (band, bucket, cand_id) and
+    * shingle index (cand_id, sh_c). One definition, two consumers. */
   type CorpusIndex = graft.operators.DedupQueries.CorpusDedupIndex
 
   /** See [[graft.operators.DedupQueries.indexCorpus]]. */

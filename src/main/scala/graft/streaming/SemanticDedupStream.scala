@@ -12,7 +12,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * batch operator uses — against a FIXED trained centroid table, which
   * is how a production ingest path runs (train offline on a corpus
   * sample via AnnIndex, stream against the published index; q47's
-  * AnnIndexStore staleness contract governs when to retrain) — and is
+  * Store staleness contract governs when to retrain) — and is
   * dropped iff some already-kept vector of the same cluster within the
   * watermark horizon has cosine >= tau to it.
   *

@@ -45,10 +45,10 @@ object ClusterCrossCheck {
       s"cross-check is a gate tool: ${edges.length} edges exceed the " +
         "driver-verification bound — raise it only with measured memory headroom")
 
-    // Engine side: the real distributed fixpoint (store=false so a warm
-    // FrameStore entry can never vouch for itself).
+    // Engine side: the real distributed fixpoint (unstored, so a warm
+    // Store entry can never vouch for itself).
     val engine = graft.operators.DedupQueries
-      .fuzzyFullClusters(docs, store = false)
+      .fuzzyClusterFixpoint(docs)
       .select($"doc_id".as[Long], $"cluster_id".as[Long],
         $"is_canonical".as[Boolean], $"cluster_size".as[Long])
       .collect()

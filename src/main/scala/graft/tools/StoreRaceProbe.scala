@@ -4,13 +4,13 @@ import graft.Sessions
 import org.apache.spark.sql.SparkSession
 
 /** Cross-PROCESS store-race probe: one JVM's worth of the scenario the
-  * FrameStoreSpec thread test cannot reach — two separate Spark
+  * in-process thread test cannot reach — two separate Spark
   * sessions (separate block managers, separate temp dirs, separate
   * pids) racing `loadOrBuild` of the SAME key in a shared store
   * directory, the deployment shape of a cluster where many sessions
   * share one warm store. The spec forks two of these concurrently and
   * asserts both read the full frame and exactly one published entry
-  * survives with no tmp residue (AtomicDir's pid-scoped tmp siblings +
+  * survives with no tmp residue (the Store's pid-scoped tmp siblings +
   * validated publish are the machinery under test).
   *
   * Usage: StoreRaceProbe <storeDir> — prints one JSON line, exits 2 on
@@ -25,8 +25,8 @@ object StoreRaceProbe {
     try {
       import spark.implicits._
       val base = (1L to 200L).map(i => (i, i * 10L)).toDF("k", "v")
-      val out = graft.functions.FrameStore.loadOrBuild(
-        spark, "xrace", 1, base, Seq("k", "v"), dir) {
+      val out = graft.functions.Store.loadOrBuild(spark, "xrace", 1,
+        graft.functions.Store.fingerprint(base))(Seq("k", "v"), dir = dir) {
         Thread.sleep(500) // widen the build window so publishes collide
         base
       }

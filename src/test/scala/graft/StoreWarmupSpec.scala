@@ -33,7 +33,7 @@ class StoreWarmupSpec extends SparkSpec {
   test("a store-backed query runs entirely warm after warmAll") {
     StoreWarmup.warmAll(spark, sf0001)
     val c0 = functions.StoreEvents.count
-    // q237 is the r14 incident query: its FrameStore access hides
+    // q237 is the r14 incident query: its Store access hides
     // behind LazyStage (execution-time), exactly the shape the sf0.001
     // construction warmup could never reach.
     val df = SparkEntry.queries("q237_bradley_terry")(spark, sf0001)

@@ -43,39 +43,42 @@ class AnnIndexSpec extends SparkSpec {
       java.nio.file.Paths.get("target"), "ann-index-spec").toString
     val corpus = graft.Tables.embeddings(spark, sf0001)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    val (n, fp) = AnnIndexStore.fingerprint(corpus, "vec_id", "v")
-    assert(n == corpus.count())
-    val key = AnnIndexStore.contentKey(n, fp)
+    val fp = Store.fingerprint(corpus)
+    assert(fp._1 == corpus.count())
+    // q47's lookup at test size; the StoreEvents delta is the miss count
+    def trained(k: Int) = {
+      val e0 = StoreEvents.count
+      val cents = graft.operators.SimilarityQueries.centroidsStored(
+        corpus, fp, k, iterations = 3, dir = dir)
+      (cents, StoreEvents.count - e0)
+    }
 
-    val (built, hit1) = AnnIndexStore.loadOrTrain(
-      spark, corpus, "vec_id", "v", k = 8, iterations = 3, key = key, dir = dir)
-    assert(!hit1, "first call must be a build miss")
+    val (built, builds1) = trained(8)
+    assert(builds1 == 1, "first call must be a build miss")
     assert(built.length == 8)
 
-    val (loaded, hit2) = AnnIndexStore.loadOrTrain(
-      spark, corpus, "vec_id", "v", k = 8, iterations = 3, key = key, dir = dir)
-    assert(hit2, "second call must load the persisted index")
+    val (loaded, builds2) = trained(8)
+    assert(builds2 == 0, "second call must load the persisted index")
     // parquet round-trips doubles bit-exactly
     assert(loaded.map(_.toSeq).toSeq == built.map(_.toSeq).toSeq)
 
-    // different k = different index entry -> miss
-    val (_, hitK) = AnnIndexStore.loadOrTrain(
-      spark, corpus, "vec_id", "v", k = 4, iterations = 3, key = key, dir = dir)
-    assert(!hitK, "a different k must not reuse the k=8 index")
+    // a different k fails the dense-cells check -> miss
+    val (_, buildsK) = trained(4)
+    assert(buildsK == 1, "a different k must not reuse the k=8 index")
 
     // content change flips the fingerprint -> different key -> miss
     val shifted = corpus.select((col("vec_id") + 1).as("vec_id"), col("v"))
-    val (n2, fp2) = AnnIndexStore.fingerprint(shifted, "vec_id", "v")
-    assert(n2 == n && fp2 != fp, "id shift must change the fingerprint, not the count")
+    val fp2 = Store.fingerprint(shifted)
+    assert(fp2._1 == fp._1 && fp2 != fp, "id shift must change the fingerprint, not the count")
 
     // fingerprint is partition-layout independent (commutative aggregate)
-    val (n3, fp3) = AnnIndexStore.fingerprint(corpus.repartition(7), "vec_id", "v")
-    assert(n3 == n && fp3 == fp, "repartitioning must not perturb the fingerprint")
+    assert(Store.fingerprint(corpus.repartition(7)) == fp,
+      "repartitioning must not perturb the fingerprint")
   }
 
   test("staleness contract: corpus mutation retrains, row reorder reuses") {
     // The two directions of the order-independent-fingerprint claim, as
-    // LOADORTRAIN behavior (not just fingerprint equality): a real
+    // LOAD-OR-TRAIN behavior (not just fingerprint equality): a real
     // deployment must never serve an index for a corpus that changed,
     // and must never retrain because parquet happened to scan in a
     // different order.
@@ -83,31 +86,27 @@ class AnnIndexSpec extends SparkSpec {
       java.nio.file.Paths.get("target"), "ann-stale-spec").toString
     val corpus = graft.Tables.embeddings(spark, sf0001)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    def keyOf(df: org.apache.spark.sql.DataFrame) = {
-      val (n, fp) = AnnIndexStore.fingerprint(df, "vec_id", "v")
-      AnnIndexStore.contentKey(n, fp)
+    def builds(df: org.apache.spark.sql.DataFrame) = {
+      val e0 = StoreEvents.count
+      graft.operators.SimilarityQueries.centroidsStored(
+        df, Store.fingerprint(df), k = 8, iterations = 3, dir = dir)
+      StoreEvents.count - e0
     }
-    val (_, hit0) = AnnIndexStore.loadOrTrain(
-      spark, corpus, "vec_id", "v", k = 8, iterations = 3, key = keyOf(corpus), dir = dir)
-    assert(!hit0, "fresh store must train")
+    assert(builds(corpus) == 1, "fresh store must train")
 
     // mutation: one element of ONE vector changes -> fingerprint miss ->
     // retrain (a reused index would silently serve the pre-mutation corpus)
     val mutated = corpus.select(col("vec_id"),
       when(col("vec_id") === 7,
         transform(col("v"), x => x + lit(0.25))).otherwise(col("v")).as("v"))
-    val (_, hitMut) = AnnIndexStore.loadOrTrain(
-      spark, mutated, "vec_id", "v", k = 8, iterations = 3, key = keyOf(mutated), dir = dir)
-    assert(!hitMut, "a mutated corpus must miss the cache and retrain")
+    assert(builds(mutated) == 1, "a mutated corpus must miss the cache and retrain")
 
     // reorder: same rows, reversed sort + different partitioning ->
     // fingerprint HIT -> the trained index is reused without a rebuild
     val reordered = corpus.orderBy(col("vec_id").desc).repartition(5)
-    assert(keyOf(reordered) == keyOf(corpus),
+    assert(Store.fingerprint(reordered) == Store.fingerprint(corpus),
       "row order and partition layout must not perturb the content key")
-    val (_, hitRe) = AnnIndexStore.loadOrTrain(
-      spark, reordered, "vec_id", "v", k = 8, iterations = 3, key = keyOf(reordered), dir = dir)
-    assert(hitRe, "a reordered-but-identical corpus must reuse the index")
+    assert(builds(reordered) == 0, "a reordered-but-identical corpus must reuse the index")
   }
 
   test("driver trainer refuses k past its sample ceiling with a clear error") {

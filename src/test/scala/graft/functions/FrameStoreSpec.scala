@@ -6,13 +6,19 @@ import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** FrameStore lifecycle: build-once / load-thereafter identity, content
-  * fingerprint staleness, version orphaning, and corrupt-entry
-  * fallback — the q237 pair-matrix persistence contract. */
+/** Store lifecycle: build-once / load-thereafter identity, content
+  * fingerprint staleness, version orphaning, corrupt-entry fallback,
+  * publish races and the per-kind eviction bound. */
 class FrameStoreSpec extends SparkSpec {
 
   private def tmpDir(): Path =
-    Files.createTempDirectory("graft-framestore-spec")
+    Files.createTempDirectory("graft-store-spec")
+
+  /** One lookup keyed by `base`'s content fingerprint. */
+  private def stored(kind: String, version: Int, base: DataFrame,
+      cols: Seq[String], dir: String)(build: => DataFrame): DataFrame =
+    Store.loadOrBuild(spark, kind, version, Store.fingerprint(base))(
+      cols, dir = dir)(build)
 
   private def base(rows: Seq[(Long, Long)]): DataFrame = {
     import spark.implicits._
@@ -30,9 +36,9 @@ class FrameStoreSpec extends SparkSpec {
       builds += 1
       b.groupBy("k").agg(sum("v").cast("long").as("s"))
     }
-    val first = FrameStore.loadOrBuild(spark, "t", 1, b,
+    val first = stored("t", 1, b,
       Seq("k", "s"), dir)(build)
-    val again = FrameStore.loadOrBuild(spark, "t", 1, b,
+    val again = stored("t", 1, b,
       Seq("k", "s"), dir)(build)
     assert(builds == 1, "second call must not rebuild")
     assert(first.collect().map(_.toSeq).toSet ==
@@ -45,15 +51,15 @@ class FrameStoreSpec extends SparkSpec {
     val b2 = base(Seq((1L, 11L)))
     var builds = 0
     def mk(src: DataFrame): DataFrame = { builds += 1; src }
-    FrameStore.loadOrBuild(spark, "t", 1, b1, Seq("k", "v"), dir)(mk(b1))
-    FrameStore.loadOrBuild(spark, "t", 1, b2, Seq("k", "v"), dir)(mk(b2))
+    stored("t", 1, b1, Seq("k", "v"), dir)(mk(b1))
+    stored("t", 1, b2, Seq("k", "v"), dir)(mk(b2))
     assert(builds == 2, "changed content must miss the cache")
   }
 
   test("fingerprint is order-independent: permuted base hits the cache") {
     val rows = Seq((1L, 10L), (2L, 20L), (3L, 30L), (4L, 40L))
-    val f1 = FrameStore.fingerprint(base(rows))
-    val f2 = FrameStore.fingerprint(base(rows.reverse).repartition(3))
+    val f1 = Store.fingerprint(base(rows))
+    val f2 = Store.fingerprint(base(rows.reverse).repartition(3))
     assert(f1 == f2)
   }
 
@@ -66,15 +72,15 @@ class FrameStoreSpec extends SparkSpec {
     val dir = tmpDir().toString
     val b1 = base(Seq((1L, 10L), (1L, 10L)))
     val b2 = base(Seq((1L, 11L), (1L, 11L)))
-    val f1 = FrameStore.fingerprint(b1)
-    val f2 = FrameStore.fingerprint(b2)
+    val f1 = Store.fingerprint(b1)
+    val f2 = Store.fingerprint(b2)
     assert(f1._1 == f2._1 && f1._2 == f2._2,
       "premise: count and XOR are blind to this edit")
     assert(f1._3 != f2._3, "sum limb must distinguish the edit")
     var builds = 0
     def mk(src: DataFrame): DataFrame = { builds += 1; src }
-    FrameStore.loadOrBuild(spark, "t", 1, b1, Seq("k", "v"), dir)(mk(b1))
-    FrameStore.loadOrBuild(spark, "t", 1, b2, Seq("k", "v"), dir)(mk(b2))
+    stored("t", 1, b1, Seq("k", "v"), dir)(mk(b1))
+    stored("t", 1, b2, Seq("k", "v"), dir)(mk(b2))
     assert(builds == 2, "even-duplicate edit must miss the cache")
   }
 
@@ -83,8 +89,8 @@ class FrameStoreSpec extends SparkSpec {
     val b = base(Seq((1L, 10L)))
     var builds = 0
     def mk: DataFrame = { builds += 1; b }
-    FrameStore.loadOrBuild(spark, "t", 1, b, Seq("k", "v"), dir)(mk)
-    FrameStore.loadOrBuild(spark, "t", 2, b, Seq("k", "v"), dir)(mk)
+    stored("t", 1, b, Seq("k", "v"), dir)(mk)
+    stored("t", 2, b, Seq("k", "v"), dir)(mk)
     assert(builds == 2)
   }
 
@@ -93,9 +99,9 @@ class FrameStoreSpec extends SparkSpec {
     val b = base(Seq((1L, 10L), (2L, 20L)))
     // persist a frame under kind=t v1 whose columns do NOT match what
     // the consumer expects — must be treated as absent
-    FrameStore.loadOrBuild(spark, "t", 1, b, Seq("k", "v"), dir)(b)
+    stored("t", 1, b, Seq("k", "v"), dir)(b)
     var rebuilt = false
-    val out = FrameStore.loadOrBuild(spark, "t", 1, b,
+    val out = stored("t", 1, b,
       Seq("k", "v", "extra"), dir) {
       rebuilt = true
       b.withColumn("extra", lit(0L))
@@ -106,12 +112,12 @@ class FrameStoreSpec extends SparkSpec {
 
   test("q66 fuzzy clusters: store hit equals the real fixpoint, value for value") {
     // r12 verdict item 4: q66/q141/q143/q70 share the cluster
-    // assignment through FrameStore instead of each re-running the
+    // assignment through the Store instead of each re-running the
     // LSH fixpoint. The cached frame must equal the uncached build
     // exactly (the assignment is a pure function of (doc_id, text)).
     val docs = spark.read.parquet(s"$sf0001/documents.parquet")
     val fresh = graft.operators.DedupQueries
-      .fuzzyFullClusters(docs, store = false)
+      .fuzzyClusterFixpoint(docs)
     val stored = graft.operators.DedupQueries.fuzzyFullClusters(docs)
     val key = (df: DataFrame) => df
       .select("doc_id", "cluster_id", "is_canonical", "cluster_size")
@@ -126,9 +132,9 @@ class FrameStoreSpec extends SparkSpec {
     val proj = li.select(col("l_orderkey"), col("l_partkey"),
       col("l_quantity"))
     val cols = Seq("u", "v", "w_uv", "w_vu")
-    val built = FrameStore.loadOrBuild(spark, "bt_pairs_spec", 1, proj,
+    val built = stored("bt_pairs_spec", 1, proj,
       cols, dir)(graft.operators.AgreementQueries.btPairs(li))
-    val loaded = FrameStore.loadOrBuild(spark, "bt_pairs_spec", 1, proj,
+    val loaded = stored("bt_pairs_spec", 1, proj,
       cols, dir)(sys.error("must not rebuild"))
     val key = (df: DataFrame) => df.select(cols.map(col): _*)
       .collect().map(_.toSeq).toSet
@@ -140,7 +146,7 @@ class FrameStoreSpec extends SparkSpec {
     // r13 verdict item 7: two racing builders of the same (kind,
     // version, fingerprint) must BOTH return the complete frame, and
     // the store must end with exactly one published entry and zero
-    // in-flight tmp residue — AtomicDir's validated publish resolves
+    // in-flight tmp residue — the Store's validated publish resolves
     // the race; a lost race is swallowed only after the survivor
     // validates, so a torn entry can never become permanent.
     import scala.concurrent.{Await, Future}
@@ -154,7 +160,7 @@ class FrameStoreSpec extends SparkSpec {
     val fs = (1 to 2).map { _ =>
       Future {
         gate.await()
-        FrameStore.loadOrBuild(spark, "race", 1, b,
+        stored("race", 1, b,
           Seq("k", "v"), dir.toString)(b)
       }
     }
@@ -176,27 +182,27 @@ class FrameStoreSpec extends SparkSpec {
     // fingerprints into the same family; the store must stay bounded.
     import scala.jdk.CollectionConverters._
     val dir = tmpDir()
-    (1 to AtomicDir.defaultKeep + 2).foreach { i =>
+    (1 to Store.keep + 2).foreach { i =>
       val b = base(Seq((i.toLong, i * 10L)))
-      FrameStore.loadOrBuild(spark, "ev", 1, b, Seq("k", "v"),
+      stored("ev", 1, b, Seq("k", "v"),
         dir.toString)(b)
       Thread.sleep(15) // distinct mtimes so age ranking is deterministic
     }
     // a sibling kind must be untouched by ev's pruning
-    FrameStore.loadOrBuild(spark, "evother", 1, base(Seq((9L, 90L))),
+    stored("evother", 1, base(Seq((9L, 90L))),
       Seq("k", "v"), dir.toString)(base(Seq((9L, 90L))))
     val names = {
       val l = Files.list(dir)
       try l.iterator().asScala.map(_.getFileName.toString).toVector
       finally l.close()
     }
-    assert(names.count(_.startsWith("ev_v")) <= AtomicDir.defaultKeep,
+    assert(names.count(_.startsWith("ev_v")) <= Store.keep,
       s"family exceeded the eviction bound: $names")
     assert(names.exists(_.startsWith("evother_v")),
       "pruning one family must not touch another")
     // the just-published (newest) entry always survives eviction
-    val last = base(Seq((AtomicDir.defaultKeep + 2L, (AtomicDir.defaultKeep + 2) * 10L)))
-    FrameStore.loadOrBuild(spark, "ev", 1, last, Seq("k", "v"),
+    val last = base(Seq((Store.keep + 2L, (Store.keep + 2) * 10L)))
+    stored("ev", 1, last, Seq("k", "v"),
       dir.toString)(sys.error("newest entry must have survived eviction"))
   }
 
@@ -207,26 +213,26 @@ class FrameStoreSpec extends SparkSpec {
     // time — loads must count as use.
     val dir = tmpDir()
     val hot = base(Seq((1L, 10L)))
-    FrameStore.loadOrBuild(spark, "lru", 1, hot, Seq("k", "v"),
+    stored("lru", 1, hot, Seq("k", "v"),
       dir.toString)(hot)
     Thread.sleep(15)
-    (2 to AtomicDir.defaultKeep).foreach { i =>
+    (2 to Store.keep).foreach { i =>
       // re-LOAD the hot entry (the session-start pattern), then publish
       // a fresh throwaway fingerprint after it
-      FrameStore.loadOrBuild(spark, "lru", 1, hot, Seq("k", "v"),
+      stored("lru", 1, hot, Seq("k", "v"),
         dir.toString)(sys.error("hot entry must load, not rebuild"))
       Thread.sleep(15)
       val cold = base(Seq((i.toLong, i * 100L)))
-      FrameStore.loadOrBuild(spark, "lru", 1, cold, Seq("k", "v"),
+      stored("lru", 1, cold, Seq("k", "v"),
         dir.toString)(cold)
       Thread.sleep(15)
     }
     // bound reached; one more unused publish must evict a THROWAWAY,
     // never the hot entry
     val straw = base(Seq((99L, 990L)))
-    FrameStore.loadOrBuild(spark, "lru", 1, straw, Seq("k", "v"),
+    stored("lru", 1, straw, Seq("k", "v"),
       dir.toString)(straw)
-    FrameStore.loadOrBuild(spark, "lru", 1, hot, Seq("k", "v"),
+    stored("lru", 1, hot, Seq("k", "v"),
       dir.toString)(sys.error("hot (recently loaded) entry was evicted"))
   }
 }

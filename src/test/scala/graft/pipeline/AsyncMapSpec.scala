@@ -54,9 +54,10 @@ class AsyncMapSpec extends SparkSpec {
   }
 
   test("per-partition budget splits a global semaphore like the reference") {
-    val ds = spark.range(0, 100).repartition(8)
-    assert(AsyncMap.perPartitionBudget(ds, 1000) == 125)
-    assert(AsyncMap.perPartitionBudget(ds, 4) == 1)
+    // the split the Global variants run: read inside each task
+    val tasks = spark.range(0, 100, 1, 8).rdd
+    assert(tasks.map(_ => AsyncMap.taskBudget(1000)).collect().toSet == Set(125))
+    assert(tasks.map(_ => AsyncMap.taskBudget(4)).collect().toSet == Set(1))
   }
 
   test("quarantine variant keeps failures as error rows (O5 upgrade)") {

@@ -117,25 +117,6 @@ class EtlPipelineSpec extends SparkSpec {
     } finally server.stop()
   }
 
-  test("keyed routing co-locates records of the same key in one partition (O9 by-key)") {
-    val server = new MockLoadServer()
-    try {
-      val cfg = EtlConfig(
-        csvPath = writeCsv(60),
-        sink = HttpSink.Config(server.loadUrl, "t", batchSize = 200, spillDir = freshSpill()),
-        extractor = ProjectionExtractor(Some(1L)),
-        loadPartitions = 4,
-        routeKey = Some("hostname"))
-      val (device, _) = new EtlPipeline(spark, cfg).deviceData()
-      val perKey = device
-        .select(org.apache.spark.sql.functions.col("name"),
-          org.apache.spark.sql.functions.spark_partition_id().as("pid"))
-        .groupBy("name")
-        .agg(org.apache.spark.sql.functions.countDistinct("pid").as("npid"))
-      assert(perKey.where(org.apache.spark.sql.functions.col("npid") > 1).count() == 0)
-    } finally server.stop()
-  }
-
   test("transient sink failures are retried and do not spill") {
     val server = new MockLoadServer()
     val spillDir = freshSpill()

@@ -3,13 +3,13 @@ package graft.tools
 import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Cross-process FrameStore race (r13 verdict item 7, beyond the
+/** Cross-process Store race (r13 verdict item 7, beyond the
   * in-process thread case): two independent JVMs — separate Spark
   * sessions, block managers and pids — race loadOrBuild of one key in
   * a shared store directory. Both must read the complete frame (no
   * torn read), and the store must end with exactly one published
   * entry and zero tmp residue. This is the many-sessions-one-store
-  * deployment shape; AtomicDir's pid-scoped tmp siblings and
+  * deployment shape; the Store's pid-scoped tmp siblings and
   * validated publish are what make it safe. */
 class StoreRaceSpec extends AnyFunSuite {
 

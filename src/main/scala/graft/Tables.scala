@@ -5,10 +5,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Parquet table loaders for the driver-provided testdata
   * (`/root/testdata/sf*`; see TESTDATA.md). Every query receives the
   * scale-factor directory at call time so the same code runs at any SF —
-  * and, on a real cluster, against any warehouse path. Reads are plain
+  * and, on a real cluster, against any warehouse path. Each read is a
   * `spark.read.parquet`, so Catalyst owns column pruning and filter
   * pushdown into the scan (verified via `.explain("formatted")` — see
-  * PlanChecks in the test suite).
+  * PlanChecks in the test suite). The dims (region..part) are read as
+  * they are. `orders`, `lineitem`, `events`, `documents` and
+  * `embeddings` are hash-repartitioned on their key (see [[apply]]):
+  * their rows come back in no file order, so a caller that needs an
+  * order (an event-time replay, say) sorts explicitly, and their plans
+  * carry one `Exchange hashpartitioning(key, n), REPARTITION_BY_NUM`
+  * over the scan.
   */
 object Tables {
   val names: Seq[String] = Seq(

@@ -28,9 +28,12 @@ import java.sql.Timestamp
   *     frame through MemoryStream/file-source micro-batches, sentinel
   *     rows to close the watermark, then exact set/map equality against
   *     the batch operator on the same rows — the specs' own recipes,
-  *     re-run as a main. (session_window feeds ONE batch: built-in aggs
-  *     drop watermark-late input, unlike the flatMapGroupsWithState
-  *     twins, which see every row and tolerate unordered splits.)
+  *     re-run as a main. A two-batch replay must arrive in event-time
+  *     order (`orderBy("ts", "event_id")` before the split): `Tables`
+  *     returns events in no file order, and the flatMapGroupsWithState
+  *     twins run under EventTimeTimeout, so Spark drops every row older
+  *     than the watermark. (session_window feeds ONE batch, because its
+  *     built-in aggregation drops watermark-late input too.)
   *   - SYNTHETIC DETERMINISM (corpus_clean, dedup_cluster, fuzzy_dedup,
   *     semantic_dedup): the twin's parity anchor is first-arrival
   *     founder semantics that only a scripted arrival order pins down;
@@ -287,7 +290,7 @@ object StreamCheck {
             windowSec = 86400L, maxEvents = 5L)
           .select("user_id", "event_id", "n_24h")
           .as[(Long, Long, Long)].collect().toSet
-        val data = ev.as[(Long, Timestamp, Long)].collect()
+        val data = ev.orderBy("ts", "event_id").as[(Long, Timestamp, Long)].collect()
         val maxTs = data.map(_._2.getTime).max
         val ms = MemoryStream[(Long, Timestamp, Long)]
         val q = RateLimitStream.flags(
@@ -320,7 +323,8 @@ object StreamCheck {
             "last_seen", "n_events")
           .as[(Long, String, Timestamp, Timestamp, Timestamp, Long)]
           .collect().toSet
-        val data = ev.as[(Long, Timestamp, Long, String)].collect()
+        val data = ev.orderBy("ts", "event_id")
+          .as[(Long, Timestamp, Long, String)].collect()
         val maxTs = data.map(_._2.getTime).max
         val ms = MemoryStream[(Long, Timestamp, Long, String)]
         val q = Scd2Stream.intervals(
@@ -352,7 +356,7 @@ object StreamCheck {
         val batch = TemporalQueries.sessionize(ev, gapSec = gap)
           .as[(Long, Long, Timestamp, Timestamp, Long, Long)]
           .collect().toSet
-        val data = ev.as[(Long, Timestamp, Long)].collect()
+        val data = ev.orderBy("ts", "event_id").as[(Long, Timestamp, Long)].collect()
         val maxTs = data.map(_._2.getTime).max
         val ms = MemoryStream[(Long, Timestamp, Long)]
         val q = SessionStream.sessions(
@@ -657,6 +661,7 @@ object StreamCheck {
       run("drift_cusum", "sealed daily CUSUM == batch recursion with batch k (q174)") {
         val ev = Tables.events(spark, sfDir)
           .select(col("event_id"), col("ts"), col("event_type"))
+          .orderBy("ts", "event_id")
           .as[(Long, Timestamp, String)].collect()
         val dayOf = (ts: Timestamp) =>
           Math.floorDiv(ts.getTime, 86400000L) * 86400000L

@@ -219,8 +219,22 @@ class PqSpec extends SparkSpec {
       .select(ProductQuantizer.pqEncode(col("v"), col("nrm"), books).as("codes"))
       .select(posexplode(ProductQuantizer.pqAdcScores(col("codes"), tables, 8, 16)))
     val p = scoring.queryExecution.executedPlan.toString()
-    assert(!p.contains("Join") && !p.contains("Exchange"),
-      "PQ scoring must be a narrow join-free projection:\n" + p)
+    // the ONLY exchange admitted is the Tables-layer keyed scan
+    // repartition (r16) directly over the embeddings scan; encode and
+    // ADC scoring sit above it and must add no shuffle and no join.
+    // Re-tighten together with PlanChecksSpec's three r16 asserts once
+    // that repartition becomes data-derived.
+    assert(!p.contains("Join"), "PQ scoring must be join-free:\n" + p)
+    val exchanges = "Exchange".r.findAllIn(p).length -
+      "REPARTITION_BY_NUM".r.findAllIn(p).length
+    assert(exchanges == 0,
+      s"PQ scoring added $exchanges exchange(s) beyond the scan repartition:\n$p")
+    val lines = p.linesIterator.toVector
+    val aboveRepart = lines
+      .take(lines.lastIndexWhere(_.contains("REPARTITION_BY_NUM")) max 0)
+      .mkString("\n")
+    assert(!aboveRepart.contains("Exchange"),
+      "PQ scoring must be a narrow projection over the scan:\n" + p)
     val full = graft.SparkEntry.queries("q268_ann_pq_adc")(spark, sf0001)
     val fp = full.queryExecution.executedPlan.toString()
     // the exact baseline's theta-join broadcasts (the q38 shape); the PQ

@@ -29,6 +29,7 @@ class DriftStreamSpec extends SparkSpec {
   test("replay == batch CUSUM recursion on the real corpus") {
     val ev = graft.Tables.events(spark, sf0001)
       .select(col("event_id"), col("ts"), col("event_type"))
+      .orderBy("ts", "event_id")
       .as[(Long, Timestamp, String)].collect()
     val dayOf = (ts: Timestamp) =>
       Math.floorDiv(ts.getTime, 86400000L) * 86400000L
@@ -51,6 +52,9 @@ class DriftStreamSpec extends SparkSpec {
       .toDF().writeStream.outputMode("append").format("memory")
       .queryName("drift_replay").trigger(Trigger.ProcessingTime(0)).start()
     try {
+      // two micro-batches of real data in event-time order: Tables
+      // returns events in no file order, and rows older than the
+      // watermark are dropped as late
       val (b1, b2) = ev.splitAt(ev.length / 2)
       ms.addData(b1.toSeq); q.processAllAvailable()
       ms.addData(b2.toSeq); q.processAllAvailable()

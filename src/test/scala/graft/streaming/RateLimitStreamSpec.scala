@@ -86,7 +86,7 @@ class RateLimitStreamSpec extends SparkSpec {
       .select("user_id", "event_id", "n_24h")
       .as[(Long, Long, Long)].collect().toSet
 
-    val data = ev.as[(Long, Timestamp, Long)].collect()
+    val data = ev.orderBy("ts", "event_id").as[(Long, Timestamp, Long)].collect()
     val maxTs = data.map(_._2.getTime).max
     val ms = MemoryStream[(Long, Timestamp, Long)]
     val out = RateLimitStream.flags(
@@ -95,6 +95,9 @@ class RateLimitStreamSpec extends SparkSpec {
     val q = out.writeStream.outputMode("append").format("memory")
       .queryName("rate_real").trigger(Trigger.ProcessingTime(0)).start()
     try {
+      // two micro-batches of real data in event-time order: Tables
+      // returns events in no file order, and rows older than the
+      // watermark are dropped as late
       val (b1, b2) = data.splitAt(data.length / 2)
       ms.addData(b1.toSeq)
       q.processAllAvailable()

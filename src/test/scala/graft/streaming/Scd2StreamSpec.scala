@@ -62,7 +62,7 @@ class Scd2StreamSpec extends SparkSpec {
       .as[(Long, String, Timestamp, Timestamp, Timestamp, Long)]
       .collect().toSet
 
-    val data = ev.as[(Long, Timestamp, Long, String)].collect()
+    val data = ev.orderBy("ts", "event_id").as[(Long, Timestamp, Long, String)].collect()
     val maxTs = data.map(_._2.getTime).max
     val ms = MemoryStream[(Long, Timestamp, Long, String)]
     val out = Scd2Stream.intervals(
@@ -71,7 +71,9 @@ class Scd2StreamSpec extends SparkSpec {
     val q = out.writeStream.outputMode("append").format("memory")
       .queryName("scd2_real").trigger(Trigger.ProcessingTime(0)).start()
     try {
-      // two micro-batches of real data, then sentinel pushes for a
+      // two micro-batches of real data in event-time order (Tables
+      // returns events in no file order, and rows older than the
+      // watermark are dropped as late), then sentinel pushes for a
       // throwaway user to drive the watermark past every real event
       val (b1, b2) = data.splitAt(data.length / 2)
       ms.addData(b1.toSeq)

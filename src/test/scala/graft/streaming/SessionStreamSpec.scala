@@ -93,7 +93,7 @@ class SessionStreamSpec extends SparkSpec {
       .as[(Long, Long, Timestamp, Timestamp, Long, Long)]
       .collect().toSet
 
-    val data = ev.as[(Long, Timestamp, Long)].collect()
+    val data = ev.orderBy("ts", "event_id").as[(Long, Timestamp, Long)].collect()
     val maxTs = data.map(_._2.getTime).max
     val ms = MemoryStream[(Long, Timestamp, Long)]
     val out = SessionStream.sessions(
@@ -102,6 +102,9 @@ class SessionStreamSpec extends SparkSpec {
     val q = out.writeStream.outputMode("append").format("memory")
       .queryName("sess_real").trigger(Trigger.ProcessingTime(0)).start()
     try {
+      // two micro-batches of real data in event-time order: Tables
+      // returns events in no file order, and rows older than the
+      // watermark are dropped as late
       val (b1, b2) = data.splitAt(data.length / 2)
       ms.addData(b1.toSeq)
       q.processAllAvailable()

@@ -40,8 +40,7 @@ object Throughput {
         sink = HttpSink.Config(server.loadUrl, "t", batchSize = 200,
           spillDir = new java.io.File(dir, "spill").getPath),
         extractor = ProjectionExtractor(Some(1L)),
-        loadPartitions = 32,
-        countRejected = false)
+        loadPartitions = 32)
       val stats = new EtlPipeline(spark, cfg).run()
       val recPerSec = stats.sink.sentRecords * 1000.0 / stats.wallMillis
       println(f"""{"metric":"pipeline_throughput","records":$n,"wall_sec":${stats.wallMillis / 1000.0}%.2f,"rec_per_sec":$recPerSec%.0f,"reference_rec_per_sec":153}""")

@@ -1,30 +1,47 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.functions._
 
 /** End-to-end ETL pipeline (reference lifecycle, SURVEY.md §3.1) as one
-  * declarative Spark job:
+  * declarative Spark job that reads the CSV once:
   *
-  *   csv scan -> [replay union] -> extract -> transform ->
-  *   repartition(loadPartitions) -> batched HTTP sink (spill on failure)
+  *   csv scan -> route by position (loadPartitions) -> extract ->
+  *   transform -> batched HTTP sink (spill on failure, count rejects)
   *
   * The reference hand-rolls steps the planner owns here: goroutine
-  * fan-out becomes task parallelism + AsyncMap, channel routing becomes a
-  * single round-robin repartition (the pipeline's one shuffle,
-  * main.go:143-145), per-worker buffers become `grouped(batchSize)` in
-  * the sink, and the bounded-channel backpressure is Spark's pull-based
-  * iterators. Replay happens *before* the live run and through the same
-  * sink (fixing the reference's enqueue-then-delete loss window).
+  * fan-out becomes task parallelism + AsyncMap, per-worker buffers become
+  * `grouped(batchSize)` in the sink, and the bounded-channel backpressure
+  * is Spark's pull-based iterators. Replay happens *before* the live run
+  * and through the same sink (fixing the reference's enqueue-then-delete
+  * loss window).
+  *
+  * Routing (the pipeline's one exchange, main.go:143-145) sends row i of
+  * an input split to load partition `pmod(monotonically_increasing_id, n)`
+  * with `repartitionById`: like the reference's index % workers (O9) and
+  * like round-robin, each split spreads its rows over the partitions
+  * within ±1 row, but with no hash and no pre-sort. Round-robin needs
+  * Spark's local sort before the exchange because its input order may
+  * change on a retry; here the exchange reads the file scan directly, a
+  * split's row order is stable, and so each row's id and partition are
+  * the same on every attempt. Spark reports the shuffle's input
+  * DETERMINATE and its output UNORDERED, exactly as for the sorted
+  * round-robin.
+  *
+  * Malformed rows (a null `ip` or `hostname`) travel through the same
+  * exchange as reject markers: the extractor makes no call for them
+  * ([[Extractor]]'s marker contract), their JSON is null, and the sink
+  * counts and skips them. The count is taken action-side, in the sink's
+  * result tasks, because Spark applies one successful attempt's
+  * accumulator updates per result partition; an accumulator updated in a
+  * transformation or a map stage could count a retried task twice.
   */
 final case class EtlConfig(
     csvPath: String,
     sink: HttpSink.Config,
     extractor: Extractor = ProjectionExtractor(),
     loadPartitions: Int = 10,
-    lenientCast: Boolean = true,
-    // Counting rejects is an extra scan job; the reference only logs them
-    // as it goes (main.go:415-417). Off for latency-critical runs.
-    countRejected: Boolean = true)
+    lenientCast: Boolean = true)
 
 final case class EtlRunStats(
     inputRows: Long,
@@ -34,13 +51,12 @@ final case class EtlRunStats(
     sink: HttpSink.Stats,
     wallMillis: Long,
     replayMillis: Long = 0,
-    rejectScanMillis: Long = 0,
     mainJobMillis: Long = 0)
 
 class EtlPipeline(spark: SparkSession, cfg: EtlConfig) {
 
-  /** The transformed DeviceData frame (pre-sink) — exposed for tests and
-    * for relational use of the pipeline's output.
+  /** Every CSV row, reject markers included, routed, extracted and
+    * transformed; a marker's `name` is null.
     *
     * The pipeline's one exchange sits *before* extract, not after: the
     * reference routes post-extract through channels (main.go:143-145), but
@@ -50,19 +66,22 @@ class EtlPipeline(spark: SparkSession, cfg: EtlConfig) {
     * overlap extraction exactly like the reference's channel pipelining —
     * a post-extract shuffle would be a stage barrier that serializes the
     * 24 s extract and the sink flushes. */
-  def deviceData(): (DataFrame, DataFrame) = {
-    val src = ApplianceSource.read(spark, cfg.csvPath)
-    // round-robin routing, like the reference's index % workers (O9)
-    val routed = src.ok.repartition(cfg.loadPartitions)
-    val cpu = cfg.extractor.extract(spark, routed)
-    (Transform.toDeviceData(cpu, cfg.lenientCast), src.rejected)
+  private def loadRows(): DataFrame = {
+    val n = cfg.loadPartitions
+    val routed = ApplianceSource.scan(spark, cfg.csvPath)
+      .repartitionById(n, pmod(monotonically_increasing_id(), lit(n.toLong)).cast("int"))
+    Transform.toDeviceData(cfg.extractor.extract(spark, routed), cfg.lenientCast)
   }
+
+  /** The transformed DeviceData frame (pre-sink, no reject markers) —
+    * exposed for tests and for relational use of the pipeline's output. */
+  def deviceData(): DataFrame = loadRows().where(col("name").isNotNull)
 
   /** Typed boundary (SURVEY.md §1.4): the transformed output as
     * Dataset[DeviceData]. */
-  def deviceDataset(): org.apache.spark.sql.Dataset[DeviceData] = {
+  def deviceDataset(): Dataset[DeviceData] = {
     import spark.implicits._
-    deviceData()._1.as[DeviceData]
+    deviceData().as[DeviceData]
   }
 
   def run(): EtlRunStats = {
@@ -73,23 +92,17 @@ class EtlPipeline(spark: SparkSession, cfg: EtlConfig) {
     val (replayed, deleted) = Spill.replay(spark, cfg.sink)
     val t1 = System.nanoTime()
 
-    val (device, rejected) = deviceData()
-    val rejectedRows = if (cfg.countRejected) rejected.count() else -1L
+    val stats = HttpSink.write(Transform.deviceDataJson(loadRows()), cfg.sink)
     val t2 = System.nanoTime()
-
-    val json = Transform.deviceDataJson(device)
-    val stats = HttpSink.write(json, cfg.sink)
-    val t3 = System.nanoTime()
 
     EtlRunStats(
       inputRows = stats.sentRecords + stats.spilledRecords,
-      rejectedRows = rejectedRows,
+      rejectedRows = stats.rejectedRows,
       replayedRecords = replayed,
       replayedFilesDeleted = deleted,
       sink = stats,
-      wallMillis = (t3 - t0) / 1000000L,
+      wallMillis = (t2 - t0) / 1000000L,
       replayMillis = (t1 - t0) / 1000000L,
-      rejectScanMillis = (t2 - t1) / 1000000L,
-      mainJobMillis = (t3 - t2) / 1000000L)
+      mainJobMillis = (t2 - t1) / 1000000L)
   }
 }

@@ -19,7 +19,23 @@ import org.apache.spark.sql.functions._
   *     error classification. One HttpClient per executor JVM.
   */
 trait Extractor extends Serializable {
+
+  /** Marker contract: an appliance row with a null `ip` or `hostname` is
+    * a reject marker (a malformed CSV row, see [[EtlPipeline]]). It makes
+    * no device call and yields exactly one row whose `name` is null, so
+    * the sink can count it in the load job and skip it. */
   def extract(spark: SparkSession, appliances: DataFrame): DataFrame
+}
+
+object Extractor {
+
+  /** The marker contract for per-row calls: `call` runs only for
+    * well-formed appliances; a marker maps straight to a CpuStats whose
+    * `name` is null. */
+  def skippingMarkers(call: Appliance => CpuStats): Appliance => CpuStats = ap =>
+    if (ap.ip == null || ap.hostname == null) marker else call(ap)
+
+  private val marker = CpuStats(null, 0L, null, null, null, null, null, null)
 }
 
 /** Constant-time extract as a pure projection (values mirror the
@@ -29,7 +45,7 @@ final case class ProjectionExtractor(fixedTimestamp: Option[Long] = None) extend
   override def extract(spark: SparkSession, appliances: DataFrame): DataFrame = {
     val ts = fixedTimestamp.map(lit).getOrElse(unix_timestamp())
     appliances.select(
-      col("hostname").as("name"),
+      when(ApplianceSource.valid, col("hostname")).as("name"), // a marker's name is null
       ts.cast("long").as("timestamp"),
       lit("0").as("cpu_number"),
       lit("95").as("pIdle"),
@@ -53,14 +69,14 @@ final case class SimulatedLatencyExtractor(
     val fixed = fixedTimestamp
     val apps: Dataset[Appliance] =
       appliances.select(col("ip"), col("hostname")).as[Appliance]
-    AsyncMap.mapConcurrentGlobal(apps, globalConcurrency) { ap =>
+    AsyncMap.mapConcurrentGlobal(apps, globalConcurrency)(Extractor.skippingMarkers { ap =>
       Thread.sleep(lat) // stand-in for the device API round-trip
       CpuStats(
         name = ap.hostname,
         timestamp = fixed.getOrElse(System.currentTimeMillis() / 1000),
         cpu_number = "0",
         pIdle = "95", pUser = "3", pSys = "1", pIRQ = "0.5", pNice = "0")
-    }.toDF()
+    }).toDF()
   }
 }
 
@@ -90,7 +106,7 @@ final case class HttpExtractor(
     import spark.implicits._
     val apps: Dataset[Appliance] =
       appliances.select(col("ip"), col("hostname")).as[Appliance]
-    AsyncMap.mapConcurrentGlobal(apps, globalConcurrency)(fetch).toDF()
+    AsyncMap.mapConcurrentGlobal(apps, globalConcurrency)(Extractor.skippingMarkers(fetch)).toDF()
   }
 
   /** O5-upgrade variant: failures ride along as (None, Some(cause)) rows

@@ -17,7 +17,8 @@ import java.time.Duration
   * configurable timeout, success = 2xx. Each partition streams its rows
   * in `batchSize` groups (count-based micro-batching, main.go:250) and
   * POSTs one JSON array per group; a failed batch is spilled to the
-  * gzip-JSON dead-letter dir ([[Spill]]) instead of lost.
+  * gzip-JSON dead-letter dir ([[Spill]]) instead of lost. A null row is a
+  * reject marker ([[Extractor]]): it is counted and never posted.
   *
   * Scale notes: one shared HttpClient per executor JVM (never per row);
   * sink parallelism = partition count of the input, decoupled from
@@ -38,7 +39,9 @@ object HttpSink {
       maxRetries: Int = 0,
       retryBackoffMillis: Long = 200)
 
-  final case class Stats(sentBatches: Long, sentRecords: Long, spilledBatches: Long, spilledRecords: Long)
+  final case class Stats(
+      sentBatches: Long, sentRecords: Long, spilledBatches: Long, spilledRecords: Long,
+      rejectedRows: Long)
 
   // One client per JVM: HttpClient is thread-safe and holds the
   // connection pool; per-partition construction would leak sockets.
@@ -150,19 +153,27 @@ object HttpSink {
     val sentR = spark.sparkContext.longAccumulator("sink.sentRecords")
     val spillB = spark.sparkContext.longAccumulator("sink.spilledBatches")
     val spillR = spark.sparkContext.longAccumulator("sink.spilledRecords")
-    writeWith(json, cfg, spillOnFailure, keyFor, sentB, sentR, spillB, spillR)
-    Stats(sentB.value, sentR.value, spillB.value, spillR.value)
+    val rejected = spark.sparkContext.longAccumulator("sink.rejectedRows")
+    writeWith(json, cfg, spillOnFailure, keyFor, sentB, sentR, spillB, spillR, rejected)
+    Stats(sentB.value, sentR.value, spillB.value, spillR.value, rejected.value)
   }
 
+  /** The accumulators are updated in result tasks only, where Spark
+    * applies the updates of one successful attempt per partition and drops
+    * those of failed attempts: every count is exact under task retry. */
   private def writeWith(
       json: DataFrame, cfg: Config, spillOnFailure: Boolean,
       keyFor: Option[(Int, Long, Seq[String]) => String],
       sentB: LongAccumulator, sentR: LongAccumulator,
-      spillB: LongAccumulator, spillR: LongAccumulator): Unit = {
+      spillB: LongAccumulator, spillR: LongAccumulator, rejected: LongAccumulator): Unit = {
     json.foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
       val pid = Option(TaskContext.get()).map(_.partitionId()).getOrElse(0)
       var groupIdx = -1L
-      rows.map(_.getString(0)).grouped(cfg.batchSize).foreach { batch =>
+      val wire = rows.map(_.getString(0)).filter { j =>
+        if (j == null) rejected.add(1)
+        j != null
+      }
+      wire.grouped(cfg.batchSize).foreach { batch =>
         groupIdx += 1
         postBatchWithRetry(cfg, batch, keyFor.map(f => f(pid, groupIdx, batch))) match {
           case Right(_) =>

@@ -42,10 +42,12 @@ object Transform {
   /** Wire-format JSON for one DeviceData row — matches the reference's
     * `json.Marshal` field names/order (main.go:33-52), so a payload built
     * from these strings is byte-compatible with the reference sink's.
+    * A reject marker (null `name`, see [[Extractor]]) becomes a null
+    * string, which [[HttpSink]] counts and skips.
     */
   def deviceDataJson(deviceData: DataFrame): DataFrame =
     deviceData.select(
-      to_json(struct(
-        col("name"), col("cpu_number"), col("timestamp"), col("indicators")))
+      when(col("name").isNotNull, to_json(struct(
+        col("name"), col("cpu_number"), col("timestamp"), col("indicators"))))
         .as("json"))
 }

@@ -11,13 +11,16 @@ import java.nio.file.Files
   * the loss window). */
 class EtlPipelineSpec extends SparkSpec {
 
-  private def writeCsv(n: Int): String = {
+  private def writeLines(lines: Seq[String]): String = {
     val dir = Files.createTempDirectory("graft-e2e").toFile
     val f = new java.io.File(dir, "appliances.csv")
-    val rows = (1 to n).map(i => s"192.168.0.$i,device-$i").mkString("\n")
-    Files.writeString(f.toPath, rows + "\nmalformed\n")
+    Files.writeString(f.toPath, lines.mkString("", "\n", "\n"))
     f.getPath
   }
+
+  private def devices(n: Int): Seq[String] = (1 to n).map(i => s"192.168.0.$i,device-$i")
+
+  private def writeCsv(n: Int): String = writeLines(devices(n) :+ "malformed")
 
   private def freshSpill(): String =
     Files.createTempDirectory("graft-spill").toString
@@ -144,6 +147,7 @@ class EtlPipelineSpec extends SparkSpec {
         extractor = ProjectionExtractor(Some(9L)),
         loadPartitions = 2)
       val ds = new EtlPipeline(spark, cfg).deviceDataset()
+      assert(ds.count() == 10, "no reject marker in the typed output")
       val rec = ds.collect().minBy(_.name)
       assert(rec.timestamp == 9L && rec.indicators.map(_.name) == graft.pipeline.Model.indicatorNames)
     } finally server.stop()
@@ -292,5 +296,112 @@ class EtlPipelineSpec extends SparkSpec {
       val mal = ex.extractQuarantine(spark, src.ok).collect().flatMap(_._2)
       assert(mal.forall(_.startsWith("malformed:")), mal.mkString("; "))
     } finally server.stop()
+  }
+
+  test("load job: one CSV scan, one positional exchange, no sort, partitions within one row") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+    import org.apache.spark.sql.catalyst.plans.physical.ShufflePartitionIdPassThrough
+    import org.apache.spark.sql.execution.{FileSourceScanExec, InputAdapter, ProjectExec, SortExec, SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.datasources.csv.CSVFileFormat
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import java.util.concurrent.ConcurrentHashMap
+    import scala.jdk.CollectionConverters._
+
+    // The load job's final plan, and the rows each of its result tasks
+    // read from the exchange (one task per load partition).
+    val plan = new java.util.concurrent.atomic.AtomicReference[SparkPlan]()
+    val planListener = new QueryExecutionListener {
+      override def onSuccess(fn: String, qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        if (fn == "foreachPartition") plan.set(qe.executedPlan)
+      override def onFailure(fn: String, qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    val group = "etl-plan-shape"
+    val stages = ConcurrentHashMap.newKeySet[Int]()
+    val rowsRead = new ConcurrentHashMap[Int, Long]()
+    val taskListener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          e.stageIds.foreach(stages.add)
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId) && e.taskType == "ResultTask")
+          rowsRead.put(e.taskInfo.index, e.taskMetrics.shuffleReadMetrics.recordsRead)
+    }
+    val server = new MockLoadServer()
+    spark.listenerManager.register(planListener)
+    spark.sparkContext.addSparkListener(taskListener)
+    try {
+      val cfg = EtlConfig(
+        csvPath = writeLines(devices(3999)),
+        sink = HttpSink.Config(server.loadUrl, "t", spillDir = freshSpill()),
+        extractor = ProjectionExtractor(Some(1L)),
+        loadPartitions = 10)
+      spark.sparkContext.setJobGroup(group, "ETL load job plan shape")
+      val stats = try new EtlPipeline(spark, cfg).run() finally spark.sparkContext.clearJobGroup()
+      assert(stats.sink.sentRecords == 3999 && stats.rejectedRows == 0)
+      val deadline = System.currentTimeMillis() + 20000
+      while ((plan.get == null || rowsRead.size < 10) && System.currentTimeMillis() < deadline)
+        Thread.sleep(50)
+      assert(plan.get != null, "no foreachPartition plan reported")
+
+      object Plan extends AdaptiveSparkPlanHelper
+      val scans = Plan.collect(plan.get) {
+        case s: FileSourceScanExec if s.relation.fileFormat.isInstanceOf[CSVFileFormat] => s
+      }
+      val exchanges = Plan.collect(plan.get) { case e: ShuffleExchangeExec => e }
+      assert(scans.size == 1, plan.get.toString)
+      assert(exchanges.size == 1, plan.get.toString)
+      assert(exchanges.head.shuffleOrigin == REPARTITION_BY_NUM, plan.get.toString)
+      // round-robin sorts its input inside the exchange, not as a Sort
+      // node: the partitioning shows that rows are routed by position
+      assert(exchanges.head.outputPartitioning.isInstanceOf[ShufflePartitionIdPassThrough],
+        plan.get.toString)
+      assert(Plan.collect(plan.get) { case s: SortExec => s }.isEmpty, plan.get.toString)
+      def belowProjects(p: SparkPlan): SparkPlan = p match {
+        case w: WholeStageCodegenExec => belowProjects(w.child)
+        case i: InputAdapter => belowProjects(i.child)
+        case pr: ProjectExec => belowProjects(pr.child)
+        case other => other
+      }
+      assert(belowProjects(exchanges.head.child) eq scans.head,
+        s"only a Project may sit between the scan and the exchange:\n${plan.get}")
+
+      val counts = rowsRead.asScala.toMap
+      assert(counts.keySet == (0 until 10).toSet, counts.toString)
+      assert(counts.values.sum == 3999, counts.toString)
+      assert(counts.values.max - counts.values.min <= 1, counts.toString)
+    } finally {
+      spark.listenerManager.unregister(planListener)
+      spark.sparkContext.removeSparkListener(taskListener)
+      server.stop()
+    }
+  }
+
+  test("reject markers make no device call and are counted in the load job") {
+    val server = new MockLoadServer()
+    try {
+      val cfg = EtlConfig(
+        csvPath = writeLines(devices(20) ++ Seq("malformed", ",host", "ip,")),
+        sink = HttpSink.Config(server.loadUrl, "t", batchSize = 8, spillDir = freshSpill()),
+        extractor = HttpExtractor(server.deviceUrlTemplate, globalConcurrency = 8),
+        loadPartitions = 3)
+      val stats = new EtlPipeline(spark, cfg).run()
+      assert(stats.rejectedRows == 3)
+      assert(server.deviceRequestCount == 20, "one GET per valid appliance, none per marker")
+      assert(stats.sink.sentRecords == 20)
+      assert(server.receivedRecordCount == 20)
+      assert(!server.receivedBodies.exists(_.contains("null")))
+    } finally server.stop()
+  }
+
+  test("SimulatedLatencyExtractor takes no sleep for a reject marker") {
+    val markers = ApplianceSource.scan(spark, writeLines(Seq("malformed", ",host", "ip,")))
+    val ex = SimulatedLatencyExtractor(latencyMillis = 60000, globalConcurrency = 1)
+    val t0 = System.nanoTime()
+    val out = ex.extract(spark, markers.coalesce(1)).collect()
+    val ms = (System.nanoTime() - t0) / 1000000
+    assert(out.length == 3 && out.forall(_.isNullAt(out.head.fieldIndex("name"))))
+    assert(ms < 30000, s"a marker slept: $ms ms")
   }
 }

@@ -13,43 +13,16 @@ import org.scalatest.funsuite.AnyFunSuite
   * validated publish are what make it safe. */
 class StoreRaceSpec extends AnyFunSuite {
 
-  private val addOpens = Seq(
-    "java.base/java.lang", "java.base/java.lang.invoke",
-    "java.base/java.lang.reflect", "java.base/java.io",
-    "java.base/java.net", "java.base/java.nio",
-    "java.base/java.util", "java.base/java.util.concurrent",
-    "java.base/java.util.concurrent.atomic",
-    "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-    "java.base/sun.security.action", "java.base/sun.util.calendar"
-  ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-
   test("two JVMs racing one key: one winner, both full reads, no tmp residue") {
     val dir = Files.createTempDirectory("graft-xrace")
-    val javaBin = System.getProperty("java.home") + "/bin/java"
-    val cp = System.getProperty("java.class.path")
-    def fork(tag: String): (Process, java.io.File) = {
-      val out = Files.createTempFile(s"xrace-$tag", ".log").toFile
-      val cmd = (Seq(javaBin) ++ addOpens ++ Seq(
-        "-Xmx3g", "-Dspark.ui.enabled=false",
-        "-Dspark.sql.session.timeZone=UTC",
-        "-cp", cp, "graft.tools.StoreRaceProbe", dir.toString))
-      val pb = new ProcessBuilder(cmd: _*)
-      pb.redirectErrorStream(true)
-      pb.redirectOutput(out)
-      (pb.start(), out)
-    }
-    val (p1, o1) = fork("a")
-    val (p2, o2) = fork("b")
-    assert(p1.waitFor(180, java.util.concurrent.TimeUnit.SECONDS),
-      "probe a timed out")
-    assert(p2.waitFor(180, java.util.concurrent.TimeUnit.SECONDS),
-      "probe b timed out")
-    def logOf(f: java.io.File) = new String(
-      Files.readAllBytes(f.toPath), "UTF-8")
-    assert(p1.exitValue() == 0, s"probe a failed:\n${logOf(o1).takeRight(2000)}")
-    assert(p2.exitValue() == 0, s"probe b failed:\n${logOf(o2).takeRight(2000)}")
-    assert(logOf(o1).contains("\"rows\":200") && logOf(o1).contains("\"sum\":201000"))
-    assert(logOf(o2).contains("\"rows\":200") && logOf(o2).contains("\"sum\":201000"))
+    val p1 = graft.ForkedJvm.start("graft.tools.StoreRaceProbe", dir.toString)
+    val p2 = graft.ForkedJvm.start("graft.tools.StoreRaceProbe", dir.toString)
+    assert(p1.await(180), "probe a timed out")
+    assert(p2.await(180), "probe b timed out")
+    assert(p1.exitValue == 0, s"probe a failed:\n${p1.output.takeRight(2000)}")
+    assert(p2.exitValue == 0, s"probe b failed:\n${p2.output.takeRight(2000)}")
+    assert(p1.output.contains("\"rows\":200") && p1.output.contains("\"sum\":201000"))
+    assert(p2.output.contains("\"rows\":200") && p2.output.contains("\"sum\":201000"))
     val names = {
       import scala.jdk.CollectionConverters._
       val l = Files.list(dir)

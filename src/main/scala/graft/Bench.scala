@@ -1,600 +1,172 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths}
+
+import graft.functions.StoreEvents
+import graft.plans.{QueryTrace, SharedFrames}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+/** Per-query catalog timing under one fixed protocol. For each query:
+  * one untimed JIT warmup at sf0.001 (whole-stage codegen compiles once
+  * per JVM, a constant that says nothing about data-proportional work),
+  * then [[shots]] timed shots. Every query gets one JSONL record in
+  * `target/bench_queries.jsonl` (walls, build split, store misses,
+  * ambient load, session state and the median shot's [[QueryTrace]]
+  * layers); the last stdout line is the one-line summary of record.
+  *
+  * Usage: runMain graft.Bench [qNN_name ...] (no names: the whole catalog)
+  * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default 4),
+  *      SPARK_GRAFT_IDLE_LOAD, SPARK_GRAFT_IDLE_WAIT_SEC (the idle gate).
+  */
 object Bench {
-  /** (1-min loadavg, MemAvailable GiB) — the two ambient-load numbers
-    * every round since r2 has re-litigated from the outside. Sampled at
-    * session start/end and at every retime shot, and emitted in the
-    * line of record so a contended driver run carries its own evidence
-    * (round-10 verdict item 2). Best-effort: non-Linux reads as -1. */
+  val shots = 3
+
+  /** One query's outcome: shot walls, summed in-shot store-build
+    * seconds, and its JSONL record. */
+  final case class Record(name: String, walls: Seq[Double], storeMissS: Double, json: String) {
+    def median: Double = walls.sorted.apply(walls.length / 2)
+  }
+
+  private final case class Shot(wall: Double, buildS: Double, buildJobs: Long,
+      storeMissS: Double, layers: Map[String, Double])
+
+  private def f3(v: Double) = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+  private def f1(v: Double) = String.format(java.util.Locale.ROOT, "%.1f", Double.box(v))
+  private def q(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+
+  /** 1-min loadavg and MemAvailable GiB; -1 where /proc is absent. */
   private def hostLoad(): (Double, Double) = {
-    def readNum(path: String, pick: Array[String] => Double): Double =
-      try {
-        val lines = java.nio.file.Files.readAllLines(
-          java.nio.file.Paths.get(path))
-        pick(lines.toArray(Array.empty[String]))
-      } catch { case _: Throwable => -1.0 }
-    val load = readNum("/proc/loadavg",
-      ls => ls.head.split("\\s+")(0).toDouble)
-    val availGiB = readNum("/proc/meminfo", { ls =>
-      ls.collectFirst { case l if l.startsWith("MemAvailable:") =>
-        l.split("\\s+")(1).toDouble / (1024 * 1024) }.getOrElse(-1.0)
-    })
-    (load, availGiB)
+    def read(path: String)(pick: Seq[String] => Double): Double =
+      try pick(Files.readAllLines(Paths.get(path)).toArray(Array.empty[String]).toSeq)
+      catch { case _: Throwable => -1.0 }
+    (read("/proc/loadavg")(_.head.split("\\s+")(0).toDouble),
+      read("/proc/meminfo")(_.collectFirst { case l if l.startsWith("MemAvailable:") =>
+        l.split("\\s+")(1).toDouble / (1024 * 1024) }.getOrElse(-1.0)))
   }
 
-  /** Recorded idle steady bands, parsed from SURVEY.md's §12 audit
-    * table (the single source of truth — a second machine-readable
-    * copy would drift). Row shape `| \`qNNN_name\` | family | status |
-    * band |` where band is `lo-hi (...)` or a single median `v (...)`
-    * (parsed as (v, v)); rows whose band cell starts with a dash
-    * ("— (new)") yield no band. Used by the retime guard below: the
-    * r11 verdict showed the 3x-sf0.001-warmup trigger is structurally
-    * blind to grid/stage-count-dominated queries (their warmup wall
-    * barely shrinks with SF, so q214 shipped at 12x its recorded band
-    * unretimed) — a recorded band is the expectation that class needs.
-    * Best-effort: a missing/unparseable SURVEY.md just disables the
-    * band trigger (the warmup trigger still applies). */
-  private def steadyBands(): (Map[String, (Double, Double)], Map[String, Int]) =
-    try parseBands(java.nio.file.Files.readAllLines(
-      java.nio.file.Paths.get("SURVEY.md")).toArray.map(_.toString).toSeq)
-    catch { case _: Throwable => (Map.empty, Map.empty) }
+  /** Hashing the whole row forces every output column (a bare count()
+    * lets Catalyst prune projection-only work) without a driver collect. */
+  private def hashSink(df: DataFrame): Unit = { df.selectExpr("sum(xxhash64(struct(*)))").collect(); () }
 
-  private[graft] def parseBands(lines: Seq[String])
-      : (Map[String, (Double, Double)], Map[String, Int]) = {
-    val qRe = """`(q[^`]+)`""".r
-    val numRe = """([0-9]+(?:\.[0-9]+)?)(?:\s*[-–]\s*([0-9]+(?:\.[0-9]+)?))?""".r
-    val stampRe = """\(r(\d+)""".r
-    val b = Map.newBuilder[String, (Double, Double)]
-    val st = Map.newBuilder[String, Int]
-    lines.foreach { l =>
-      // Cells, not one row-wide regex: the ORACLE cell also carries
-      // "(rN ...)" vintages, so the stamp must be read from the band
-      // cell alone. Row shape | `q` | module | status | band |.
-      val cells = l.split("\\|", -1)
-      if (cells.length >= 5) {
-        qRe.findFirstMatchIn(cells(1)).map(_.group(1)).foreach { name =>
-          val cell = cells(4).trim.stripPrefix("~")
-          numRe.findPrefixMatchOf(cell).foreach { m =>
-            val lo = m.group(1).toDouble
-            val hi = Option(m.group(2)).map(_.toDouble).getOrElse(lo)
-            b += name -> (lo, hi)
-            // An unstamped band cell is the round-8 full-catalog
-            // column vintage (the table header says so) — stamp 8.
-            st += name -> stampRe.findFirstMatchIn(cell)
-              .map(_.group(1).toInt).getOrElse(8)
-          }
-        }
-      }
+  /** One timed shot. Build (the query function) and execution are timed
+    * apart, with the trace settled between them off the clock, so
+    * `buildJobs` counts exactly the jobs that ran while building. A
+    * hash-incompatible output falls back to count(), re-timed from scratch. */
+  private def shot(spark: SparkSession, trace: QueryTrace, name: String,
+      fn: (SparkSession, String) => DataFrame, dir: String): Shot = {
+    def attempt(sink: DataFrame => Unit): Shot = {
+      val s0 = trace.snapshot()
+      val m0 = StoreEvents.count
+      val t0 = System.nanoTime()
+      val df = fn(spark, dir)
+      val build = (System.nanoTime() - t0) / 1e9
+      val jobs = trace.snapshot()("exec.jobs") - s0("exec.jobs")
+      val t1 = System.nanoTime()
+      sink(df)
+      val exec = (System.nanoTime() - t1) / 1e9
+      Shot(build + exec, build, jobs.toLong, StoreEvents.since(m0).map(_.sec).sum,
+        QueryTrace.diff(trace.snapshot(), s0))
     }
-    (b.result(), st.result())
+    try attempt(hashSink) catch { case e: Throwable =>
+      System.err.println(s"[bench] $name: hash sink failed (${e.getClass.getSimpleName}); falling back to count()")
+      attempt(df => { df.count(); () })
+    }
   }
 
-  /** A band is AGED when its recorded round stamp trails the table's
-    * newest stamp by more than this many rounds (r13 verdict item 4:
-    * q163's only-OOB-of-record was a stale band, refreshed by hand).
-    * An aged band still triggers retimes — it is the best available
-    * expectation — but a final figure that misses ONLY an aged band
-    * ships as a self-refreshed `band_aged` entry (old band, stamp,
-    * and the idle-gated retime spread that supersedes it, also
-    * written to target/band_refresh.json for the round-close SURVEY
-    * update) instead of an out-of-band label: the label is reserved
-    * for misses against expectations fresh enough to mean regression. */
-  private val bandAgeLimit = 3
+  /** The fixed protocol for one query: warmup at `warmDir`, [[shots]]
+    * timed shots at `dir`, one record. */
+  def measure(spark: SparkSession, trace: QueryTrace, name: String,
+      fn: (SparkSession, String) => DataFrame, dir: String, warmDir: Option[String]): Record = {
+    warmDir.foreach(w => try hashSink(fn(spark, w)) catch { case _: Throwable => () })
+    val load = hostLoad()._1
+    val ss = Seq.fill(shots)(shot(spark, trace, name, fn, dir))
+    val med = ss.sortBy(_.wall).apply(shots / 2)
+    val info = spark.sparkContext.getRDDStorageInfo
+    val gcS = {
+      import scala.jdk.CollectionConverters._
+      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans.asScala
+        .map(_.getCollectionTime).sum / 1e3
+    }
+    val walls = ss.map(_.wall)
+    val miss = ss.map(_.storeMissS).sum
+    val layers = med.layers.toSeq.sortBy(_._1).map { case (k, v) =>
+      q(k) + ":" + (if (k.endsWith("_s")) f3(v) else v.toLong.toString) }
+    val json = s"""{"query":${q(name)},"shots":[${walls.map(f3).mkString(",")}],""" +
+      s""""min":${f3(walls.min)},"median":${f3(med.wall)},"max":${f3(walls.max)},""" +
+      s""""build_s":${f3(med.buildS)},"build_jobs":${med.buildJobs},"store_miss_s":${f3(miss)},""" +
+      s""""load_avg":${f1(load)},"rdd_blocks":${info.map(_.numCachedPartitions).sum},""" +
+      s""""storage_bytes":${info.map(i => i.memSize + i.diskSize).sum},"gc_s":${f3(gcS)},""" +
+      s""""layers":{${layers.mkString(",")}}}"""
+    Record(name, walls, miss, json)
+  }
 
   def main(args: Array[String]): Unit = {
-    // f-interpolator formatting follows the JVM default locale; pin it
-    // so a comma-decimal locale cannot emit unparseable JSON metrics
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val names = if (args.nonEmpty) args.toSeq else SparkEntry.catalog.keys.toSeq
+    val unknown = names.filterNot(SparkEntry.catalog.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(" ")}")
     val spark = Sessions.configure(
-      SparkSession.builder().master(s"local[$cpus]").appName("graft-bench"),
-      cpus).getOrCreate()
+      SparkSession.builder().master(s"local[$cpus]").appName("graft-bench"), cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // Warm the scheduler, parquet reader and aggregate codegen paths once
-    // so the first measured query doesn't absorb one-off session JIT cost
-    // (~2-4 s). Uses the tiny region table (5-500 rows at any SF).
+    // Session warmup, then every table's relation resolved once (listing
+    // and footers), so the first timed query pays neither.
     spark.range(1000).selectExpr("sum(id)").collect()
-    try spark.read.parquet(s"$sfDir/region.parquet")
-      .groupBy("r_name").count().collect()
-    catch { case _: Throwable => () }
-    // Resolve every table's relation ONCE before timing: the session-
-    // scoped Tables cache (round-11 item-2 fix) makes first access pay
-    // the file-index + footer read for the whole session, and with only
-    // region warmed that cost landed in whichever query ran first
-    // (q01: 1.41 s vs its 0.5-0.6 s steady band at the r11 close).
-    // Measured effect: 1.41 -> ~1.2 s — the resolution share; the
-    // residual is the session's first REAL data job at the bench SF
-    // (executor/broadcast spin-up), a per-session constant like the
-    // JIT warmup above, visible in q01's number and documented here
-    // rather than masked by a data-reading warmup pass.
-    // schema access forces listing + footer resolution without a job.
-    Tables.names.foreach { t =>
-      try { Tables(spark, sfDir, t).schema; () }
-      catch { case _: Throwable => () }
-    }
-    // Smallest SF for per-query JIT warmup (same directory layout).
-    val warmDir = {
-      val p = java.nio.file.Paths.get(sfDir).getParent
-      val cand = if (p == null) null else p.resolve("sf0.001")
-      if (cand != null && java.nio.file.Files.isDirectory(cand)) Some(cand.toString) else None
-    }
-    // STORE WARMUP AT THE TIMED SF (r14 verdict item 1): the sf0.001
-    // warmup pass below cannot populate the fingerprint-keyed stores
-    // for THIS SF, so a fresh environment's first timed shot used to
-    // pay the full build inside the measurement (BENCH_r14: q237
-    // 28.49 s cold vs 2.40 s warm — the .graft/frame-store mtime put
-    // the build inside the bench window). Warm every store family off
-    // the clock and ship the build costs as their own metric
-    // (`store_warm`), the Throughput probe-11 build_sec pattern; any
-    // RESIDUAL miss inside a timed shot is caught by the StoreEvents
-    // snapshot in shot() and ships as `store_miss`.
+    Tables.names.foreach(t => try { Tables(spark, sfDir, t).schema; () } catch { case _: Throwable => () })
+    val warmDir = Option(Paths.get(sfDir).getParent).map(_.resolve("sf0.001"))
+      .filter(Files.isDirectory(_)).map(_.toString)
+    // Store builds for this SF run here, off the clock, as their own
+    // figures; a build inside a timed shot is reported as store_miss.
     val storeWarm = StoreWarmup.warmAll(spark, sfDir)
     storeWarm.foreach { case (k, sec, builds) =>
-      System.err.println(f"[bench] store-warm $k: $sec%.2f s" +
-        (if (builds > 0) s" ($builds build)" else " (hit)"))
+      System.err.println(f"[bench] store-warm $k: $sec%.2f s" + (if (builds > 0) s" ($builds build)" else " (hit)"))
     }
     val loadStart = hostLoad()
-    // IDLE GATE (r12 verdict item 2): BENCH_r12 shipped 29 retimes and
-    // 9 out-of-band labels because the driver shot ran under ambient
-    // load rising 3.7 -> 10.5 — every excursion needed a steady-band
-    // footnote. The bench's own between-query 1-min loadavg reads
-    // ~1.6-3.7 (local[32] runs in short bursts), so a threshold just
-    // above that separates self-load from foreign contention. Before
-    // the first timed shot, before every band-triggered retime, and
-    // once more if a min-of-3 would still ship out-of-band, the bench
-    // SLEEPS (off the clock) until 1-min loadavg decays below the
-    // threshold — bounded by a session-wide wait budget so a
-    // permanently-contended box degrades to the old labeled behavior
-    // instead of hanging. Both knobs are env-overridable; the waited
-    // seconds ship in the line of record so a zero reads as "gate
-    // never needed", not "gate absent".
-    val idleThreshold =
-      sys.env.getOrElse("SPARK_GRAFT_IDLE_LOAD", "4.0").toDouble
-    // Budget default raised 300 -> 900 s (r14 verdict item 2: the 300 s
-    // budget exhausted at loadavg 9 and the run silently became the
-    // line of record). A run that STILL starts a timed shot above the
-    // threshold after the budget is gone now stamps itself
-    // `ambient_contaminated: true` so no downstream reader has to
-    // reverse-engineer the contention from load_avg.
-    var idleWaitLeft =
-      sys.env.getOrElse("SPARK_GRAFT_IDLE_WAIT_SEC", "900").toDouble
+    // Idle gate: sleep off the clock until 1-min loadavg falls below the
+    // threshold, within a wait budget; a run that still starts above it
+    // says so as ambient_contaminated.
+    val idleThreshold = sys.env.getOrElse("SPARK_GRAFT_IDLE_LOAD", "4.0").toDouble
     var idleWaited = 0.0
-    var ambientContaminated = false
-    def idleWait(reason: String): Unit = {
-      var load = hostLoad()._1
-      var waited = 0.0
-      while (load > idleThreshold && idleWaitLeft > 0) {
-        Thread.sleep(5000)
-        waited += 5.0; idleWaitLeft -= 5.0
-        load = hostLoad()._1
+    val idleBudget = sys.env.getOrElse("SPARK_GRAFT_IDLE_WAIT_SEC", "900").toDouble
+    while (hostLoad()._1 > idleThreshold && idleWaited < idleBudget) { Thread.sleep(5000); idleWaited += 5.0 }
+    val ambientContaminated = hostLoad()._1 > idleThreshold
+    if (ambientContaminated) System.err.println("[bench] idle-gate exhausted: run is ambient_contaminated")
+    val trace = QueryTrace.register(spark)
+    val out = Paths.get("target", "bench_queries.jsonl")
+    Files.createDirectories(out.getParent)
+    val w = Files.newBufferedWriter(out, UTF_8)
+    val results = try names.zipWithIndex.flatMap { case (name, i) =>
+      // Local checkpoints pin their blocks until unpersisted, so a long
+      // session drops the dead ones (and collects) between queries.
+      if (i > 0 && i % 16 == 0) { SharedFrames.sweepDeadCheckpoints(spark); System.gc() }
+      try {
+        val r = measure(spark, trace, name, SparkEntry.catalog(name).fn, sfDir, warmDir)
+        w.write(r.json); w.newLine(); w.flush()
+        Some(r)
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: ${e.getClass.getSimpleName}: ${e.getMessage}"); None
       }
-      if (load > idleThreshold && idleWaitLeft <= 0) {
-        ambientContaminated = true
-        System.err.println(f"[bench] idle-gate EXHAUSTED before $reason " +
-          f"(loadavg $load%.1f > ${idleThreshold}%.1f): run is " +
-          "ambient_contaminated")
-      }
-      if (waited > 0) {
-        idleWaited += waited
-        System.err.println(f"[bench] idle-gate: waited $waited%.0f s " +
-          f"before $reason (loadavg now $load%.1f, " +
-          f"budget left ${math.max(idleWaitLeft, 0)}%.0f s)")
-      }
-    }
-    idleWait("the first timed shot")
-    // Counts Spark jobs launched during each build window, so the
-    // build_sec split distinguishes PURE planner overhead (0 jobs —
-    // the round-10 item-4 concern) from real work that legitimately
-    // runs at construction: q47's IVF training, q180's per-round
-    // checkpoint materialization, q170/q172's bounded driver solve
-    // steps. Bench is single-threaded between queries, so a plain
-    // counter delta around fn() is race-free.
-    val jobCount = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          jobCount.incrementAndGet(); ()
-        }
-      })
-    // Retime shots record the loadavg they ran under (name -> samples),
-    // so a spread like 6.1/18.9/75.0 s arrives WITH its 14/19/31 load
-    // context instead of requiring a post-hoc forensic session.
-    val retimeLoads = scala.collection.mutable.Map[String, Seq[Double]]()
-    // All retime shot walls, sorted — the aged-band self-refresh quotes
-    // min..median rather than the retime SPREAD (whose max is usually
-    // the ambient shot that triggered the retime, which would bake the
-    // contention into the refreshed band).
-    val retimeShots = scala.collection.mutable.Map[String, Seq[Double]]()
-    // SURVEY bands are sf0.1 BenchSteady measurements — at any other SF
-    // a 2x-band comparison is meaningless (sf0.001 runs sit far below,
-    // sf1 far above), so the band trigger and the out-of-band labels
-    // only engage on the SF the bands were recorded at.
-    val (bands, bandStamps) =
-      if (sfDir.replaceAll("/+$", "").endsWith("sf0.1")) steadyBands()
-      else (Map.empty[String, (Double, Double)], Map.empty[String, Int])
-    // The table's newest stamp is its curation vintage; ages are
-    // measured against it, so the check needs no external round input.
-    val bandVintage = if (bandStamps.isEmpty) 0 else bandStamps.values.max
-    // Loadavg sampled immediately before each query's first timed shot
-    // (one /proc read, off the clock) — r11 verdict item 6: retimed
-    // shots carried their load context but plain shots didn't, so the
-    // 14 ambient-correlated entries in BENCH_r11 needed a forensic
-    // session to attribute. Emitted for the slowest entries in the
-    // detail line so every expensive figure carries its own ambient
-    // evidence per-row, not session-level.
-    val queryLoads = scala.collection.mutable.Map[String, Double]()
-    // Queries whose FINAL reported shot paid store-build work (should
-    // be empty after warmAll; nonempty = the shot is build+query and
-    // says so in the line of record) -> build seconds inside the shot.
-    val storeMissInShot = scala.collection.mutable.Map[String, Double]()
-    var sinceGc = 0
-    val results = SparkEntry.queries.map { case (name, fn) =>
-      // Session-tail pressure valve (round-10 finding: even the MINIMUM
-      // retime shots of the late-catalog graph family sat 1.4-2x above
-      // their isolated steady bands). A 209-query session accumulates
-      // driver-side garbage — codegen class payloads, broadcast refs,
-      // finished-plan metadata — that ContextCleaner only reclaims when
-      // a GC actually runs, and a 28 GiB heap coasts between full GCs
-      // while the tail queries absorb the creep as allocation stalls.
-      // An explicit System.gc() every 16 queries runs BETWEEN timed
-      // regions (never inside a shot) and keeps the cleaner current —
-      // and (r13) first drops leftover LOCAL-CHECKPOINT blocks:
-      // localCheckpoint pins its RDD blocks in the block manager and
-      // nothing ever unpersists them (they cannot be evicted — they
-      // ARE the truncated lineage), so a 266-query session accretes
-      // gigabytes of dead checkpoint storage (mem_avail fell ~8 GiB
-      // across BENCH_r13's first shot) and the mid-catalog stat
-      // family ran ~2x its fresh-session idle steadies. Between
-      // queries a checkpointed frame is dead UNLESS a live
-      // SharedFrames entry wraps it (q180's kcore rounds register
-      // localCheckpoint frames that later cache misses must still be
-      // able to read — r13 advice), so the sweep skips exactly the
-      // RDD ids live SharedFrames plans reference and drops the rest.
-      // (Store entries are parquet, untouched by definition.)
-      if (sinceGc >= 16) {
-        // isCheckpointed (public) is true only for (locally)
-        // checkpointed-and-materialized RDDs — SharedFrames persist()
-        // frames are cached but not themselves checkpointed; the
-        // kcore entries' UNDERLYING checkpoint RDDs are what
-        // liveRddIds protects
-        val live = graft.plans.SharedFrames.liveRddIds(spark)
-        spark.sparkContext.getPersistentRDDs.values.foreach { r =>
-          if (r.isCheckpointed && !live.contains(r.id))
-            scala.util.Try(r.unpersist(blocking = false))
-        }
-        System.gc(); sinceGc = 0
-      }
-      sinceGc += 1
-      // Per-query JIT warmup at the smallest SF: each whole-stage-codegen
-      // class compiles once per JVM (0.3-2 s, the round-1 q15 "outlier"),
-      // a constant cost that amortizes to zero at 100 TB. Warming the
-      // identical code path on tiny data excludes it, so the timed number
-      // below measures data-proportional engine work only. The warmup is
-      // itself timed: post-JIT sf0.001 wall is the per-query expectation
-      // the outlier re-time below calibrates against.
-      val warmSec = warmDir.map { w =>
-        try { // first shot compiles codegen classes — not the expectation
-          fn(spark, w).selectExpr("sum(xxhash64(struct(*)))").collect()
-          val t = System.nanoTime()
-          fn(spark, w).selectExpr("sum(xxhash64(struct(*)))").collect()
-          (System.nanoTime() - t) / 1e9
-        } catch { case _: Throwable => 0.0 }
-      }.getOrElse(0.0)
-      // Force FULL computation of every output column: a bare count()
-      // lets Catalyst prune projection-only work, under-measuring
-      // expression-heavy queries. Hashing the whole row defeats pruning
-      // while still avoiding a driver-side collect of the data.
-      //
-      // DataFrame construction is timed separately from execution: for most
-      // queries it is ~0 ms of plan building, but q47 trains its IVF index
-      // (a corpus-proportional sample + Lloyd iterations) at build time, a
-      // one-off index cost a user would amortize over many probes. The
-      // per-query number stays build+exec (comparable with earlier rounds);
-      // the build split is reported alongside so the index cost is visible.
-      def shot(): (Double, Double, Long, Double) = {
-        var t0 = System.nanoTime()
-        var tBuild = 0.0
-        var j0 = jobCount.get()
-        var bJobs = 0L
-        // store-miss snapshot: a build inside this shot means the
-        // warmup missed a store (wiped dir mid-run, unregistered
-        // family) — the shot then self-describes as build+query via
-        // the store_miss split instead of silently inflating
-        val se0 = graft.functions.StoreEvents.count
-        try {
-          val df = fn(spark, sfDir)
-          tBuild = (System.nanoTime() - t0) / 1e9
-          bJobs = jobCount.get() - j0
-          df.selectExpr("sum(xxhash64(struct(*)))").collect()
-        } catch { case e: Throwable =>
-          // fall back to count() for a hash-incompatible output (e.g. a
-          // future MapType column) — logged, and re-timed from scratch so
-          // the failed attempt doesn't inflate the measurement
-          System.err.println(s"[bench] $name: hash sink failed (${e.getClass.getSimpleName}); falling back to count()")
-          t0 = System.nanoTime()
-          j0 = jobCount.get()
-          try {
-            val df2 = fn(spark, sfDir) // re-times the build too (q47-class
-            tBuild = (System.nanoTime() - t0) / 1e9 // index training re-runs)
-            bJobs = jobCount.get() - j0
-            df2.count()
-          } catch { case _: Throwable => -1L }
-        }
-        ((System.nanoTime() - t0) / 1e9, tBuild, bJobs,
-          graft.functions.StoreEvents.since(se0).map(_.sec).sum)
-      }
-      queryLoads(name) = hostLoad()._1
-      var (sec, build, buildJobs, shotMiss) = shot()
-      // Ambient-load guard (rounds 2-4 each produced one spurious driver
-      // headline — q30/q55, q54, q19 — that BenchSteady later measured at
-      // 5-8x below the single shot): a shot far above the warmup-derived
-      // expectation is re-run and the MINIMUM of three shots reported.
-      // Round 10 reversed the round-5 median choice, deliberately: the
-      // median is only robust when contention is a one-shot outlier, but
-      // under SUSTAINED host load (r10: q95 shots 6.1/18.9/75.0 s on a
-      // driver box whose control query ran 2.3x ambient) the median IS a
-      // contended number, and it mis-reported a 4.4 s-steady query as
-      // 18.9 s. The min is the shot with the least foreign load in it —
-      // the engine's own cost is the part that cannot go away — and the
-      // full spread plus the per-shot loadavg ride alongside so nothing
-      // the min hides is lost.
-      // Threshold: 3x the post-JIT sf0.001 wall, floored at 0.75 s so
-      // sub-second jitter never triggers it — a genuine data-proportional
-      // cost (q65's propagation loop, q46's HLL pass) sits well under 3x
-      // its own warmup figure and is never masked.
-      // ... but NEVER re-time a shot whose own BUILD dominates (index
-      // training on a cold store): that cost is real one-off work, not
-      // ambient noise — re-running would hit the now-persisted index and
-      // silently swap the training figure for a cache-hit one. A heavy
-      // build is reported as-is, with the split visible under build_sec.
-      // DOMINANCE test, not an absolute cutoff: ambient load inflates
-      // build wall-clock too, and an absolute bound would suppress the
-      // re-time exactly when it is most needed.
-      // BAND-AWARE trigger (r11 verdict item 1): the warmup-relative
-      // trigger alone is structurally blind to grid/iteration-dominated
-      // queries whose sf0.001 wall is nearly their sf0.1 wall (q95's
-      // 3x-iteration PageRank, q214's day-grid log-rank: a contended
-      // shot at 12x the recorded band passed unretimed because it was
-      // under 3x its own warmup). When SURVEY §12 records a steady band
-      // for this query, any shot >2x the band max ALSO retimes — the
-      // band is a measured same-tree expectation, strictly better
-      // calibrated than the warmup proxy. Floor at 0.3 s so sub-second
-      // jitter on tiny bands never triggers; the build-dominance
-      // exception stays (a cold one-off index build is real work, and
-      // re-running would silently swap it for a cache hit).
-      val warmupTrigger = sec > math.max(3 * math.max(warmSec, 0.05), 0.75)
-      // Band trigger matches the OOB LABEL rule (1.5x, not the former
-      // 2x): r13 finding — shots landing between 1.5x and 2x band
-      // shipped labeled without ever being retimed or idle-gated,
-      // which is how BENCH runs kept needing footnotes. And a band
-      // miss retimes EVEN when its own build dominates: the band was
-      // measured through the same build path (BenchSteady constructs
-      // the query per iteration), so re-shooting compares like with
-      // like — a cold-store first build is honestly out-of-band until
-      // the store is warm, and its cost stays visible in build_sec.
-      // The build-dominance veto still applies to the warmup-relative
-      // trigger, where the expectation (sf0.001 wall) excludes the
-      // real one-off build.
-      val bandTrigger = bands.get(name)
-        .exists { case (_, hi) => sec > 1.5 * hi && sec > 0.3 }
-      val retime = bandTrigger || (build < 0.5 * sec && warmupTrigger)
-      var spread: Option[(Double, Double)] = None
-      if (retime) {
-        val loads = Vector.newBuilder[Double]
-        // A band trigger means the shot missed a measured same-tree
-        // expectation — almost always ambient. Let it decay (bounded)
-        // before spending the evidence shots, so they measure the
-        // engine, not the neighbor.
-        if (bandTrigger) idleWait(s"retiming $name")
-        loads += hostLoad()._1
-        val s2 = { val r = shot(); loads += hostLoad()._1; r }
-        val s3 = { val r = shot(); loads += hostLoad()._1; r }
-        var shots = Vector((sec, build, buildJobs, shotMiss), s2, s3)
-        // If even the min of 3 would ship out-of-band (>1.5x band max,
-        // the label rule below), the contention was sustained across
-        // all three shots: idle-gate once more and take ONE final shot
-        // under a verified-quiet box before accepting the label.
-        val stillOob = bands.get(name).exists { case (_, hi) =>
-          shots.map(_._1).min > 1.5 * hi && shots.map(_._1).min > 0.3 }
-        if (stillOob && idleWaitLeft > 0) {
-          idleWait(s"the final $name shot")
-          val s4 = { val r = shot(); loads += hostLoad()._1; r }
-          shots = shots :+ s4
-        }
-        retimeLoads(name) = loads.result()
-        retimeShots(name) = shots.map(_._1).sorted
-        val sorted = shots.sortBy(_._1)
-        spread = Some((sorted.head._1, sorted.last._1))
-        val (s1, b1, j1, m1) = sorted.head // min — see guard comment above
-        sec = s1; build = b1; buildJobs = j1; shotMiss = m1
-      }
-      if (shotMiss > 0.1) storeMissInShot(name) = shotMiss
-      name -> ((sec, build, buildJobs, spread))
-    }
+    } finally w.close()
     val loadEnd = hostLoad()
-    // 3 decimals keeps the one-line JSON inside the driver's finite
-    // output-tail buffer; Locale.ROOT because the f-interpolator uses the
-    // JVM default locale — a comma-decimal locale would emit 0,499 and
-    // break the JSON parse this precision change exists to protect
-    def f3(v: Double) = String.format(java.util.Locale.ROOT, "%.3f",
-      Double.box(v))
-    val qs = results
-      .map { case (k, (v, _, _, _)) => s"\"" + k + "\":" + f3(v) }
-      .mkString("{", ",", "}")
-    // Only builds that cost real time are worth listing — ordinary
-    // Catalyst plan analysis is 0.05-0.15 s and would be noise. Each
-    // entry is [seconds, spark_jobs_during_build]: jobs > 0 marks a
-    // build that ran REAL work at construction (q47 index training,
-    // q180 checkpoint materialization, q170/q172 bounded driver
-    // solves); jobs == 0 with heavy seconds is pure planner overhead,
-    // the only class that is a defect.
-    val builds = results.collect { case (k, (_, b, j, _)) if b > 0.2 =>
-      s"\"" + k + "\":[" + f3(b) + "," + j + "]" }.mkString("{", ",", "}")
-    val retimed = results.collect { case (k, (_, _, _, Some(_))) => s"\"" + k + "\"" }
-      .mkString("[", ",", "]")
-    // min..max of the 3 retime shots, so readers see what the min hides.
-    val spreads = results.collect { case (k, (_, _, _, Some((lo, hi)))) =>
-      s"\"" + k + "\":[" + f3(lo) + "," + f3(hi) + "]" }.mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.map(_._2._1).sum else 0.0
-    // Human-facing full detail first; the driver-facing line LAST. A
-    // 149-entry full-name per-query map (~5 KB) overflows the driver's
-    // ~2 KB output-tail window (rounds 4 and 5 both recorded "parsed":
-    // null from exactly that), but an EMPTY map loses machine-readable
-    // per-query regression diffing (round-8 judge finding: the q95
-    // regression was only catchable via the truncatable human tail).
-    // Compromise measured against the window: the line of record
-    // carries the per-query map under SHORT keys — the unique "qNN"
-    // prefix of each catalog name, 2-decimal seconds — ~1.7 KB at 149
-    // queries, inside the tail with headroom. Full-name 3-decimal
-    // detail (plus build/spread splits) goes to target/bench_summary
-    // .json and stderr, where no window applies.
-    def f2(v: Double) = String.format(java.util.Locale.ROOT, "%.2f",
-      Double.box(v))
-    def f1(v: Double) = String.format(java.util.Locale.ROOT, "%.1f",
-      Double.box(v))
-    // Growth guard: at ~165+ queries even short keys overflow the tail
-    // window — degrade to 1 decimal first, and only then to the empty
-    // map (the pre-r9 behavior), never to an unparseable truncation.
-    // The budget bounds the ASSEMBLED line (map + fixed contract keys +
-    // sbt's "[info] " prefix), not the bare map — a map-only bound
-    // would report headroom the full line doesn't have. The envelope is
-    // MEASURED from the real fixed portion (round-9 advice: a constant
-    // under-counted a long sf path + the f3 totals), not hand-tuned.
-    val lineBudget = 1900
-    // Ambient-load evidence in the LINE OF RECORD (round-10 verdict item
-    // 2): 1-min loadavg and MemAvailable GiB at session start and end.
-    // An idle 32-core box reads load < ~2; a driver run whose start/end
-    // loads read 15/30 carries its own contention proof, and the per-
-    // retime samples (detail line + bench_summary.json) localize it.
-    val storeWarmJson = storeWarm.map { case (k, sec, builds) =>
-      s"\"" + k + "\":[" + f3(sec) + "," + builds + "]" }
-      .mkString("{", ",", "}")
-    val storeMissJson = storeMissInShot.toSeq.sortBy(_._1)
-      .map { case (k, sec) => s"\"" + k + "\":" + f3(sec) }
-      .mkString("{", ",", "}")
-    val loadJson =
-      s""""load_avg":{"start":${f1(loadStart._1)},"end":${f1(loadEnd._1)},"mem_avail_gib":[${f1(loadStart._2)},${f1(loadEnd._2)}]},"idle_gate":{"threshold":${f1(idleThreshold)},"waited_sec":${f1(idleWaited)}},"ambient_contaminated":$ambientContaminated,"store_warm":$storeWarmJson,"store_miss":$storeMissJson"""
-    // Self-labeling out-of-band entries (r11 verdict item 1, second
-    // half): any FINAL figure still >1.5x its recorded SURVEY band max
-    // ships WITH the band it missed, so a reader of the line of record
-    // sees "6.13 vs 0.3-0.5 recorded" inline instead of cross-
-    // referencing the audit table. After the band-aware retime above,
-    // anything listed here survived a min-of-3 — i.e. it is either a
-    // genuine regression or sustained (not transient) contention, and
-    // its retime loads say which.
-    val (agedMisses, oob) = results.toSeq.collect { case (k, (v, _, _, sp))
-        if bands.get(k).exists { case (_, hi) => v > 1.5 * hi && v > 0.3 } =>
-      (k, bands(k), sp) }.sortBy(_._1)
-      .partition { case (k, _, _) =>
-        // <=: a band recorded bandAgeLimit rounds behind the table
-        // vintage has skipped that many re-measure opportunities —
-        // r14's live case was exactly two r11 bands at vintage 14
-        bandStamps.getOrElse(k, 8) <= bandVintage - bandAgeLimit }
-    val oobJson = oob.map { case (k, (lo, hi), _) =>
-      s"\"" + k + "\":[" + f3(lo) + "," + f3(hi) + "]" }
-      .mkString("{", ",", "}")
-    // Aged-band self-refresh (r13 verdict item 4): a final figure that
-    // misses only a band older than bandAgeLimit rounds is band DRIFT
-    // evidence, not a regression alarm — the miss already forced an
-    // idle-gated retime above, so the retime spread IS a fresh
-    // same-tree steady measurement. Ship it as band_aged (old band,
-    // stamp, refreshed spread) and write target/band_refresh.json so
-    // the round close updates §12 mechanically; the out_of_band label
-    // stays reserved for misses against fresh bands.
-    val agedJson = agedMisses.map { case (k, (lo, hi), sp) =>
-      // refreshed band = min..median of the idle-gated retime shots;
-      // the raw spread's max is usually the ambient trigger shot
-      val (rlo, rhi) = retimeShots.get(k) match {
-        case Some(ss) if ss.nonEmpty => (ss.head, ss(ss.length / 2))
-        case _ => sp.getOrElse((results(k)._1, results(k)._1))
-      }
-      s"\"" + k + "\":{\"old\":[" + f3(lo) + "," + f3(hi) + "],\"stamp\":" +
-        bandStamps.getOrElse(k, 8) + ",\"refreshed\":[" + f3(rlo) + "," +
-        f3(rhi) + "]}" }
-      .mkString("{", ",", "}")
-    if (agedMisses.nonEmpty) try {
-      val p = java.nio.file.Paths.get("target", "band_refresh.json")
-      java.nio.file.Files.createDirectories(p.getParent)
-      java.nio.file.Files.write(p, (agedJson + "\n")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    } catch { case _: java.io.IOException => () }
-    // Per-query pre-shot loadavg for the slowest 25 entries (r11
-    // verdict item 6) — the expensive rows are the ones whose ambient
-    // attribution matters; the full map lives in bench_summary.json.
-    val slowLoadJson = results.toSeq.sortBy(-_._2._1).take(25)
-      .map { case (k, _) =>
-        s"\"" + k + "\":" + f1(queryLoads.getOrElse(k, -1.0)) }
-      .mkString("{", ",", "}")
+    val total = results.map(_.median).sum
+    val storeWarmJson = storeWarm.map { case (k, sec, b) => s"${q(k)}:[${f3(sec)},$b]" }.mkString("{", ",", "}")
+    val storeMissJson = results.filter(_.storeMissS > 0.1).sortBy(_.name)
+      .map(r => s"${q(r.name)}:${f3(r.storeMissS)}").mkString("{", ",", "}")
     def summaryLine(m: String, omitted: Int) =
-      s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":$m,"total_sec":${f3(total)},"n_queries":${results.size},"queries_omitted":$omitted,"n_retimed":${results.count(_._2._4.isDefined)},"n_oob":${oob.size},"n_band_aged":${agedMisses.size},$loadJson,"sf":"$sfDir"}"""
-    val (qsShort, qsOmitted) = {
-      // measured fixed portion + a few bytes of slack (outputStrategy is
-      // StdoutOutput, so no logger prefix is actually emitted — the
-      // slack just keeps the budget conservative against harness drift)
-      val slack = 8
-      val envelope = slack + summaryLine("{}", results.size).length - 2
-      def entries(fmt: Double => String) = results.toSeq
-        .map { case (k, (v, _, _, _)) =>
-          (v, s"\"" + k.takeWhile(_ != '_') + "\":" + fmt(v)) }
-      def fits(m: String) = m.length + envelope <= lineBudget
-      val two = entries(f2).map(_._2).mkString("{", ",", "}")
-      val one = entries(f1).map(_._2).mkString("{", ",", "}")
-      if (fits(two)) (two, 0)
-      else if (fits(one)) (one, 0)
-      else {
-        // catalog growth outgrew even 1-decimal short keys (round-10,
-        // 181 entries): carry the SLOWEST entries that fit at 2
-        // decimals plus an omitted count, instead of degrading to the
-        // empty map. A q95-class regression is exactly what lands in
-        // the slow slice; the omitted tail is sub-0.2 s rows whose
-        // drift is invisible at line precision anyway and fully
-        // recorded in target/bench_summary.json.
-        val bySlow = entries(f2).sortBy(-_._1).map(_._2)
-        val budgetForMap = lineBudget - envelope
-        val sb = new StringBuilder("{")
-        var taken = 0
-        bySlow.foreach { e =>
-          val add = e.length + (if (taken > 0) 1 else 0)
-          if (sb.length + add + 1 <= budgetForMap) {
-            if (taken > 0) sb.append(',')
-            sb.append(e); taken += 1
-          }
-        }
-        sb.append('}')
-        (sb.toString, results.size - taken)
-      }
-    }
-    // The driver reads the LAST ~2 KB of the MERGED stdout+stderr
-    // capture, so the compact line of record must be the final thing
-    // this process emits on EITHER stream (round-9 "parsed": null: a
-    // ~5 KB stderr detail copy landed after the summary in the merge
-    // and clipped the tail). Full-name detail therefore ships only via
-    // (a) stdout BEFORE the summary — human-readable, harmlessly
-    // scrolled off — and (b) target/bench_summary.json, which no
-    // window applies to. No stderr copy at all.
-    val retimeLoadJson = retimeLoads.toSeq.sortBy(_._1)
-      .map { case (k, ls) =>
-        s"\"" + k + "\":[" + ls.map(f1).mkString(",") + "]" }
-      .mkString("{", ",", "}")
-    val queryLoadJson = queryLoads.toSeq.sortBy(_._1)
-      .map { case (k, l) => s"\"" + k + "\":" + f1(l) }
-      .mkString("{", ",", "}")
-    val detail =
-      s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":$qs,"total_sec":${f3(total)},"n_queries":${results.size},"build_sec":$builds,"retime_spread":$spreads,"retimed":$retimed,"retime_load":$retimeLoadJson,"out_of_band":$oobJson,"band_aged":$agedJson,"slow_query_load":$slowLoadJson,"query_load":$queryLoadJson,$loadJson,"sf":"$sfDir"}"""
-    try {
-      val p = java.nio.file.Paths.get("target", "bench_summary.json")
-      java.nio.file.Files.createDirectories(p.getParent)
-      java.nio.file.Files.write(p,
-        (detail + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    } catch { case _: java.io.IOException => () } // best-effort side channel
-    // spark.stop() BEFORE the summary so executor-shutdown chatter on
-    // stderr cannot land after the line of record in the merged capture.
-    spark.stop()
+      s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":$m,"total_sec":${f3(total)},"n_queries":${results.size},"queries_omitted":$omitted,"n_retimed":0,"n_oob":0,"n_band_aged":0,"load_avg":{"start":${f1(loadStart._1)},"end":${f1(loadEnd._1)},"mem_avail_gib":[${f1(loadStart._2)},${f1(loadEnd._2)}]},"idle_gate":{"threshold":${f1(idleThreshold)},"waited_sec":${f1(idleWaited)}},"ambient_contaminated":$ambientContaminated,"store_warm":$storeWarmJson,"store_miss":$storeMissJson,"sf":${q(sfDir)}}"""
+    // The summary must fit the reader's ~2 KB tail window: it carries the
+    // slowest medians under short keys ("q95") that fit, and the omitted
+    // count; the JSONL holds every query.
+    val budget = 1900 - 8 - summaryLine("{}", results.size).length
+    val taken = results.sortBy(-_.median)
+      .map(r => s"${q(r.name.takeWhile(_ != '_'))}:${String.format(java.util.Locale.ROOT, "%.2f", Double.box(r.median))}")
+      .foldLeft(Vector.empty[String]) { (acc, e) =>
+        if ((acc :+ e).mkString("{", ",", "}").length <= budget) acc :+ e else acc }
+    spark.stop() // before the summary, so shutdown chatter cannot follow it
     System.err.flush()
-    println(detail)
-    println(summaryLine(qsShort, qsOmitted))
+    println(summaryLine(taken.mkString("{", ",", "}"), results.size - taken.size))
     System.out.flush()
   }
 }

@@ -23,10 +23,10 @@ object Tables {
 
   /** Session-scoped relation cache. A path-based `spark.read.parquet`
     * builds a fresh file index + reads the footer schema on EVERY call
-    * (~80 ms even when the OS caches the file — measured round 11 via
-    * tools/BuildProfile), and multi-table audit queries call these
-    * loaders 10-15 times, so plan CONSTRUCTION was paying ~1 s of pure
-    * re-listing per build (the round-10 `build_sec` creep). Catalog
+    * (~80 ms even when the OS caches the file — measured round 11 with
+    * a build-only timing of every table), and multi-table audit queries
+    * call these loaders 10-15 times, so plan CONSTRUCTION was paying
+    * ~1 s of pure re-listing per build (the round-10 `build_sec` creep). Catalog
     * tables don't behave that way — Spark caches a registered table's
     * relation and file index until REFRESH TABLE — so this gives the
     * path-based loaders the same catalog semantics: first read resolves,

@@ -333,8 +333,9 @@ object DedupQueries {
   /** The composed full-corpus fuzzy-dedup operator behind q66: LSH
     * candidate pairs confirmed at j >= 0.5 become the similarity edges,
     * connected components labeled, canonical (min doc_id) elected per
-    * cluster. Takes the documents frame directly so the Throughput scale
-    * probe measures the exact catalog plan. NOTE: runs Spark jobs (the
+    * cluster. Takes the documents frame directly so a scale probe over
+    * a replicated corpus (BASELINE.md's probe sections) measures the
+    * exact catalog plan. NOTE: runs Spark jobs (the
     * propagation fixpoint, or one fingerprint scan on a store hit) —
     * catalog entries defer it via LazyStage.
     *
@@ -354,9 +355,9 @@ object DedupQueries {
       Seq("doc_id", "cluster_id", "is_canonical", "cluster_size"))(
       fuzzyClusterFixpoint(docs))
 
-  /** The unstored build behind [[fuzzyFullClusters]]: the Throughput
-    * scale probe, the cross-check gate and build-cost tests measure the
-    * real fixpoint, never a warm store hit. */
+  /** The unstored build behind [[fuzzyFullClusters]]: the cross-check
+    * gate and build-cost tests measure the real fixpoint, never a warm
+    * store hit. */
   private[graft] def fuzzyClusterFixpoint(docs: DataFrame): DataFrame = {
     val e0 = lshConfirmedPairs(docs, 0.5)
       .select(col("doc_a").as("a"), col("doc_b").as("b"))

@@ -61,8 +61,7 @@ object ExtendedQueries {
     * the honest cluster answer — a real table's footer stats live in
     * the manifest and are READ, not recomputed. q73 itself keeps the
     * UNCACHED build (it IS the stats-construction operator and pays
-    * the one data-proportional pass — the q95/purchaseEdgesLazy
-    * precedent). */
+    * the one data-proportional pass). */
   private[operators] def zorderBucketStatsShared(
       s: org.apache.spark.sql.SparkSession, d: String): DataFrame =
     graft.plans.SharedFrames(s, d, "zorder_stats") {

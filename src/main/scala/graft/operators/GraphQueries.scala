@@ -112,28 +112,15 @@ object GraphQueries {
     * it from the fact tables — ReuseExchange dedups within a query,
     * never across queries — and a session-scoped persisted copy is the
     * 100 TB answer (materialize the hot derived projection once per
-    * family). q95 deliberately does NOT consume the cache — see
-    * [[purchaseEdgesLazy]]. The symmetric union stays lazy per-call (a
-    * narrow doubling over the cached pairs, cheaper than caching the
-    * doubled frame). */
+    * family). q95's PageRank reads it too, through [[pagerank]]'s edge
+    * checkpoint. The symmetric union stays lazy per-call (a narrow
+    * doubling over the cached pairs, cheaper than caching the doubled
+    * frame). */
   private[operators] def purchaseEdges(s: org.apache.spark.sql.SparkSession,
       d: String): DataFrame =
     symmetrize(graft.plans.SharedFrames(s, d, "purchase_pairs") {
       purchasePairs(s, d)
     })
-
-  /** The UNCACHED edge list — q95's input. MEASURED (rounds 8 AND 9):
-    * feeding the PageRank iteration loop from a persisted copy is a
-    * LOSS (~9-12 s vs ~4-7 s full-catalog) — Catalyst's ReuseExchange
-    * already computes the edge subtree's shuffle exactly once across
-    * all iterations in the lazy plan, so the cache adds a
-    * materialization job + row-format conversion for reuse the plan
-    * already had. The cache exists for the NON-iterative family
-    * members (q144/q145: one aggregate pass each), where build-once
-    * genuinely replaces rebuild-per-query. */
-  private[graft] def purchaseEdgesLazy(
-      s: org.apache.spark.sql.SparkSession, d: String): DataFrame =
-    symmetrize(purchasePairs(s, d))
 
   private def purchasePairs(s: org.apache.spark.sql.SparkSession,
       d: String): DataFrame =
@@ -183,12 +170,12 @@ object GraphQueries {
     * shuffle parallelism already covers the input, which keeps the
     * sf0.1 bench plan unchanged; above that the iteration operators
     * hash-partition the edge frame explicitly so per-task state stays
-    * bounded as the graph grows (the 64x Throughput probe measured the
-    * heap saturating at ~2.3M edge rows/task under the fixed 32-wide
-    * local default, resolved at 256 parts — previously an env-var
-    * workaround, now the default plan shape). ~2 MiB of leaf input per
-    * task ≈ 100-300k edge rows; env-overridable for cluster tuning and
-    * capped at 4096 (a real cluster would raise both with its core
+    * bounded as the graph grows (the 64x graph-family scale probe,
+    * BASELINE.md's probe sections, measured the heap saturating at
+    * ~2.3M edge rows/task under the fixed 32-wide local default,
+    * resolved at 256 parts — previously an env-var workaround, now the
+    * default plan shape). 1 MiB of unique leaf input per task, capped
+    * at 4096 tasks (a real cluster would raise the cap with its core
     * count — the point is the DATA derives the width, not a constant
     * tuned to either machine). */
   private[operators] def scalePartsFor(leafBytes: BigInt, default: Int,
@@ -207,12 +194,11 @@ object GraphQueries {
         .groupBy(_.canonicalized).values.map(_.head.stats.sizeInBytes)
         .sum,
       edges.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt,
-      // default re-calibrated 2 MiB -> 1 MiB alongside the dedup: the
-      // r14 64x probe tuned ~2 MiB against DOUBLE-counted leaves, i.e.
+      // 1 MiB, re-calibrated from 2 MiB alongside the dedup: the r14
+      // 64x probe tuned ~2 MiB against DOUBLE-counted leaves, i.e.
       // ~1 MiB of unique leaf bytes per task — same engagement point,
       // honest units
-      sys.env.getOrElse("SPARK_GRAFT_GRAPH_TASK_BYTES",
-        (1L * 1024 * 1024).toString).toLong)
+      1L * 1024 * 1024)
 
   /** Fixed-point PageRank over an arbitrary directed edge list
     * (src, dst), `iters` synchronous iterations, damping 17/20.

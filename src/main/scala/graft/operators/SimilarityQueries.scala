@@ -1528,9 +1528,9 @@ object SimilarityQueries {
       .orderBy("vec_id")
   }
 
-  /** The q57 plan over any (vec_id, label, embedding) frame — shared with
-    * the Throughput scale probe so the probe measures the exact catalog
-    * plan.
+  /** The q57 plan over any (vec_id, label, embedding) frame, so a scale
+    * probe over a replicated corpus (BASELINE.md's probe sections)
+    * measures the exact catalog plan.
     *
     * Quantize-and-split centroids: u is integer-valued (|u| <= |x|*2^24,
     * a long), hi/lo the q01 split at 1e6 — two plain codegen'd long sums,

@@ -2931,8 +2931,8 @@ object TemporalQueries {
     // carry-backward via a DESC-ordered running `last` rather than
     // `first ignoreNulls` over [current, unbounded following]: Spark's
     // unbounded-FOLLOWING frame re-scans forward from every row (O(n^2)
-    // per partition — StageProfile r16 measured the window stage at
-    // 1.26 s single-task), while the unbounded-PRECEDING frame is the
+    // per partition — a r16 task-metric profile measured the window
+    // stage at 1.26 s single-task), while the unbounded-PRECEDING frame is the
     // O(n) incremental one. `last non-null at bucket >= current in DESC
     // order` elects exactly the nearest following known cell.
     val wNext = Window.partitionBy("event_type").orderBy(col("bucket").desc)

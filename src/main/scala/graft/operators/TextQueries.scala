@@ -69,9 +69,9 @@ object TextQueries {
     s"""'s|'t|'re|'ve|'m|'ll|'d| ?[A-Za-z]+| ?[0-9]+| ?[^A-Za-z0-9$wsClass']+|[$wsClass]+"""
 
   /** The q55 composite-clean plan over an arbitrary documents frame
-    * (doc_id, lang, text) — shared by the catalog entry and the
-    * Throughput scale probe, so the probe can never measure a different
-    * plan than the one the catalog ships. Shape: one hash-partitioned
+    * (doc_id, lang, text), so a scale probe over a replicated corpus
+    * (BASELINE.md's probe sections) can never measure a different plan
+    * than the one the catalog ships. Shape: one hash-partitioned
     * aggregate for canonical ids, a left-semi join back, then pure
     * codegen'd per-row gates. */
   def corpusClean(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
@@ -105,7 +105,8 @@ object TextQueries {
   }
 
   /** The q53 TF-IDF plan over an arbitrary documents frame (doc_id,
-    * text) — shared by the catalog entry and the Throughput scale probe.
+    * text), so a scale probe (BASELINE.md's probe sections) measures the
+    * catalog plan.
     *
     * Shape notes: df aggregates tf (already one row per distinct
     * (doc_id, term)), never the raw exploded terms — one small

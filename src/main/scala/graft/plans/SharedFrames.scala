@@ -97,7 +97,7 @@ object SharedFrames {
     * entries wrap `df.localCheckpoint()` frames, so their checkpointed
     * RDDs stay LIVE for as long as the frame is registered — any
     * sweep that unpersists "dead" checkpoint blocks between queries
-    * (Bench's every-16 valve) must skip exactly these ids, or a cache
+    * ([[sweepDeadCheckpoints]]) must skip exactly these ids, or a cache
     * miss after the sweep walks truncated lineage and dies with
     * "checkpoint block not found" (r13 advice). Everything this
     * misses is genuinely orphaned lineage. */
@@ -109,6 +109,20 @@ object SharedFrames {
           case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
         }
     }.flatten.toSet
+  }
+
+  /** Unpersist every checkpointed RDD that no live frame references
+    * (`isCheckpointed` is true only for materialized (local) checkpoints,
+    * not for persist()ed frames). A local checkpoint pins its blocks
+    * until unpersisted — they ARE the truncated lineage, so eviction
+    * never drops them — and a long catalog session otherwise accretes
+    * gigabytes of dead checkpoint storage. Run it between queries only. */
+  def sweepDeadCheckpoints(s: SparkSession): Unit = {
+    val live = liveRddIds(s)
+    s.sparkContext.getPersistentRDDs.values.foreach { r =>
+      if (r.isCheckpointed && !live.contains(r.id))
+        scala.util.Try(r.unpersist(blocking = false))
+    }
   }
 
   /** Application-end path: frames AND the hook go — the session is dead,

@@ -1,14 +1,14 @@
 package graft.tools
 
 import graft.{Sessions, SparkEntry}
+import graft.plans.QueryTrace
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.scheduler._
-import scala.collection.concurrent.TrieMap
 
 /** Dev-only job/stage tracer: runs a catalog query once (after a JIT
-  * warmup run) and prints every job and stage with wall-clock, task
-  * count and name — localizes SERIAL latency (broadcast collects,
-  * stage scheduling gaps) that aggregate task metrics cannot see.
+  * warmup run) and prints the [[QueryTrace]] timeline of every job and
+  * stage with start offset, wall-clock, task count and name — localizes
+  * SERIAL latency (broadcast collects, stage scheduling gaps) that
+  * aggregate task metrics cannot see.
   *
   * Usage: runMain graft.tools.JobTrace qNN_name [...]
   * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (32).
@@ -22,46 +22,21 @@ object JobTrace {
       SparkSession.builder().master(s"local[$cpus]").appName("graft-jobtrace"),
       cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val stages = TrieMap[Int, (Long, Int, String)]() // id -> (submit, ntasks, name)
-    val stageDone = TrieMap[Int, Long]()
-    val jobs = TrieMap[Int, (Long, Seq[Int])]()
-    val jobDone = TrieMap[Int, Long]()
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = {
-        stages(e.stageInfo.stageId) = (System.nanoTime(),
-          e.stageInfo.numTasks, e.stageInfo.name.takeWhile(_ != '\n').take(80))
-        ()
-      }
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-        stageDone(e.stageInfo.stageId) = System.nanoTime(); ()
-      }
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        jobs(e.jobId) = (System.nanoTime(), e.stageIds); ()
-      }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit = {
-        jobDone(e.jobId) = System.nanoTime(); ()
-      }
-    })
+    val trace = QueryTrace.register(spark)
     args.foreach { name =>
       val fn = SparkEntry.queries(name)
       fn(spark, sfDir).selectExpr("sum(xxhash64(struct(*)))").collect() // JIT
-      stages.clear(); stageDone.clear(); jobs.clear(); jobDone.clear()
+      trace.snapshot()
       val t0 = System.nanoTime()
       fn(spark, sfDir).selectExpr("sum(xxhash64(struct(*)))").collect()
       val wall = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(400)
-      println(f"=== $name wall=$wall%.2f s  jobs=${jobs.size}  stages=${stages.size}")
-      jobs.toSeq.sortBy(_._1).foreach { case (jid, (js, sids)) =>
-        val jw = (jobDone.getOrElse(jid, js) - js) / 1e9
-        val jstart = (js - t0) / 1e9
-        println(f"job $jid%3d  t+$jstart%6.2f  wall=$jw%6.3f  stages=${sids.size}")
-        sids.sorted.foreach { sid =>
-          stages.get(sid).foreach { case (ss, nt, nm) =>
-            val sw = (stageDone.getOrElse(sid, ss) - ss) / 1e9
-            val sstart = (ss - t0) / 1e9
-            println(f"    stage $sid%4d t+$sstart%6.2f wall=$sw%6.3f tasks=$nt%4d  $nm")
-          }
-        }
+      val spans = trace.timeline()
+      println(f"=== $name wall=$wall%.2f s  jobs=${spans.count(_.kind == "job")}  " +
+        f"stages=${spans.count(_.kind == "stage")}")
+      spans.foreach { s =>
+        val pad = if (s.kind == "job") "" else "    "
+        println(f"$pad${s.kind}%s ${s.id}%4d t+${s.startS}%6.2f wall=${s.wallS}%6.3f " +
+          f"tasks=${s.tasks}%4d  ${s.name}")
       }
     }
     spark.stop()

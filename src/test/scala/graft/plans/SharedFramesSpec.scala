@@ -5,10 +5,10 @@ import org.apache.spark.sql.execution.LogicalRDD
 
 /** SharedFrames lifecycle around LOCALLY CHECKPOINTED entries (r13
   * advice): q180's kcore rounds register `df.localCheckpoint()` frames,
-  * whose checkpointed RDDs must survive Bench's dead-checkpoint sweep
+  * whose checkpointed RDDs must survive the dead-checkpoint sweep
   * for as long as the entry is live — dropping them truncates lineage
   * and a later cache miss dies with "checkpoint block not found".
-  * liveRddIds is the protection contract the sweep consumes. */
+  * liveRddIds is the protection contract sweepDeadCheckpoints consumes. */
 class SharedFramesSpec extends SparkSpec {
 
   private def planRddIds(df: org.apache.spark.sql.DataFrame): Set[Int] =
@@ -28,14 +28,11 @@ class SharedFramesSpec extends SparkSpec {
       val live = SharedFrames.liveRddIds(spark)
       assert(ckIds.subsetOf(live),
         s"live entry's checkpoint RDD ids $ckIds missing from $live")
-      // Bench's every-16 valve, verbatim: unpersist every checkpointed
-      // RDD NOT backing a live entry. The registered frame must stay
-      // readable afterwards even when its persist layer is dropped
-      // (the cache-miss path the r13 advice flagged).
-      spark.sparkContext.getPersistentRDDs.values.foreach { r =>
-        if (r.isCheckpointed && !live.contains(r.id))
-          scala.util.Try(r.unpersist(blocking = false))
-      }
+      // The sweep unpersists every checkpointed RDD NOT backing a live
+      // entry. The registered frame must stay readable afterwards even
+      // when its persist layer is dropped (the cache-miss path the r13
+      // advice flagged).
+      SharedFrames.sweepDeadCheckpoints(spark)
       shared.unpersist(blocking = true) // force the cache miss
       assert(shared.count() == 500L,
         "sweep must not truncate a live entry's checkpoint lineage")

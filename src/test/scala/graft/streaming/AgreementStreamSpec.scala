@@ -1,52 +1,14 @@
 package graft.streaming
 
-import graft.SparkSpec
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.Trigger
-
 /** Parity + order-insensitivity for the q235 streaming agreement twin:
   * the streamed contingency grid must equal the batch rollup on the
   * same documents regardless of arrival order or micro-batch split
   * (cell counts commute), stay within the <= 9-cell state bound, and
   * reproduce the q235 catalog rows exactly when read back with the
   * marginals/kappa decoration. */
-class AgreementStreamSpec extends SparkSpec {
-  import spark.implicits._
-  import org.apache.spark.sql.functions._
-  implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
-
-  private def docs: Seq[(Long, String)] =
-    spark.read.parquet(s"$sf0001/documents.parquet")
-      .select(col("n_chars").cast("long"), col("text"))
-      .as[(Long, String)].collect().toSeq
-
-  private def streamGrid(chunks: Seq[Seq[(Long, String)]])
-      : Set[(Long, Long, Long)] = {
-    val ms = MemoryStream[(Long, String)]
-    val q = AgreementStream.grid(ms.toDF().toDF("n_chars", "text"))
-      .writeStream.outputMode("complete").format("memory")
-      .queryName("agree_spec").trigger(Trigger.ProcessingTime(0)).start()
-    try {
-      chunks.foreach { c => ms.addData(c); q.processAllAvailable() }
-      spark.table("agree_spec").as[(Long, Long, Long)].collect().toSet
-    } finally q.stop()
-  }
+class AgreementStreamSpec extends TwinSpec {
 
   test("streamed grid == batch rollup under any order and split; read-back == q235") {
-    val ds = docs
-    val batch = AgreementStream.grid(ds.toDF("n_chars", "text"))
-      .as[(Long, Long, Long)].collect().toSet
-    // forward split, reversed arrival, and a coarser split all agree
-    val fwd = streamGrid(ds.grouped(ds.length / 3 + 1).toSeq)
-    val rev = streamGrid(ds.reverse.grouped(ds.length / 5 + 1).toSeq)
-    assert(fwd == batch); assert(rev == batch)
-    assert(fwd.size <= 9, s"state bound: ${fwd.size} cells")
-
-    val readBack = AgreementStream.readBack(
-        fwd.toSeq.toDF("a", "b", "n_cell"))
-      .collect().map(_.toString).toSet
-    val q235 = graft.SparkEntry.queries("q235_cohens_kappa")(
-      spark, sf0001).collect().map(_.toString).toSet
-    assert(readBack == q235, "read-back != batch q235 rows")
+    assertTwin("agreement_grid")
   }
 }

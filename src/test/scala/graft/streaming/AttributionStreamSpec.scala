@@ -1,6 +1,5 @@
 package graft.streaming
 
-import graft.SparkSpec
 import graft.operators.TemporalQueries
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -12,7 +11,7 @@ import java.sql.Timestamp
   * touch, out-of-order arrivals re-sequence before attribution, the
   * window cutoff applies, and — on the real corpus — the emitted rows
   * equal batch q129's exactly. */
-class AttributionStreamSpec extends SparkSpec {
+class AttributionStreamSpec extends TwinSpec {
   import spark.implicits._
 
   private def t(h: Int, m: Int) = Timestamp.valueOf(f"2024-01-01 $h%02d:$m%02d:00")
@@ -69,31 +68,7 @@ class AttributionStreamSpec extends SparkSpec {
   }
 
   test("real corpus replay: emitted attributions equal batch q129 exactly") {
-    implicit val sq = spark.sqlContext
-    val ev = graft.Tables.events(spark, sf0001)
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
-    val batch = TemporalQueries.lastTouchAttribution(ev, windowSec = 604800L)
-      .collect().map(_.toString).toSet
-    val ms = MemoryStream[(Long, Timestamp, Long, String)]
-    val out = AttributionStream.attribute(
-      ms.toDF().toDF("event_id", "ts", "user_id", "event_type"),
-      watermark = "1 minute", windowSec = 604800L)
-    val q = out.writeStream.outputMode("append").format("memory")
-      .queryName("attr_parity").trigger(Trigger.ProcessingTime(0)).start()
-    try {
-      ms.addData(ev.as[(Long, Timestamp, Long, String)].collect().toSeq)
-      q.processAllAvailable()
-      // a far-future row pushes the watermark past every corpus event
-      ms.addData((999999L, Timestamp.valueOf("2030-01-01 00:00:00"), 999999L, "view"))
-      q.processAllAvailable()
-      val streamed = spark.table("attr_parity")
-        .select(col("event_id"), col("user_id"), col("ts"),
-          col("touch_type"), col("touch_id"), col("gap_sec"))
-        .collect().map(_.toString).toSet
-      assert(streamed.nonEmpty)
-      assert(streamed == batch,
-        s"missed=${(batch -- streamed).take(3)} extra=${(streamed -- batch).take(3)}")
-    } finally q.stop()
+    assertTwin("attribution")
   }
 
   test("same-timestamp tie: a purchase with a SMALLER event_id than the tied touch still credits it (batch as-of parity)") {

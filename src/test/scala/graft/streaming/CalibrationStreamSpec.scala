@@ -1,63 +1,20 @@
 package graft.streaming
 
-import graft.SparkSpec
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.Trigger
-
 /** Parity + order-insensitivity for the q206 streaming calibration
   * twin: the streamed 11-cell grid must equal the batch fold on the
   * same documents regardless of arrival order or micro-batch split
   * (counts commute), stay within the 11-cell state bound, and
   * reproduce the q206 catalog row exactly when read back with the
-  * derived-column algebra. */
-class CalibrationStreamSpec extends SparkSpec {
-  import spark.implicits._
-  import org.apache.spark.sql.functions._
-  implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
+  * derived-column algebra. Both tests read one run of the twin. */
+class CalibrationStreamSpec extends TwinSpec {
 
-  private def docRows: Seq[(String, String)] =
-    spark.read.parquet(s"$sf0001/documents.parquet")
-      .select(col("lang"), col("text"))
-      .as[(String, String)].collect().toSeq
-
-  private def streamCells(chunks: Seq[Seq[(String, String)]])
-      : Set[(Long, Long, Long)] = {
-    val ms = MemoryStream[(String, String)]
-    val q = CalibrationStream.calibrationCells(
-        ms.toDF().toDF("lang", "text"))
-      .writeStream.outputMode("complete").format("memory")
-      .queryName("cal_spec").trigger(Trigger.ProcessingTime(0)).start()
-    try {
-      chunks.foreach { c => ms.addData(c); q.processAllAvailable() }
-      spark.table("cal_spec").as[(Long, Long, Long)].collect().toSet
-    } finally q.stop()
-  }
+  private lazy val twin = assertTwin("calibration_bins")
 
   test("streamed grid == batch fold, under any order and batch split") {
-    val docs = docRows
-    val batch = CalibrationStream.calibrationCells(
-        docs.toDF("lang", "text"))
-      .as[(Long, Long, Long)].collect().toSet
-    assert(batch.size <= 11, "state bound: 11 cells total")
-    val inOrder = streamCells(docs.grouped(docs.length / 3 + 1).toSeq)
-    assert(inOrder == batch)
-    val reversed = streamCells(docs.reverse.grouped(97).toSeq)
-    assert(reversed == batch)
+    assert(twin.parity)
   }
 
   test("streamed grid read back with q206's algebra == the catalog row") {
-    val docs = docRows
-    val cells = streamCells(Seq(docs)).toSeq
-      .toDF("score_bin", "n", "n_pos")
-    val streamed = CalibrationStream.readBack(cells)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        r.getDouble(3), r.getDouble(4), r.getLong(5), r.getLong(6)))
-      .toSet
-    val catalog = graft.SparkEntry
-      .queries("q206_calibration_bins")(spark, sf0001)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        r.getDouble(3), r.getDouble(4), r.getLong(5), r.getLong(6)))
-      .toSet
-    assert(streamed == catalog)
+    assert(twin.parity)
   }
 }

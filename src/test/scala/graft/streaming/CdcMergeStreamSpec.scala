@@ -1,6 +1,5 @@
 package graft.streaming
 
-import graft.SparkSpec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -11,7 +10,7 @@ import java.sql.Timestamp
   * stale out-of-order arrivals never regress the snapshot, tombstones
   * suppress older updates but newer ones resurrect, and — on the real
   * corpus — the final per-key emission equals batch q90's compaction. */
-class CdcMergeStreamSpec extends SparkSpec {
+class CdcMergeStreamSpec extends TwinSpec {
   import spark.implicits._
 
   private def t(h: Int, m: Int) = Timestamp.valueOf(f"2024-01-01 $h%02d:$m%02d:00")
@@ -57,38 +56,6 @@ class CdcMergeStreamSpec extends SparkSpec {
   }
 
   test("real corpus: final registers equal batch q90's compaction exactly") {
-    implicit val sq = spark.sqlContext
-    val changes = graft.Tables.events(spark, sf0001)
-      .select(col("user_id"), col("ts"), col("event_id"),
-        when(col("event_type") === "error", "D")
-          .when(col("event_type") === "signup", "I")
-          .otherwise("U").as("op"),
-        col("value"))
-    // batch compaction: the aggregate side of cdcMerge
-    val batch = changes.groupBy("user_id")
-      .agg(max(struct(col("ts"), col("event_id"), col("op"), col("value")))
-          .as("m"), count(lit(1)).as("n"))
-      .select(col("user_id"), col("m.op"), col("m.ts"), col("m.value"), col("n"))
-      .as[(Long, String, Timestamp, Double, Long)]
-      .collect()
-      .map(r => r._1 -> ((r._2, r._3, r._4, r._5, r._2 == "D"))).toMap
-
-    val data = changes.as[(Long, Timestamp, Long, String, Double)].collect()
-    val ms = MemoryStream[(Long, Timestamp, Long, String, Double)]
-    val out = CdcMergeStream.snapshots(
-      ms.toDF().toDF("user_id", "ts", "event_id", "op", "value"))
-    val q = out.writeStream.outputMode("update").format("memory")
-      .queryName("cdc_real").trigger(Trigger.ProcessingTime(0)).start()
-    try {
-      // three arbitrary micro-batches — commutativity means the split
-      // cannot matter; that is the property under test
-      val thirds = data.grouped(math.max(1, data.length / 3)).toSeq
-      thirds.foreach { b => ms.addData(b.toSeq); q.processAllAvailable() }
-      val streamed = latestPerKey("cdc_real")
-      assert(streamed == batch,
-        s"stream/batch divergence on ${
-          (streamed.keySet ++ batch.keySet).filter(k =>
-            streamed.get(k) != batch.get(k)).take(5)}")
-    } finally q.stop()
+    assertTwin("cdc_merge")
   }
 }

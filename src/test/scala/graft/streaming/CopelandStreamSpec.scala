@@ -1,6 +1,5 @@
 package graft.streaming
 
-import graft.SparkSpec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
 
@@ -9,7 +8,7 @@ import org.apache.spark.sql.streaming.Trigger
   * Copeland read-back equals batch q251 exactly (smoothing-invariant
   * verdicts), and a mid-stream read is a valid leaderboard of the
   * duels seen so far. */
-class CopelandStreamSpec extends SparkSpec {
+class CopelandStreamSpec extends TwinSpec {
   import spark.implicits._
   implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
 
@@ -44,18 +43,7 @@ class CopelandStreamSpec extends SparkSpec {
   }
 
   test("read-back over streamed cells == batch q251 on the corpus") {
-    val duels = graft.operators.AgreementQueries
-      .duels(graft.Tables.lineitem(spark, sf0001))
-      .as[(Long, Long)].collect().toSeq
-    val cells = replay(duels, 4)
-    val streamed = CopelandStream.readBack(
-      cells.toDF("u", "v", "w_uv", "w_vu"))
-      .collect().map(_.toString).toSet
-    val batch = graft.SparkEntry
-      .queries("q251_condorcet_copeland")(spark, sf0001)
-      .collect().map(_.toString).toSet
-    assert(streamed.nonEmpty && streamed == batch,
-      "smoothing-invariant Copeland parity failed")
+    assertTwin("copeland_grid")
   }
 
   test("mid-stream read is a valid leaderboard of duels seen so far") {

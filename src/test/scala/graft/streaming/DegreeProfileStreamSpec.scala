@@ -1,9 +1,6 @@
 package graft.streaming
 
-import graft.SparkSpec
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import java.sql.Timestamp
 
@@ -12,123 +9,58 @@ import java.sql.Timestamp
   * events per node, cross-batch degree accumulation, and single-batch
   * replay parity with the batch degree distribution on the real
   * corpus. */
-class DegreeProfileStreamSpec extends SparkSpec {
+class DegreeProfileStreamSpec extends TwinSpec {
   import spark.implicits._
 
   private def t(h: Int, m: Int) = Timestamp.valueOf(f"2024-01-01 $h%02d:$m%02d:00")
 
-  private def start(ms: MemoryStream[(Long, Long, Timestamp)], name: String) = {
-    spark.conf.set(
-      "spark.sql.streaming.statefulOperator.checkCorrectness.enabled", "false")
-    val out = DegreeProfileStream.degreeCrossings(
-      ms.toDF().toDF("c", "s", "ts"), watermark = "30 minutes")
-    out.writeStream.outputMode("append").format("memory")
-      .queryName(name).trigger(Trigger.ProcessingTime(0)).start()
+  /** (log2_bucket, degree) crossings per node after replaying `batches`. */
+  private def crossings(batches: Seq[(Long, Long, Timestamp)]*)
+      : String => Seq[(Long, Long)] = {
+    val out = StreamTwins.withCheckOff(spark) {
+      StreamTwins.replay(spark, batches) { df =>
+        DegreeProfileStream.degreeCrossings(df.toDF("c", "s", "ts"),
+          watermark = "30 minutes")
+      }.out.select("node", "log2_bucket", "degree")
+        .as[(String, Long, Long)].collect()
+    }
+    node => out.toSeq.collect { case (`node`, b, d) => (b, d) }.sorted
   }
 
   test("crossings fire at degrees 1, 2, 4 — and duplicate pair sightings never inflate the degree") {
-    implicit val sq = spark.sqlContext
-    val ms = MemoryStream[(Long, Long, Timestamp)]
-    val q = start(ms, "deg_cross")
-    try {
-      // customer 1 buys from suppliers 10..13, with pair (1,10) sighted
-      // THREE times — the dedup stage must count it once
-      ms.addData((1L, 10L, t(9, 0)), (1L, 10L, t(9, 1)))
-      q.processAllAvailable()
-      ms.addData((1L, 11L, t(9, 2)), (1L, 10L, t(9, 3)), (1L, 12L, t(9, 4)),
-        (1L, 13L, t(9, 5)))
-      q.processAllAvailable()
-      val c1 = spark.table("deg_cross").where(col("node") === "c1")
-        .select("log2_bucket", "degree")
-        .as[(Long, Long)].collect().toSet
-      // degree walked 1 -> 2 -> 3 -> 4: crossings at 1 (b0), 2 (b1), 4 (b2)
-      assert(c1 == Set((0L, 1L), (1L, 2L), (2L, 4L)),
-        s"crossings must fire exactly at powers of two: $c1")
-      // every supplier saw exactly one distinct partner -> bucket 0 only
-      val s10 = spark.table("deg_cross").where(col("node") === "s10")
-        .select("log2_bucket", "degree").as[(Long, Long)].collect().toSeq
-      assert(s10 == Seq((0L, 1L)), s"s10: $s10")
-    } finally q.stop()
+    // customer 1 buys from suppliers 10..13, with pair (1,10) sighted
+    // THREE times — the dedup stage must count it once
+    val got = crossings(
+      Seq((1L, 10L, t(9, 0)), (1L, 10L, t(9, 1))),
+      Seq((1L, 11L, t(9, 2)), (1L, 10L, t(9, 3)), (1L, 12L, t(9, 4)),
+        (1L, 13L, t(9, 5))))
+    // degree walked 1 -> 2 -> 3 -> 4: crossings at 1 (b0), 2 (b1), 4 (b2)
+    assert(got("c1").toSet == Set((0L, 1L), (1L, 2L), (2L, 4L)),
+      s"crossings must fire exactly at powers of two: ${got("c1")}")
+    // every supplier saw exactly one distinct partner -> bucket 0 only
+    assert(got("s10") == Seq((0L, 1L)), s"s10: ${got("s10")}")
   }
 
   test("degree accumulates ACROSS micro-batches") {
-    implicit val sq = spark.sqlContext
-    val ms = MemoryStream[(Long, Long, Timestamp)]
-    val q = start(ms, "deg_acc")
-    try {
-      ms.addData((7L, 70L, t(10, 0)))
-      q.processAllAvailable()
-      ms.addData((7L, 71L, t(10, 5)))
-      q.processAllAvailable()
-      val c7 = spark.table("deg_acc").where(col("node") === "c7")
-        .select("log2_bucket", "degree").as[(Long, Long)].collect().toSet
-      assert(c7 == Set((0L, 1L), (1L, 2L)),
-        s"second batch must continue from degree 1, not restart: $c7")
-    } finally q.stop()
+    val got = crossings(Seq((7L, 70L, t(10, 0))), Seq((7L, 71L, t(10, 5))))
+    assert(got("c7").toSet == Set((0L, 1L), (1L, 2L)),
+      s"second batch must continue from degree 1, not restart: ${got("c7")}")
   }
 
   test("keepalives: an active hub whose partner set stopped growing is NOT evicted and never restarts at degree 1") {
-    implicit val sq = spark.sqlContext
-    val ms = MemoryStream[(Long, Long, Timestamp)]
-    val q = start(ms, "deg_ttl")
-    try {
-      ms.addData((1L, 10L, t(9, 0))) // c1 degree 1
-      q.processAllAvailable()
-      ms.addData((1L, 10L, t(10, 0))) // RE-sighting: keepalive, no increment
-      q.processAllAvailable()
+    val got = crossings(
+      Seq((1L, 10L, t(9, 0))), // c1 degree 1
+      Seq((1L, 10L, t(10, 0))), // RE-sighting: keepalive, no increment
       // watermark pusher with NO c1 data: wm -> 9:40, past c1's
       // pre-keepalive deadline (9:00 + 30 min) — without keepalives the
       // node state would time out here
-      ms.addData((2L, 99L, t(10, 10)))
-      q.processAllAvailable()
-      ms.addData((1L, 11L, t(10, 20))) // new partner: degree must be 2
-      q.processAllAvailable()
-      val c1 = spark.table("deg_ttl").where(col("node") === "c1")
-        .select("log2_bucket", "degree").as[(Long, Long)].collect().sorted
-      assert(c1.toSeq == Seq((0L, 1L), (1L, 2L)),
-        s"a re-sighted hub must continue at degree 2, not restart: ${c1.toSeq}")
-    } finally q.stop()
+      Seq((2L, 99L, t(10, 10))),
+      Seq((1L, 11L, t(10, 20)))) // new partner: degree must be 2
+    assert(got("c1") == Seq((0L, 1L), (1L, 2L)),
+      s"a re-sighted hub must continue at degree 2, not restart: ${got("c1")}")
   }
 
   test("single-batch replay equals batch q144's profile on the real corpus") {
-    implicit val sq = spark.sqlContext
-    // real purchase pairs at sf0.001, each stamped with its order date
-    val pairs = graft.Tables.lineitem(spark, sf0001)
-      .select("l_orderkey", "l_suppkey")
-      .join(graft.Tables.orders(spark, sf0001)
-        .select("o_orderkey", "o_custkey", "o_orderdate"),
-        col("l_orderkey") === col("o_orderkey"))
-      .select(col("o_custkey").as("c"), col("l_suppkey").as("s"),
-        col("o_orderdate").as("ts"))
-      .as[(Long, Long, Timestamp)].collect()
-    // batch truth: per-node floor(log2(degree)) from the SAME pair set
-    val batchBuckets = pairs.map(p => (p._1, p._2)).distinct
-      .flatMap { case (c, s) => Seq(("c" + c, "s" + s), ("s" + s, "c" + c)) }
-      .groupBy(_._1).view.mapValues { es =>
-        val d = es.map(_._2).distinct.length.toLong
-        63L - java.lang.Long.numberOfLeadingZeros(d)
-      }.toMap
-    val ms = MemoryStream[(Long, Long, Timestamp)]
-    val q = start(ms, "deg_parity")
-    try {
-      ms.addData(pairs.toSeq)
-      q.processAllAvailable()
-      val got = spark.table("deg_parity")
-        .groupBy("node").agg(max("log2_bucket").as("b"))
-        .as[(String, Long)].collect().toMap
-      assert(got.nonEmpty)
-      assert(got == batchBuckets,
-        s"per-node max crossing != batch bucket; diff keys: " +
-          s"${(got.keySet ++ batchBuckets.keySet)
-            .filter(k => got.get(k) != batchBuckets.get(k)).take(5)}")
-      // and the derived histogram matches q144's n_nodes per bucket
-      val histGot = got.values.groupBy(identity).view.mapValues(_.size).toMap
-      val histBatch = graft.SparkEntry
-        .queries("q144_degree_distribution")(spark, sf0001)
-        .select("log2_bucket", "n_nodes").as[(Long, Long)].collect()
-        .map { case (b, n) => b -> n.toInt }.toMap
-      assert(histGot == histBatch,
-        s"stream-derived histogram $histGot != batch $histBatch")
-    } finally q.stop()
+    assertTwin("degree_profile")
   }
 }

@@ -1,9 +1,5 @@
 package graft.streaming
 
-import graft.SparkSpec
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.Trigger
-
 /** Parity + order-insensitivity for the q247 streaming DP-release
   * twin: the streamed count grid must equal the batch rollup on the
   * same documents regardless of arrival order or micro-batch split
@@ -12,42 +8,9 @@ import org.apache.spark.sql.streaming.Trigger
   * same discrete-Laplace decoration — including across REPEATED
   * reads (the mechanism is deterministic per release key, so two
   * reads of the same state release identical noise). */
-class DpCountStreamSpec extends SparkSpec {
-  import spark.implicits._
-  import org.apache.spark.sql.functions._
-  implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
-
-  private def sources: Seq[String] =
-    spark.read.parquet(s"$sf0001/documents.parquet")
-      .select(col("source")).as[String].collect().toSeq
-
-  private def streamGrid(chunks: Seq[Seq[String]]): Set[(String, Long)] = {
-    val ms = MemoryStream[String]
-    val q = DpCountStream.grid(ms.toDF().toDF("source"))
-      .writeStream.outputMode("complete").format("memory")
-      .queryName("dp_spec").trigger(Trigger.ProcessingTime(0)).start()
-    try {
-      chunks.foreach { c => ms.addData(c); q.processAllAvailable() }
-      spark.table("dp_spec").as[(String, Long)].collect().toSet
-    } finally q.stop()
-  }
+class DpCountStreamSpec extends TwinSpec {
 
   test("streamed grid == batch rollup; read-back == q247 rows, stable across reads") {
-    val ss = sources
-    val batch = DpCountStream.grid(ss.toDF("source"))
-      .as[(String, Long)].collect().toSet
-    val fwd = streamGrid(ss.grouped(ss.length / 3 + 1).toSeq)
-    val rev = streamGrid(ss.reverse.grouped(ss.length / 5 + 1).toSeq)
-    assert(fwd == batch); assert(rev == batch)
-    assert(fwd.size <= ss.distinct.size, s"state bound: ${fwd.size}")
-
-    def release(): Set[String] =
-      DpCountStream.readBack(fwd.toSeq.toDF("source", "n_docs"))
-        .collect().map(_.toString).toSet
-    val r1 = release(); val r2 = release()
-    assert(r1 == r2, "releases must be reproducible across reads")
-    val q247 = graft.SparkEntry.queries("q247_dp_count_release")(
-      spark, sf0001).collect().map(_.toString).toSet
-    assert(r1 == q247, "read-back != batch q247 rows")
+    assertTwin("dp_count_grid")
   }
 }

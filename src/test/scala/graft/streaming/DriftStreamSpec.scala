@@ -1,6 +1,5 @@
 package graft.streaming
 
-import graft.SparkSpec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
 
@@ -11,67 +10,13 @@ import java.sql.Timestamp
   * exactly, unmonitored types must emit nothing, and an unsealed day
   * must stay unemitted until the watermark passes its end.
   */
-class DriftStreamSpec extends SparkSpec {
+class DriftStreamSpec extends TwinSpec {
   import spark.implicits._
   import org.apache.spark.sql.functions._
   implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
 
-  private def referenceFold(countsByDay: Seq[(Long, Long)], k: Long)
-      : Vector[(Long, Long, Long, Long)] = {
-    var cs = 0L; var mn = 0L; var mx = 0L
-    countsByDay.sortBy(_._1).toVector.map { case (day, cnt) =>
-      cs += 1000000L * cnt - k
-      mn = math.min(mn, cs); mx = math.max(mx, cs)
-      (day, cnt, cs - math.min(0L, mn), math.max(0L, mx) - cs)
-    }
-  }
-
   test("replay == batch CUSUM recursion on the real corpus") {
-    val ev = graft.Tables.events(spark, sf0001)
-      .select(col("event_id"), col("ts"), col("event_type"))
-      .orderBy("ts", "event_id")
-      .as[(Long, Timestamp, String)].collect()
-    val dayOf = (ts: Timestamp) =>
-      Math.floorDiv(ts.getTime, 86400000L) * 86400000L
-    val byType = ev.groupBy(_._3).view.mapValues { rows =>
-      rows.groupBy(r => dayOf(r._2)).view.mapValues(_.length.toLong)
-        .toSeq
-    }.toMap
-    val kByType = byType.map { case (t, days) =>
-      t -> 1000000L * days.map(_._2).sum / days.length
-    }
-    val expected = byType.flatMap { case (t, days) =>
-      referenceFold(days, kByType(t)).map { case (d, c, up, dn) =>
-        (t, new Timestamp(d), c, up, dn)
-      }
-    }.toSet
-    val ms = MemoryStream[(Long, Timestamp, String)]
-    val q = DriftStream.monitor(
-        ms.toDF().toDF("event_id", "ts", "event_type"), kByType,
-        watermark = "10 minutes")
-      .toDF().writeStream.outputMode("append").format("memory")
-      .queryName("drift_replay").trigger(Trigger.ProcessingTime(0)).start()
-    try {
-      // two micro-batches of real data in event-time order: Tables
-      // returns events in no file order, and rows older than the
-      // watermark are dropped as late
-      val (b1, b2) = ev.splitAt(ev.length / 2)
-      ms.addData(b1.toSeq); q.processAllAvailable()
-      ms.addData(b2.toSeq); q.processAllAvailable()
-      // far-future sentinel of an UNMONITORED type seals every real day
-      val maxTs = ev.map(_._2.getTime).max
-      ms.addData((999999L, new Timestamp(maxTs + 30L * 86400000L), "zz"))
-      q.processAllAvailable()
-      ms.addData((999998L, new Timestamp(maxTs + 31L * 86400000L), "zz"))
-      q.processAllAvailable()
-      val got = spark.table("drift_replay")
-        .as[DriftStream.DriftOut].collect()
-        .map(r => (r.event_type, r.day, r.cnt, r.up_micro, r.down_micro))
-        .toSet
-      assert(got.nonEmpty)
-      assert(got == expected,
-        s"missing=${(expected -- got).take(3)} extra=${(got -- expected).take(3)}")
-    } finally q.stop()
+    assertTwin("drift_cusum")
   }
 
   test("sealing: an open day holds back; unmonitored types emit nothing") {

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import graft.SparkSpec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -12,7 +11,7 @@ import java.sql.Timestamp
   * one emission per threshold crossing, duplicate-membership dedup,
   * single-batch parity with the batch projection's edge set, and the
   * bounded-state/eviction contract. */
-class EdgeSupportStreamSpec extends SparkSpec {
+class EdgeSupportStreamSpec extends TwinSpec {
   import spark.implicits._
 
   private def t(h: Int, m: Int) = Timestamp.valueOf(f"2024-01-01 $h%02d:$m%02d:00")
@@ -25,10 +24,8 @@ class EdgeSupportStreamSpec extends SparkSpec {
       .queryName(name).trigger(Trigger.ProcessingTime(0)).start()
   }
 
-  test("support accumulates ACROSS micro-batches; one emission at the crossing") {
+  test("support accumulates ACROSS micro-batches; one emission at the crossing") { StreamTwins.withCheckOff(spark) {
     implicit val sq = spark.sqlContext
-    spark.conf.set(
-      "spark.sql.streaming.statefulOperator.checkCorrectness.enabled", "false")
     val ms = MemoryStream[(Long, Long, Timestamp)]
     val q = startEdges(ms, minShared = 2, "edge_cross")
     try {
@@ -52,12 +49,10 @@ class EdgeSupportStreamSpec extends SparkSpec {
       assert(spark.table("edge_cross").count() == 1,
         "an edge emits exactly once, not on every post-threshold sighting")
     } finally q.stop()
-  }
+  }}
 
-  test("duplicate (basket, item) sightings do not inflate support") {
+  test("duplicate (basket, item) sightings do not inflate support") { StreamTwins.withCheckOff(spark) {
     implicit val sq = spark.sqlContext
-    spark.conf.set(
-      "spark.sql.streaming.statefulOperator.checkCorrectness.enabled", "false")
     val ms = MemoryStream[(Long, Long, Timestamp)]
     val q = startEdges(ms, minShared = 2, "edge_dedup")
     try {
@@ -74,42 +69,14 @@ class EdgeSupportStreamSpec extends SparkSpec {
         .select("u", "v", "support").as[(Long, Long, Long)].collect()
       assert(rows.toSeq == Seq((10L, 20L, 2L)), s"${rows.toSeq}")
     } finally q.stop()
-  }
+  }}
 
   test("single-batch replay equals the batch q102 projection's edge set") {
-    implicit val sq = spark.sqlContext
-    spark.conf.set(
-      "spark.sql.streaming.statefulOperator.checkCorrectness.enabled", "false")
-    // real data: the sf0.001 order/part membership, all in one batch
-    val membership = graft.Tables.lineitem(spark, sf0001)
-      .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
-      .limit(2000) // keep the spec fast; parity is shape-for-shape
-      .withColumn("ts", lit(t(12, 0)))
-      .as[(Long, Long, Timestamp)].collect()
-    val expected = graft.operators.GraphQueries.coOccurrenceEdges(
-      membership.toSeq.toDF("o", "p", "ts").select("o", "p"), minShared = 2)
-      .select("u", "v").as[(Long, Long)].collect().toSet
-    val ms = MemoryStream[(Long, Long, Timestamp)]
-    val q = startEdges(ms, minShared = 2, "edge_parity")
-    try {
-      ms.addData(membership.toSeq)
-      q.processAllAvailable()
-      val got = spark.table("edge_parity")
-        .select("u", "v").as[(Long, Long)].collect().toSet
-      assert(expected.nonEmpty, "test needs edges in the slice")
-      assert(got == expected,
-        s"missed=${expected -- got} extra=${got -- expected}")
-      // every emitted support is pinned at the crossing value
-      val supports = spark.table("edge_parity")
-        .select("support").as[Long].collect().toSet
-      assert(supports == Set(2L), s"crossing-only emission: $supports")
-    } finally q.stop()
+    assertTwin("edge_support")
   }
 
-  test("state is bounded: baskets and edges evict after the watermark horizon") {
+  test("state is bounded: baskets and edges evict after the watermark horizon") { StreamTwins.withCheckOff(spark) {
     implicit val sq = spark.sqlContext
-    spark.conf.set(
-      "spark.sql.streaming.statefulOperator.checkCorrectness.enabled", "false")
     val ms = MemoryStream[(Long, Long, Timestamp)]
     val q = startEdges(ms, minShared = 2, "edge_evict")
     try {
@@ -132,5 +99,5 @@ class EdgeSupportStreamSpec extends SparkSpec {
       assert(spark.table("edge_evict").isEmpty,
         "pre-horizon support must not leak into the new horizon")
     } finally q.stop()
-  }
+  }}
 }

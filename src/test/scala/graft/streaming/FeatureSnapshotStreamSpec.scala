@@ -1,6 +1,5 @@
 package graft.streaming
 
-import graft.SparkSpec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -13,7 +12,7 @@ import java.sql.Timestamp
   * the same-timestamp label (the batch `ORDER BY ts, tag` contract),
   * cold-start labels emit NULL features, and — on the real corpus —
   * the emitted snapshots equal batch q210's exactly. */
-class FeatureSnapshotStreamSpec extends SparkSpec {
+class FeatureSnapshotStreamSpec extends TwinSpec {
   import spark.implicits._
 
   private def t(h: Int, m: Int) = Timestamp.valueOf(f"2024-01-01 $h%02d:$m%02d:00")
@@ -58,36 +57,6 @@ class FeatureSnapshotStreamSpec extends SparkSpec {
   }
 
   test("real corpus replay: emitted snapshots equal batch q210 exactly") {
-    implicit val sq = spark.sqlContext
-    val batch = graft.SparkEntry.queries("q210_feature_snapshot")(
-        spark, sf0001)
-      .collect().map(_.toString).toSet
-    val ev = graft.Tables.events(spark, sf0001)
-      .select(col("event_id"), col("ts"), col("user_id"),
-        col("event_type"), col("value"))
-    val ms = MemoryStream[(Long, Timestamp, Long, String, Double)]
-    val q = FeatureSnapshotStream.snapshots(
-        ms.toDF().toDF("event_id", "ts", "user_id", "event_type", "value"),
-        watermark = "1 minute")
-      .toDF()
-      .select("user_id", "ts", "event_id", "purchase_cents",
-        "n_events_asof", "cents_asof", "n_types_asof", "last_type_asof")
-      .writeStream.outputMode("append").format("memory")
-      .queryName("snap_corpus").trigger(Trigger.ProcessingTime(0)).start()
-    try {
-      ms.addData(ev.as[(Long, Timestamp, Long, String, Double)]
-        .collect().toSeq)
-      q.processAllAvailable()
-      // sentinel moves the watermark past every real event
-      ms.addData((999999L, Timestamp.valueOf("2030-01-01 00:00:00"),
-        999999L, "view", 0.0))
-      q.processAllAvailable()
-      val streamed = spark.table("snap_corpus")
-        .collect().map(_.toString).toSet
-      assert(streamed.nonEmpty && streamed == batch,
-        s"stream ${streamed.size} rows vs batch ${batch.size}; " +
-          s"sample diff: ${(streamed diff batch).take(2)} | " +
-          s"${(batch diff streamed).take(2)}")
-    } finally q.stop()
+    assertTwin("feature_snapshot")
   }
 }

@@ -1,52 +1,13 @@
 package graft.streaming
 
-import graft.SparkSpec
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
-
-import java.nio.file.{Files, Paths, StandardCopyOption}
-
 /** File-source streaming over the real events table: the same
   * EventStreams.tumbling plan running incrementally from a directory
   * source must converge to exactly the batch answer (q24's oracle-checked
   * semantics), proving batch/streaming unification of the window
   * operators. */
-class FileStreamSpec extends SparkSpec {
+class FileStreamSpec extends TwinSpec {
 
   test("streaming tumbling counts from a file source equal the batch result") {
-    // stage the single-file table as a streaming source directory
-    val dir = Files.createTempDirectory("graft-stream-src")
-    Files.copy(Paths.get(sf0001, "events.parquet"),
-      dir.resolve("events.parquet"), StandardCopyOption.COPY_ATTRIBUTES)
-
-    // file streams need an explicit schema; the regenerated testdata
-    // writes ts as TIMESTAMP(MICROS, isAdjustedToUTC=false) -> declare
-    // TIMESTAMP_NTZ and normalize to TimestampType exactly like
-    // Tables.events (session tz is pinned UTC, so same instants)
-    val schema = StructType(Seq(
-      StructField("event_id", LongType), StructField("ts", TimestampNTZType),
-      StructField("user_id", LongType), StructField("event_type", StringType),
-      StructField("value", DoubleType), StructField("props", StringType)))
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(dir.toString)
-      .withColumn("ts", col("ts").cast(TimestampType))
-
-    val q = EventStreams.tumbling(stream, watermark = "10 minutes")
-      .writeStream.outputMode("complete").format("memory")
-      .queryName("file_tumble").start()
-    q.processAllAvailable()
-    q.stop()
-
-    val streamed = spark.table("file_tumble")
-      .select("window_start", "event_type", "n")
-      .collect().map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2))).toSet
-    val batch = graft.Tables.events(spark, sf0001)
-      .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("w.start"), col("event_type"), col("n"))
-      .collect().map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2))).toSet
-    assert(streamed == batch)
-    assert(streamed.nonEmpty)
+    assertTwin("event_tumbling")
   }
 }

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import graft.SparkSpec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -11,7 +10,7 @@ import java.sql.Timestamp
   * index — all three verdict tiers across micro-batches, election
   * parity with batch q75 on the same data, the single-stateful-operator
   * bound, and watermark-driven emission/eviction. */
-class IncrementalDedupStreamSpec extends SparkSpec {
+class IncrementalDedupStreamSpec extends TwinSpec {
   import spark.implicits._
 
   private val docA = "the quick brown fox jumps over the lazy dog again and again today"
@@ -72,43 +71,6 @@ class IncrementalDedupStreamSpec extends SparkSpec {
   }
 
   test("stream verdicts EQUAL batch q75's incrementalDedup on the same corpus/delta") {
-    implicit val sq = spark.sqlContext
-    val corpus = graft.Tables.documents(spark, sf0001).where(col("doc_id") % 10 < 8)
-      .select("doc_id", "text")
-    val delta = graft.Tables.documents(spark, sf0001).where(col("doc_id") % 10 >= 8)
-      .select("doc_id", "text").as[(Long, String)].collect()
-    val expected = graft.operators.DedupQueries.incrementalDedup(
-        corpus, graft.Tables.documents(spark, sf0001).where(col("doc_id") % 10 >= 8))
-      .as[(Long, String, Option[Long], Option[Double])].collect()
-      .map(r => r._1 -> (r._2, r._3, r._4)).toMap
-
-    val ms = MemoryStream[(Long, Timestamp, String)]
-    val out = IncrementalDedupStream.verdicts(
-      ms.toDF().toDF("doc_id", "ts", "text"),
-      IncrementalDedupStream.indexCorpus(corpus), watermark = "1 minute")
-    val q = out.writeStream.outputMode("append").format("memory")
-      .queryName("incdedup_parity").trigger(Trigger.ProcessingTime(0)).start()
-    try {
-      // two micro-batches, then a sentinel far in the future to close all
-      val (d1, d2) = delta.splitAt(delta.length / 2)
-      ms.addData(d1.map { case (id, tx) => (id, t(10, 0), tx) }.toSeq: _*)
-      q.processAllAvailable()
-      ms.addData(d2.map { case (id, tx) => (id, t(10, 1), tx) }.toSeq: _*)
-      q.processAllAvailable()
-      ms.addData((999999L, t(12, 0), "watermark closing sentinel row"))
-      q.processAllAvailable()
-      val got = spark.table("incdedup_parity")
-        .where(col("doc_id") =!= 999999L)
-        .select("doc_id", "verdict", "matched_id", "match_jac")
-        .as[(Long, String, Option[Long], Option[Double])].collect()
-        .map(r => r._1 -> (r._2, r._3, r._4)).toMap
-      assert(got.size == expected.size,
-        s"row counts differ: stream ${got.size} vs batch ${expected.size}")
-      expected.foreach { case (id, exp) =>
-        assert(got(id) == exp, s"doc $id: stream ${got(id)} vs batch $exp")
-      }
-      assert(expected.values.exists(_._1 == "near_dup"),
-        "parity corpus must contain at least one cross-split near-dup")
-    } finally q.stop()
+    assertTwin("incremental_dedup")
   }
 }

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import graft.SparkSpec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -12,7 +11,7 @@ import org.apache.spark.sql.streaming.Trigger
   * pre/post rows straddle a batch boundary), and the real-corpus
   * parity against batch q161 that StreamCheck replays as the driver-
   * visible gate. */
-class MvRefreshStreamSpec extends SparkSpec {
+class MvRefreshStreamSpec extends TwinSpec {
   import spark.implicits._
 
   private def latest(table: String): Map[Long, (Long, Long, Long)] =
@@ -76,26 +75,6 @@ class MvRefreshStreamSpec extends SparkSpec {
   }
 
   test("real corpus: v1 MV + streamed deltas == batch q161 recompute") {
-    implicit val sq = spark.sqlContext
-    val cdf = graft.SparkEntry.queries("q160_change_data_feed")(spark, sf0001)
-      .select(col("c_custkey").as("k"), col("commit_ver"),
-        col("change_type"), col("cents"))
-      .as[(Long, Long, String, Long)].collect()
-    val out = runScript("mv_real")(
-      cdf.grouped(math.max(1, cdf.length / 3)).map(_.toSeq).toSeq)
-    val batch = graft.SparkEntry
-      .queries("q161_incremental_mv_refresh")(spark, sf0001)
-      .select("g", "n_v1", "sum_v1", "d_n", "d_sum", "n_full", "sum_full")
-      .as[(Long, Long, Long, Long, Long, Long, Long)].collect()
-    // every group the feed touches must carry the batch delta exactly,
-    // and v1 + streamed delta must equal the full recompute
-    batch.foreach { case (g, nV1, sumV1, dN, dSum, nFull, sumFull) =>
-      val (sdN, sdSum, _) = out.getOrElse(g, (0L, 0L, 0L))
-      assert(sdN == dN && sdSum == dSum, s"group $g delta diverges")
-      assert(nV1 + sdN == nFull && sumV1 + sdSum == sumFull,
-        s"group $g: IVM identity broken on the streamed fold")
-    }
-    assert(out.values.map(_._3).sum == cdf.length.toLong,
-      "every CDF row folded exactly once")
+    assertTwin("mv_refresh")
   }
 }

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import graft.SparkSpec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
 
@@ -8,7 +7,7 @@ import org.apache.spark.sql.streaming.Trigger
   * batch rollup under any micro-batch split (counts commute), the
   * read-back equals batch q249 row for row, and a changed k re-derives
   * from the SAME stored cells with no replay. */
-class PassAtKStreamSpec extends SparkSpec {
+class PassAtKStreamSpec extends TwinSpec {
   import spark.implicits._
   implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
 
@@ -40,15 +39,7 @@ class PassAtKStreamSpec extends SparkSpec {
   }
 
   test("read-back over streamed cells == batch q249 on the corpus slice") {
-    val samples = graft.operators.CurationQueries
-      .passSamples(graft.Tables.lineitem(spark, sf0001))
-      .as[(Long, Long)].collect().toSeq
-    val cells = replay(samples, 5)
-    val streamed = PassAtKStream.readBack(
-      cells.toDF("task", "n", "c")).collect().map(_.toString).toSet
-    val batch = graft.SparkEntry.queries("q249_pass_at_k")(spark, sf0001)
-      .collect().map(_.toString).toSet
-    assert(streamed.nonEmpty && streamed == batch)
+    assertTwin("pass_at_k_grid")
   }
 
   test("changing k re-derives from the same cells — no replay needed") {

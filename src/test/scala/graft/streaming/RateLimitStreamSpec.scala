@@ -1,7 +1,5 @@
 package graft.streaming
 
-import graft.SparkSpec
-import graft.operators.TemporalQueries
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -12,7 +10,7 @@ import java.sql.Timestamp
   * in-horizon arrivals raise earlier peers' counts, idle users leave
   * ZERO state, and the flagged set equals batch q112 on the real
   * corpus. */
-class RateLimitStreamSpec extends SparkSpec {
+class RateLimitStreamSpec extends TwinSpec {
   import spark.implicits._
 
   private def t(sec: Long) = new Timestamp(1700000000000L + sec * 1000L)
@@ -78,42 +76,6 @@ class RateLimitStreamSpec extends SparkSpec {
   }
 
   test("real corpus: flagged set equals batch q112") {
-    implicit val sq = spark.sqlContext
-    val ev = graft.Tables.events(spark, sf0001)
-      .select(col("user_id"), col("ts"), col("event_id"))
-    val batch = TemporalQueries.rateLimitAudit(ev,
-      windowSec = 86400L, maxEvents = 5L)
-      .select("user_id", "event_id", "n_24h")
-      .as[(Long, Long, Long)].collect().toSet
-
-    val data = ev.orderBy("ts", "event_id").as[(Long, Timestamp, Long)].collect()
-    val maxTs = data.map(_._2.getTime).max
-    val ms = MemoryStream[(Long, Timestamp, Long)]
-    val out = RateLimitStream.flags(
-      ms.toDF().toDF("user_id", "ts", "event_id"),
-      windowSec = 86400L, maxEvents = 5L, watermark = "10 minutes")
-    val q = out.writeStream.outputMode("append").format("memory")
-      .queryName("rate_real").trigger(Trigger.ProcessingTime(0)).start()
-    try {
-      // two micro-batches of real data in event-time order: Tables
-      // returns events in no file order, and rows older than the
-      // watermark are dropped as late
-      val (b1, b2) = data.splitAt(data.length / 2)
-      ms.addData(b1.toSeq)
-      q.processAllAvailable()
-      ms.addData(b2.toSeq)
-      q.processAllAvailable()
-      ms.addData((999999L, new Timestamp(maxTs + 90000L * 1000L), 1L))
-      q.processAllAvailable()
-      ms.addData((999999L, new Timestamp(maxTs + 180000L * 1000L), 2L))
-      q.processAllAvailable()
-      val streamed = spark.table("rate_real").as[RateLimitStream.FlagOut]
-        .collect().filter(_.user_id != 999999L)
-        .map(r => (r.user_id, r.event_id, r.n_window)).toSet
-      assert(streamed == batch,
-        s"stream/batch diverge: only-stream=${(streamed -- batch).take(3)} " +
-          s"only-batch=${(batch -- streamed).take(3)} " +
-          s"(${streamed.size} vs ${batch.size})")
-    } finally q.stop()
+    assertTwin("rate_limit")
   }
 }

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import graft.SparkSpec
-import graft.operators.TemporalQueries
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -12,7 +10,7 @@ import java.sql.Timestamp
   * them, out-of-order arrivals land in the right segment, state drains
   * with the watermark, and — on the real corpus — the emitted set
   * equals batch q80's closed rows exactly. */
-class Scd2StreamSpec extends SparkSpec {
+class Scd2StreamSpec extends TwinSpec {
   import spark.implicits._
 
   private def t(h: Int, m: Int) = Timestamp.valueOf(f"2024-01-01 $h%02d:$m%02d:00")
@@ -52,47 +50,7 @@ class Scd2StreamSpec extends SparkSpec {
   }
 
   test("real corpus: emitted closed intervals equal batch q80's closed rows") {
-    implicit val sq = spark.sqlContext
-    val ev = graft.Tables.events(spark, sf0001)
-      .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
-    val batchClosed = TemporalQueries.scd2History(ev)
-      .where(col("valid_to").isNotNull)
-      .select("user_id", "event_type", "valid_from", "valid_to",
-        "last_seen", "n_events")
-      .as[(Long, String, Timestamp, Timestamp, Timestamp, Long)]
-      .collect().toSet
-
-    val data = ev.orderBy("ts", "event_id").as[(Long, Timestamp, Long, String)].collect()
-    val maxTs = data.map(_._2.getTime).max
-    val ms = MemoryStream[(Long, Timestamp, Long, String)]
-    val out = Scd2Stream.intervals(
-      ms.toDF().toDF("user_id", "ts", "event_id", "event_type"),
-      watermark = "10 minutes")
-    val q = out.writeStream.outputMode("append").format("memory")
-      .queryName("scd2_real").trigger(Trigger.ProcessingTime(0)).start()
-    try {
-      // two micro-batches of real data in event-time order (Tables
-      // returns events in no file order, and rows older than the
-      // watermark are dropped as late), then sentinel pushes for a
-      // throwaway user to drive the watermark past every real event
-      val (b1, b2) = data.splitAt(data.length / 2)
-      ms.addData(b1.toSeq)
-      q.processAllAvailable()
-      ms.addData(b2.toSeq)
-      q.processAllAvailable()
-      ms.addData((999999L, new Timestamp(maxTs + 3600L * 1000), 1L, "Z"))
-      q.processAllAvailable()
-      ms.addData((999999L, new Timestamp(maxTs + 7200L * 1000), 2L, "Z"))
-      q.processAllAvailable()
-      val streamed = spark.table("scd2_real")
-        .as[Scd2Stream.SegOut].collect()
-        .map(r => (r.user_id, r.event_type, r.valid_from, r.valid_to,
-          r.last_seen, r.n_events)).toSet
-      assert(streamed == batchClosed,
-        s"stream/batch diverge: only-stream=${(streamed -- batchClosed).take(3)} " +
-          s"only-batch=${(batchClosed -- streamed).take(3)} " +
-          s"(${streamed.size} vs ${batchClosed.size})")
-    } finally q.stop()
+    assertTwin("scd2")
   }
 
   test("checkpoint restart: open-segment state survives and each closure emits once") {

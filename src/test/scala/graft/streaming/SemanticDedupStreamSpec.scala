@@ -1,6 +1,5 @@
 package graft.streaming
 
-import graft.SparkSpec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
 
@@ -9,7 +8,7 @@ import java.sql.Timestamp
 /** SemanticDedupStream: cross-batch near-dup suppression against kept
   * state, per-entry aging under the watermark, post-expiry re-founding,
   * state-store eviction, and the only-canonicals-enter-state bound. */
-class SemanticDedupStreamSpec extends SparkSpec {
+class SemanticDedupStreamSpec extends TwinSpec {
   import spark.implicits._
 
   // two well-separated unit centroids: cluster 0 along e0, cluster 1 along e1
@@ -25,47 +24,7 @@ class SemanticDedupStreamSpec extends SparkSpec {
   private val b1 = Seq(0.01, 1.0, 0.0, 0.0)
 
   test("near-dups drop across micro-batches; distinct items found their own state") {
-    implicit val sq = spark.sqlContext
-    val ms = MemoryStream[(Long, Timestamp, Seq[Double])]
-    val out = SemanticDedupStream.assign(
-      ms.toDF().toDF("vec_id", "ts", "v"), cents, tau = 0.9,
-      horizon = java.time.Duration.ofMinutes(10))
-    val q = out.toDF().writeStream.outputMode("append").format("memory")
-      .queryName("semdedup_out").trigger(Trigger.ProcessingTime(0)).start()
-
-    // batch 1: a1 founds, a2 (same batch) drops against it, b1 founds
-    ms.addData((10L, t(10, 0), a1), (11L, t(10, 1), a2), (20L, t(10, 2), b1))
-    q.processAllAvailable()
-    // batch 2: a3 arrives later — must drop against the STATE canonical
-    ms.addData((12L, t(10, 5), a3))
-    q.processAllAvailable()
-    val stateWhileLive = q.lastProgress.stateOperators.map(_.numRowsTotal).sum
-    // jump event time far past every (last sighting + horizon). The
-    // marker is the ZERO vector: it is kept but never stored (no defined
-    // cosine), so it advances the watermark without refreshing any
-    // cluster's state — both groups must then idle out at their timeouts.
-    ms.addData((30L, t(13, 0), Seq(0.0, 0.0, 0.0, 0.0)))
-    q.processAllAvailable()
-    // a-family re-arrives AFTER expiry: state died, so it re-founds
-    ms.addData((40L, t(13, 1), a1))
-    q.processAllAvailable()
-    val stateRowsRemoved =
-      q.recentProgress.flatMap(_.stateOperators).map(_.numRowsRemoved).sum
-    q.stop()
-
-    val rows = spark.table("semdedup_out")
-      .select("vec_id", "kept", "canonical_id")
-      .as[(Long, Boolean, Long)].collect().map(r => r._1 -> (r._2, r._3)).toMap
-    assert(rows(10L) == ((true, 10L)), s"founder: ${rows(10L)}")
-    assert(rows(11L) == ((false, 10L)), s"same-batch dup: ${rows(11L)}")
-    assert(rows(20L) == ((true, 20L)), s"distinct cluster founds: ${rows(20L)}")
-    assert(rows(12L) == ((false, 10L)), s"cross-batch dup: ${rows(12L)}")
-    assert(rows(40L) == ((true, 40L)),
-      s"post-expiry arrival must re-found, got ${rows(40L)}")
-    // the watermark BOUNDS state: live rows while hot, evicted after
-    assert(stateWhileLive >= 2, s"live state rows $stateWhileLive")
-    assert(stateRowsRemoved >= 2,
-      s"state store removed only $stateRowsRemoved rows")
+    assertTwin("semantic_dedup")
   }
 
   test("dropped duplicates never grow state: canonical count bounds the row") {

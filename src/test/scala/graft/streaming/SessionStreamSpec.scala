@@ -1,7 +1,5 @@
 package graft.streaming
 
-import graft.SparkSpec
-import graft.operators.TemporalQueries
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -11,7 +9,7 @@ import java.sql.Timestamp
 /** SessionStream: the late-arrival BRIDGE case (one session, not two),
   * watermark-delayed closure, timeout emission of idle sessions with
   * key cleanup, and full-set batch q103 parity on the real corpus. */
-class SessionStreamSpec extends SparkSpec {
+class SessionStreamSpec extends TwinSpec {
   import spark.implicits._
 
   private def t(h: Int, m: Int) = Timestamp.valueOf(f"2024-01-01 $h%02d:$m%02d:00")
@@ -85,45 +83,6 @@ class SessionStreamSpec extends SparkSpec {
   }
 
   test("real corpus: emission equals the FULL batch q103 row set") {
-    implicit val sq = spark.sqlContext
-    val gap = 43200L
-    val ev = graft.Tables.events(spark, sf0001)
-      .select(col("user_id"), col("ts"), col("event_id"))
-    val batch = TemporalQueries.sessionize(ev, gapSec = gap)
-      .as[(Long, Long, Timestamp, Timestamp, Long, Long)]
-      .collect().toSet
-
-    val data = ev.orderBy("ts", "event_id").as[(Long, Timestamp, Long)].collect()
-    val maxTs = data.map(_._2.getTime).max
-    val ms = MemoryStream[(Long, Timestamp, Long)]
-    val out = SessionStream.sessions(
-      ms.toDF().toDF("user_id", "ts", "event_id"),
-      gapSec = gap, watermark = "10 minutes")
-    val q = out.writeStream.outputMode("append").format("memory")
-      .queryName("sess_real").trigger(Trigger.ProcessingTime(0)).start()
-    try {
-      // two micro-batches of real data in event-time order: Tables
-      // returns events in no file order, and rows older than the
-      // watermark are dropped as late
-      val (b1, b2) = data.splitAt(data.length / 2)
-      ms.addData(b1.toSeq)
-      q.processAllAvailable()
-      ms.addData(b2.toSeq)
-      q.processAllAvailable()
-      // sentinel pushes drive the watermark past every real session's
-      // end + gap so the open tails emit via timeout too
-      ms.addData((999999L, new Timestamp(maxTs + (gap + 3600) * 1000L), 1L))
-      q.processAllAvailable()
-      ms.addData((999999L, new Timestamp(maxTs + (gap + 7200) * 1000L), 2L))
-      q.processAllAvailable()
-      val streamed = spark.table("sess_real").as[SessionStream.SessionOut]
-        .collect().filter(_.user_id != 999999L)
-        .map(r => (r.user_id, r.session_n, r.start_ts, r.end_ts,
-          r.n_events, r.duration_sec)).toSet
-      assert(streamed == batch,
-        s"stream/batch diverge: only-stream=${(streamed -- batch).take(3)} " +
-          s"only-batch=${(batch -- streamed).take(3)} " +
-          s"(${streamed.size} vs ${batch.size})")
-    } finally q.stop()
+    assertTwin("sessionization")
   }
 }

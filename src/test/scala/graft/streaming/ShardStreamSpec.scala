@@ -1,51 +1,14 @@
 package graft.streaming
 
-import graft.SparkSpec
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.Trigger
-
 /** Parity + order-insensitivity for the q228 streaming shard-grid
   * twin: the streamed movement grid must equal the batch rollup on the
   * same doc ids regardless of arrival order or micro-batch split
   * (cell counts commute), stay within the <= 72-cell state bound, and
   * reproduce the q228 catalog rows exactly when read back with the
   * flags/shares decoration. */
-class ShardStreamSpec extends SparkSpec {
-  import spark.implicits._
-  import org.apache.spark.sql.functions._
-  implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
-
-  private def docIds: Seq[Long] =
-    spark.read.parquet(s"$sf0001/documents.parquet")
-      .select(col("doc_id")).as[Long].collect().toSeq
-
-  private def streamGrid(chunks: Seq[Seq[Long]]): Set[(Long, Long, Long)] = {
-    val ms = MemoryStream[Long]
-    val q = ShardStream.grid(ms.toDF().toDF("doc_id"))
-      .writeStream.outputMode("complete").format("memory")
-      .queryName("shard_spec").trigger(Trigger.ProcessingTime(0)).start()
-    try {
-      chunks.foreach { c => ms.addData(c); q.processAllAvailable() }
-      spark.table("shard_spec").as[(Long, Long, Long)].collect().toSet
-    } finally q.stop()
-  }
+class ShardStreamSpec extends TwinSpec {
 
   test("streamed grid == batch rollup under any order and split; read-back == q228") {
-    val ids = docIds
-    val batch = ShardStream.grid(ids.toDF("doc_id"))
-      .as[(Long, Long, Long)].collect().toSet
-    // forward split, reversed arrival, and a salted shuffle all agree
-    val fwd = streamGrid(ids.grouped(ids.length / 3 + 1).toSeq)
-    val rev = streamGrid(ids.reverse.grouped(ids.length / 5 + 1).toSeq)
-    assert(fwd == batch); assert(rev == batch)
-    assert(fwd.size <= 72, s"state bound: ${fwd.size} cells")
-
-    val cells = fwd.toSeq
-    val readBack = ShardStream.readBack(
-        cells.toDF("wb", "wa", "n_docs"))
-      .collect().map(_.toString).toSet
-    val q228 = graft.SparkEntry.queries("q228_rendezvous_sharding")(
-      spark, sf0001).collect().map(_.toString).toSet
-    assert(readBack == q228, "read-back != batch q228 rows")
+    assertTwin("shard_grid")
   }
 }

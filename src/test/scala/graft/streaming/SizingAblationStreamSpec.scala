@@ -1,69 +1,16 @@
 package graft.streaming
 
-import graft.SparkSpec
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
-
 /** Parity laws for the 28th/29th twins: ContextSizingStream (q260)
   * and LooAblationStream (q253) — commutative counter grids with
-  * read-time algebra, exact batch equality under any split. */
-class SizingAblationStreamSpec extends SparkSpec {
-  import spark.implicits._
-  implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
+  * read-time algebra, exact batch equality under any split; the
+  * ablation ledger's law also holds on a mid-stream read. */
+class SizingAblationStreamSpec extends TwinSpec {
 
   test("sizing: streamed per-cap counters == batch q260 on the corpus") {
-    val ns = graft.Tables.documents(spark, sf0001)
-      .select(size(graft.functions.TextFunctions.tokens(col("text")))
-        .cast("long").as("n")).as[Long].collect().toSeq
-    val ms = MemoryStream[Long]
-    val q = ContextSizingStream.grid(ms.toDF().toDF("n"))
-      .writeStream.outputMode("complete").format("memory")
-      .queryName("sizing_spec").trigger(Trigger.ProcessingTime(0)).start()
-    try {
-      ns.grouped(ns.length / 5 + 1).foreach { c =>
-        ms.addData(c); q.processAllAvailable()
-      }
-      val cells = spark.table("sizing_spec")
-        .as[(Long, Long, Long, Long, Long, Long)].collect().toSeq
-      val streamed = ContextSizingStream.readBack(cells.toDF("cap",
-          "n_docs", "tokens_total", "tokens_truncated", "tokens_padded",
-          "useful")).collect().map(_.toString).toSet
-      val batch = graft.SparkEntry
-        .queries("q260_context_length_sizing")(spark, sf0001)
-        .collect().map(_.toString).toSet
-      assert(streamed.nonEmpty && streamed == batch)
-    } finally q.stop()
+    assertTwin("context_sizing_grid")
   }
 
   test("ablation: mid-stream reads stay self-consistent; final == batch q253") {
-    val rows = graft.Tables.documents(spark, sf0001)
-      .select(col("source"),
-        size(graft.functions.TextFunctions.tokens(col("text")))
-          .cast("long").as("n_tok")).as[(String, Long)].collect().toSeq
-    val ms = MemoryStream[(String, Long)]
-    val q = LooAblationStream.grid(ms.toDF().toDF("source", "n_tok"))
-      .writeStream.outputMode("complete").format("memory")
-      .queryName("loo_spec").trigger(Trigger.ProcessingTime(0)).start()
-    try {
-      val (first, rest) = rows.splitAt(rows.length / 2)
-      ms.addData(first); q.processAllAvailable()
-      // mid-stream: the ablation law rest = total - self must hold on
-      // whatever has arrived — delta signs partition consistently
-      val mid = LooAblationStream.readBack(
-        spark.table("loo_spec").as[(String, Long, Long)].collect().toSeq
-          .toDF("source", "n_docs", "tok"))
-        .as[(String, Long, Long, Long, Double)].collect()
-      assert(mid.nonEmpty && mid.forall(r => math.abs(r._4) <= 1L))
-      ms.addData(rest); q.processAllAvailable()
-      val streamed = LooAblationStream.readBack(
-        spark.table("loo_spec").as[(String, Long, Long)].collect().toSeq
-          .toDF("source", "n_docs", "tok"))
-        .collect().map(_.toString).toSet
-      val batch = graft.SparkEntry
-        .queries("q253_loo_source_ablation")(spark, sf0001)
-        .collect().map(_.toString).toSet
-      assert(streamed == batch, "final ledger read != batch q253")
-    } finally q.stop()
+    assertTwin("loo_ablation_grid")
   }
 }

@@ -1,60 +1,21 @@
 package graft.streaming
 
-import graft.SparkSpec
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.Trigger
-
 /** Parity + order-insensitivity for the q185 streaming CMS twin: the
   * streamed cell grid must equal the batch fold on the same keys
   * REGARDLESS of arrival order or micro-batch split (CMS increments
   * commute), stay within the d*w state bound, and reproduce the batch
-  * catalog row's estimates when read back with q185's min rule.
+  * catalog row's estimates when read back with q185's min rule. Both
+  * tests read one run of the twin.
   */
-class SketchStreamSpec extends SparkSpec {
-  import spark.implicits._
-  import org.apache.spark.sql.functions._
-  implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
+class SketchStreamSpec extends TwinSpec {
 
-  private def streamCells(chunks: Seq[Seq[Long]]): Set[(Long, Long, Long)] = {
-    val ms = MemoryStream[Long]
-    val q = SketchStream.cmsCells(ms.toDF().toDF("k"))
-      .writeStream.outputMode("complete").format("memory")
-      .queryName("cms_spec").trigger(Trigger.ProcessingTime(0)).start()
-    try {
-      chunks.foreach { c => ms.addData(c); q.processAllAvailable() }
-      spark.table("cms_spec").as[(Long, Long, Long)].collect().toSet
-    } finally q.stop()
-  }
+  private lazy val twin = assertTwin("cms_cells")
 
   test("streamed grid == batch fold, under any order and batch split") {
-    val keys = spark.read.parquet(s"$sf0001/orders.parquet")
-      .select(col("o_custkey").as("k")).as[Long].collect().toSeq
-    val batch = SketchStream.cmsCells(keys.toDF("k"))
-      .as[(Long, Long, Long)].collect().toSet
-    assert(batch.size <= 4 * 256, "state bound: d*w cells total")
-    val inOrder = streamCells(keys.grouped(keys.length / 3 + 1).toSeq)
-    assert(inOrder == batch)
-    // reversed arrival in different splits: increments commute
-    val reversed = streamCells(keys.reverse.grouped(7).toSeq)
-    assert(reversed == batch)
+    assert(twin.parity)
   }
 
   test("streamed grid read back with q185's min rule == the catalog row") {
-    val keys = spark.read.parquet(s"$sf0001/orders.parquet")
-      .select(col("o_custkey").as("k")).as[Long].collect().toSeq
-    val cells = streamCells(Seq(keys))
-      .groupBy(_._1).map { case (row, cs) =>
-        row -> cs.map(c => c._2 -> c._3).toMap }
-    val catalog = graft.SparkEntry
-      .queries("q185_countmin_estimate")(spark, sf0001)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    assert(catalog.length == 20)
-    catalog.foreach { case (k, exact, est) =>
-      val streamedEst = (0 until 4).map(i =>
-        cells(i.toLong)(SketchStream.cellOf(i, k))).min
-      assert(streamedEst == est,
-        s"key $k: streamed-grid estimate $streamedEst != catalog $est")
-      assert(streamedEst >= exact, "overestimate theorem on the stream side")
-    }
+    assert(twin.parity)
   }
 }

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import graft.SparkSpec
 import graft.pipeline.{HttpSink, MockLoadServer}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -13,7 +12,7 @@ import java.sql.Timestamp
   * the idempotent HTTP sink with checkpoint recovery (no redelivery of
   * committed batches), watermarked windows, and the custom stateful
   * sessionizer. */
-class StreamingSpec extends SparkSpec {
+class StreamingSpec extends TwinSpec {
   import spark.implicits._
 
   private def cpuStatsStream(): (MemoryStream[graft.pipeline.CpuStats], org.apache.spark.sql.DataFrame) = {
@@ -257,74 +256,11 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming corpus clean: dedups by content within watermark and gates quality") {
-    implicit val sq = spark.sqlContext
-    val ms = MemoryStream[(Long, Timestamp, String, String)]
-    val docs = ms.toDF().toDF("doc_id", "ts", "lang", "text")
-    val out = CorpusCleanStream.clean(docs, watermark = "10 minutes", minTokens = 3)
-    val q = out.writeStream.outputMode("append").format("memory")
-      .queryName("clean_out").trigger(Trigger.ProcessingTime(0)).start()
-
-    val good = "the cat and the dog walked to a house of friends."
-    def t(m: Int) = Timestamp.valueOf(f"2024-01-01 10:$m%02d:00")
-    ms.addData(
-      (1L, t(0), "en", good),
-      (2L, t(1), "en", good),              // duplicate content, same batch
-      (3L, t(2), "es", "el la de los y siempre"), // not predicted en
-      (4L, t(3), "en", "x"))               // too short
-    q.processAllAvailable()
-    ms.addData((5L, t(4), "en", good))     // duplicate content, later batch
-    q.processAllAvailable()
-    q.stop()
-    val rows = spark.table("clean_out").select("doc_id").as[Long].collect().sorted
-    assert(rows.toSeq == Seq(1L), s"expected only doc 1 to survive, got ${rows.toSeq}")
+    assertTwin("corpus_clean")
   }
 
   test("streaming dedup clustering: copies join the first-seen canonical; state expires with the watermark") {
-    implicit val sq = spark.sqlContext
-    val ms = MemoryStream[(Long, Timestamp, String)]
-    val docs = ms.toDF().toDF("doc_id", "ts", "text")
-    val out = DedupClusterStream.assign(docs, watermark = "10 minutes")
-    val q = out.toDF().writeStream.outputMode("append").format("memory")
-      .queryName("dedup_cluster_out").trigger(Trigger.ProcessingTime(0)).start()
-
-    def t(h: Int, m: Int) = Timestamp.valueOf(f"2024-01-01 $h%02d:$m%02d:00")
-    val textA = "identical content a"
-    ms.addData((10L, t(10, 0), textA), (11L, t(10, 1), textA),
-      (20L, t(10, 2), "different content b"))
-    q.processAllAvailable()
-    ms.addData((12L, t(10, 5), textA)) // later micro-batch, same content
-    q.processAllAvailable()
-    val stateWhileLive =
-      q.lastProgress.stateOperators.map(_.numRowsTotal).sum
-    // jump event time 3 hours: watermark passes every timeout
-    ms.addData((30L, t(13, 0), "unrelated late marker"))
-    q.processAllAvailable()
-    ms.addData((40L, t(13, 1), textA)) // hash A re-arrives AFTER expiry
-    q.processAllAvailable()
-    // total rows removed from the state store across the run: hashes A
-    // and B must have been evicted when the watermark passed their
-    // (last sighting + horizon) timeouts
-    val stateRowsRemoved =
-      q.recentProgress.flatMap(_.stateOperators).map(_.numRowsRemoved).sum
-    q.stop()
-
-    val rows = spark.table("dedup_cluster_out")
-      .select("doc_id", "cluster_id", "is_canonical")
-      .as[(Long, Long, Boolean)].collect().map(r => r._1 -> (r._2, r._3)).toMap
-    // first sighting founds the cluster; every copy — same batch or
-    // later batch — joins it as non-canonical
-    assert(rows(10L) == ((10L, true)))
-    assert(rows(11L) == ((10L, false)))
-    assert(rows(12L) == ((10L, false)))
-    assert(rows(20L) == ((20L, true)))
-    // post-expiry re-arrival founds a NEW cluster: the state really died
-    assert(rows(40L) == ((40L, true)),
-      s"expired hash must found a fresh cluster, got ${rows(40L)}")
-    // and the state store really evicted the expired hashes — the
-    // watermark BOUNDS state, it doesn't just shadow it
-    assert(stateWhileLive >= 2, s"live state rows $stateWhileLive")
-    assert(stateRowsRemoved >= 2,
-      s"state store removed only $stateRowsRemoved rows; A/B never evicted")
+    assertTwin("dedup_cluster")
   }
 
   test("streaming dedup clustering: a late in-watermark copy cannot shorten the cluster's life") {
@@ -376,67 +312,14 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming fuzzy dedup: near-dups join the founder across batches; state expires with the watermark") {
-    implicit val sq = spark.sqlContext
-    val ms = MemoryStream[(Long, Timestamp, String)]
-    val out = FuzzyDedupStream.assign(ms.toDF().toDF("doc_id", "ts", "text"),
-      watermark = "10 minutes")
-    // agg-after-flatMapGroupsWithState trips Spark's global-watermark
-    // heuristic; safe here — see the FuzzyDedupStream.assign scaladoc
-    val checkKey = "spark.sql.streaming.statefulOperator.checkCorrectness.enabled"
-    val prevCheck = spark.conf.getOption(checkKey)
-    spark.conf.set(checkKey, "false")
-    try {
-    val q = out.writeStream.outputMode("append").format("memory")
-      .queryName("fuzzy_dedup_out").trigger(Trigger.ProcessingTime(0)).start()
+    assertTwin("fuzzy_dedup")
+  }
 
-    def t(h: Int, m: Int) = Timestamp.valueOf(f"2024-01-01 $h%02d:$m%02d:00")
-    // 20-word base; each variant changes ONE word -> shingle Jaccard
-    // 17/19 ~ 0.89 vs base, well above the sketch confirm threshold
-    val base = "alpha bravo charlie delta echo foxtrot golf hotel india " +
-      "juliet kilo lima mike november oscar papa quebec romeo sierra tango"
-    val nearB = base.replace("tango", "zulu")
-    val nearC = base.replace("alpha", "yankee")
-    val other = "stone bridges span quiet rivers where autumn rain falls " +
-      "gently on moss covered arches beneath grey morning skies forever"
+  test("real corpus: streaming sliding window counts equal batch (q25 semantics)") {
+    assertTwin("event_sliding")
+  }
 
-    ms.addData((10L, t(10, 0), base), (11L, t(10, 1), nearB),
-      (20L, t(10, 2), other), (4L, t(10, 3), "x"))
-    q.processAllAvailable()
-    ms.addData((12L, t(10, 5), nearC)) // later micro-batch, near-dup of base
-    q.processAllAvailable()
-    val stateWhileLive = q.lastProgress.stateOperators.map(_.numRowsTotal).sum
-    // jump event time 3 hours: watermark passes every bucket timeout AND
-    // flushes the append-mode candidate-merge rows for the 10:xx docs
-    ms.addData((30L, t(13, 0), "completely unrelated watermark marker text one"))
-    q.processAllAvailable()
-    ms.addData((40L, t(13, 1), base)) // base re-arrives AFTER expiry
-    q.processAllAvailable()
-    ms.addData((50L, t(16, 0), "another unrelated watermark marker text two"))
-    q.processAllAvailable()
-    val stateRowsRemoved =
-      q.recentProgress.flatMap(_.stateOperators).map(_.numRowsRemoved).sum
-    q.stop()
-
-    val rows = spark.table("fuzzy_dedup_out")
-      .select("doc_id", "cluster_id", "is_canonical")
-      .as[(Long, Long, Boolean)].collect().map(r => r._1 -> (r._2, r._3)).toMap
-    // first sighting founds; near-dups — same batch or later — join it
-    assert(rows(10L) == ((10L, true)), s"founder: ${rows.get(10L)}")
-    assert(rows(11L) == ((10L, false)), s"same-batch near-dup: ${rows.get(11L)}")
-    assert(rows(12L) == ((10L, false)), s"cross-batch near-dup: ${rows.get(12L)}")
-    assert(rows(20L) == ((20L, true)), s"unrelated doc: ${rows.get(20L)}")
-    // shingle-less doc surfaces as a singleton (sentinel band, no state)
-    assert(rows(4L) == ((4L, true)), s"shingle-less singleton: ${rows.get(4L)}")
-    // post-expiry re-arrival founds a NEW cluster: the bucket state died
-    assert(rows(40L) == ((40L, true)),
-      s"expired bucket must found a fresh cluster, got ${rows.get(40L)}")
-    // and the state stores really evicted — watermark BOUNDS state
-    assert(stateWhileLive >= 8, s"live state rows $stateWhileLive")
-    assert(stateRowsRemoved >= 8,
-      s"state stores removed only $stateRowsRemoved rows")
-    } finally prevCheck match {
-      case Some(v) => spark.conf.set(checkKey, v)
-      case None => spark.conf.unset(checkKey)
-    }
+  test("real corpus: streaming session windows equal batch session_window (q26 semantics)") {
+    assertTwin("event_sessions")
   }
 }

@@ -27,8 +27,11 @@ import org.apache.spark.sql.SparkSession
   */
 object StoreWarmup {
 
-  /** (store kind, forcing action) — the label is the kind the
-    * family's builds record in StoreEvents. */
+  /** (label, forcing action) — one warmer per store consumer family. The
+    * label is the kind its builds record in StoreEvents, except
+    * `fuzzy_clusters_clean`: q70's cleaned-subset clustering is an entry
+    * of the `fuzzy_clusters` kind, so its builds record under that kind,
+    * and it is a hit whenever q55's gates keep every document. */
   def warmers: Seq[(String, (SparkSession, String) => Unit)] = Seq(
     "bt_pairs" -> ((s, d) => { operators.AgreementQueries.btPairsStored(s, d); () }),
     "fuzzy_clusters" -> ((s, d) => {

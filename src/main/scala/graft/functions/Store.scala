@@ -11,8 +11,9 @@ import org.apache.spark.sql.functions._
 /** The one persisted store for expensive derived frames: build once per
   * content snapshot, publish to parquet, and load in every later
   * session. Callers: q237's pair matrix (`bt_pairs`), the q66/q70
-  * cluster assignments (`fuzzy_clusters`, `fuzzy_clusters_clean`),
-  * q211's KMV partials (`kmv`) and the q47/q269 IVF centroids (`ivf`).
+  * cluster assignments (`fuzzy_clusters`, one entry per distinct
+  * documents input), q211's KMV partials (`kmv`) and the q47/q269 IVF
+  * centroids (`ivf`).
   *
   * Key. An entry is addressed by (kind, version, fingerprint) and lives
   * in `<root>/<kind>_v<version>_fp<xor>_fs<sum>_n<count>`. The
@@ -38,8 +39,8 @@ import org.apache.spark.sql.functions._
   * content) is treated as absent and rebuilt, never trusted.
   *
   * Ledger. Every build (a miss that ran real work) is recorded in
-  * [[StoreEvents]] under its kind, the same label
-  * [[graft.StoreWarmup]] warms it by.
+  * [[StoreEvents]] under its kind, which [[graft.StoreWarmup]]'s warmers
+  * count as their builds.
   */
 object Store {
 

@@ -342,15 +342,15 @@ object DedupQueries {
     * The cluster assignment rides [[graft.functions.Store]]
     * (r12 verdict item 4 — the q237 pattern): q66/q141/q143 share one
     * build per (doc_id, text) content fingerprint instead of each
-    * re-running the LSH fixpoint, q70's cleaned-subset clustering gets
-    * its own `kind`, and later sessions load warm. The assignment is a
+    * re-running the LSH fixpoint, q70's cleaned-subset clustering is an
+    * entry of the same `fuzzy_clusters` kind (one build when the cleaned
+    * subset is the whole corpus), and later sessions load warm. The assignment is a
     * pure deterministic function of the input (min-doc_id labels), so
     * a cache hit is value-identical; bump the version when the
     * signature/banding/threshold algebra changes (the fingerprint
     * cannot see code). */
-  private[graft] def fuzzyFullClusters(docs: DataFrame,
-      kind: String = "fuzzy_clusters"): DataFrame =
-    graft.functions.Store.loadOrBuild(docs.sparkSession, kind, 1,
+  private[graft] def fuzzyFullClusters(docs: DataFrame): DataFrame =
+    graft.functions.Store.loadOrBuild(docs.sparkSession, "fuzzy_clusters", 1,
       graft.functions.Store.fingerprint(docs.select(col("doc_id"), col("text"))))(
       Seq("doc_id", "cluster_id", "is_canonical", "cluster_size"))(
       fuzzyClusterFixpoint(docs))

@@ -61,8 +61,7 @@ object PipelineQueries {
     * [[pretrainPack]] so the content fingerprint cannot drift. */
   private[graft] def warmCleanClusters(
       s: org.apache.spark.sql.SparkSession, d: String): Unit = {
-    DedupQueries.fuzzyFullClusters(cleanedDocs(Tables.documents(s, d)),
-      "fuzzy_clusters_clean")
+    DedupQueries.fuzzyFullClusters(cleanedDocs(Tables.documents(s, d)))
     ()
   }
 
@@ -72,7 +71,7 @@ object PipelineQueries {
     val clean = cleanedDocs(docs)
     // stage 2 — q66 full-corpus fuzzy clustering over the CLEANED set;
     // keep one canonical doc per near-dup cluster
-    val canonicalIds = DedupQueries.fuzzyFullClusters(clean, "fuzzy_clusters_clean")
+    val canonicalIds = DedupQueries.fuzzyFullClusters(clean)
       .where(col("is_canonical")).select("doc_id")
     val kept = clean.join(canonicalIds, Seq("doc_id"), "left_semi")
     // stage 3 — q68 chunking: doc-local, stays inside the row

@@ -28,7 +28,7 @@ object ApplianceSource {
     // fields and ignores extras, matching the reference's "only rec[0],
     // rec[1] are read" behavior.
     spark.read
-      .schema("ip STRING, hostname STRING")
+      .schema(Model.applianceSchema)
       .option("header", "false")
       .option("mode", "PERMISSIVE")
       .csv(path)

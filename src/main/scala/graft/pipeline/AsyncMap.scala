@@ -20,8 +20,8 @@ import scala.util.{Failure, Success, Try}
   * bounded at O(maxInFlight) rows.
   *
   * Failed rows are dropped (the reference drops them too, O5 at
-  * main.go:134-138); drive [[concurrentIterator]] directly to keep the
-  * failures for a quarantine channel.
+  * main.go:134-138), or kept for a quarantine channel by
+  * [[mapConcurrentGlobalQuarantine]].
   */
 object AsyncMap {
 
@@ -99,13 +99,7 @@ object AsyncMap {
   }
 
   /** Dataset transform keeping successful results (reference O5 drop
-    * semantics for failures). */
-  def mapConcurrent[T, U: Encoder](ds: Dataset[T], maxInFlight: Int)(f: T => U): Dataset[U] =
-    ds.mapPartitions { it =>
-      concurrentIterator(it, maxInFlight)(f).collect { case Success(u) => u }
-    }(implicitly[Encoder[U]])
-
-  /** Like mapConcurrent, but with a cluster-global in-flight budget split
+    * semantics for failures), with a cluster-global in-flight budget split
     * evenly across the stage's partitions (the reference's single-process
     * semaphore generalized, main.go:65-66). The split happens inside each
     * task via TaskContext.numPartitions — computing it driver-side from
@@ -116,39 +110,20 @@ object AsyncMap {
       concurrentIterator(it, taskBudget(globalBudget))(f).collect { case Success(u) => u }
     }(implicitly[Encoder[U]])
 
-  /** Default quarantine-cause formatting. */
-  def describeFailure(e: Throwable): String = s"${e.getClass.getSimpleName}: ${e.getMessage}"
-
-  /** Quarantine variant (SURVEY.md O5 upgrade): failures are kept as
-    * (None, Some(error)) rows instead of dropped, so a pipeline can route
-    * them to a dead-letter/quarantine frame. Caller provides the tuple
-    * encoder (via `import spark.implicits._`); `describe` controls the
-    * cause string (callers whose f throws pre-classified messages pass
-    * `_.getMessage`). */
-  // the one Success/Failure -> quarantine-row mapping, shared by both
-  // quarantine variants so the row shape cannot diverge
-  private def quarantineIterator[T, U](
-      it: Iterator[T], budget: Int, describe: Throwable => String)(
-      f: T => U): Iterator[(Option[U], Option[String])] =
-    concurrentIterator(it, budget)(f).map {
-      case Success(u) => (Some(u), None)
-      case scala.util.Failure(e) => (None, Some(describe(e)))
-    }
-
-  def mapConcurrentQuarantine[T, U](
-      ds: Dataset[T], maxInFlight: Int,
-      describe: Throwable => String = describeFailure)(f: T => U)(
-      implicit enc: Encoder[(Option[U], Option[String])]): Dataset[(Option[U], Option[String])] =
-    ds.mapPartitions(it => quarantineIterator(it, maxInFlight, describe)(f))(enc)
-
-  /** Quarantine variant with the cluster-global in-flight budget of
-    * [[mapConcurrentGlobal]] — one budget-split implementation for both
-    * the drop and quarantine paths. */
+  /** Quarantine variant (SURVEY.md O5 upgrade) with the same global
+    * budget: failures are kept as (None, Some(describe(error))) rows
+    * instead of dropped, so a pipeline can route them to a
+    * dead-letter/quarantine frame. Caller provides the tuple encoder (via
+    * `import spark.implicits._`). */
   def mapConcurrentGlobalQuarantine[T, U](
-      ds: Dataset[T], globalBudget: Int,
-      describe: Throwable => String = describeFailure)(f: T => U)(
+      ds: Dataset[T], globalBudget: Int, describe: Throwable => String)(f: T => U)(
       implicit enc: Encoder[(Option[U], Option[String])]): Dataset[(Option[U], Option[String])] =
-    ds.mapPartitions(it => quarantineIterator(it, taskBudget(globalBudget), describe)(f))(enc)
+    ds.mapPartitions { it =>
+      concurrentIterator(it, taskBudget(globalBudget))(f).map {
+        case Success(u) => (Some(u), None)
+        case Failure(e) => (None, Some(describe(e)))
+      }
+    }(enc)
 
   /** Per-task share of a cluster-global in-flight budget (ceil split over
     * the stage's partitions, from inside the task — see

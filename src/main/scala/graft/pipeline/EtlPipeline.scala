@@ -40,8 +40,7 @@ final case class EtlConfig(
     csvPath: String,
     sink: HttpSink.Config,
     extractor: Extractor = ProjectionExtractor(),
-    loadPartitions: Int = 10,
-    lenientCast: Boolean = true)
+    loadPartitions: Int = 10)
 
 final case class EtlRunStats(
     inputRows: Long,
@@ -70,7 +69,7 @@ class EtlPipeline(spark: SparkSession, cfg: EtlConfig) {
     val n = cfg.loadPartitions
     val routed = ApplianceSource.scan(spark, cfg.csvPath)
       .repartitionById(n, pmod(monotonically_increasing_id(), lit(n.toLong)).cast("int"))
-    Transform.toDeviceData(cfg.extractor.extract(spark, routed), cfg.lenientCast)
+    Transform.toDeviceData(cfg.extractor.extract(spark, routed))
   }
 
   /** The transformed DeviceData frame (pre-sink, no reject markers) —

@@ -29,11 +29,16 @@ trait Extractor extends Serializable {
 
 object Extractor {
 
-  /** The marker contract for per-row calls: `call` runs only for
-    * well-formed appliances; a marker maps straight to a CpuStats whose
-    * `name` is null. */
-  def skippingMarkers(call: Appliance => CpuStats): Appliance => CpuStats = ap =>
-    if (ap.ip == null || ap.hostname == null) marker else call(ap)
+  /** The per-row extractors' one recipe: the appliance columns as typed
+    * rows, handed to `fanOut` (an [[AsyncMap]] variant) with `call` under
+    * the marker contract — `call` runs only for well-formed appliances; a
+    * marker maps straight to a CpuStats whose `name` is null. */
+  private[pipeline] def perRow[R](spark: SparkSession, appliances: DataFrame)(
+      fanOut: (Dataset[Appliance], Appliance => CpuStats) => R)(call: Appliance => CpuStats): R = {
+    import spark.implicits._
+    fanOut(appliances.select(col("ip"), col("hostname")).as[Appliance],
+      ap => if (ap.ip == null || ap.hostname == null) marker else call(ap))
+  }
 
   private val marker = CpuStats(null, 0L, null, null, null, null, null, null)
 }
@@ -67,16 +72,15 @@ final case class SimulatedLatencyExtractor(
     import spark.implicits._
     val lat = latencyMillis
     val fixed = fixedTimestamp
-    val apps: Dataset[Appliance] =
-      appliances.select(col("ip"), col("hostname")).as[Appliance]
-    AsyncMap.mapConcurrentGlobal(apps, globalConcurrency)(Extractor.skippingMarkers { ap =>
+    Extractor.perRow(spark, appliances)((apps, call) =>
+      AsyncMap.mapConcurrentGlobal(apps, globalConcurrency)(call).toDF()) { ap =>
       Thread.sleep(lat) // stand-in for the device API round-trip
       CpuStats(
         name = ap.hostname,
         timestamp = fixed.getOrElse(System.currentTimeMillis() / 1000),
         cpu_number = "0",
         pIdle = "95", pUser = "3", pSys = "1", pIRQ = "0.5", pNice = "0")
-    }).toDF()
+    }
   }
 }
 
@@ -104,25 +108,23 @@ final case class HttpExtractor(
 
   override def extract(spark: SparkSession, appliances: DataFrame): DataFrame = {
     import spark.implicits._
-    val apps: Dataset[Appliance] =
-      appliances.select(col("ip"), col("hostname")).as[Appliance]
-    AsyncMap.mapConcurrentGlobal(apps, globalConcurrency)(Extractor.skippingMarkers(fetch)).toDF()
+    Extractor.perRow(spark, appliances)((apps, call) =>
+      AsyncMap.mapConcurrentGlobal(apps, globalConcurrency)(call).toDF())(fetch)
   }
 
   /** O5-upgrade variant: failures ride along as (None, Some(cause)) rows
     * for dead-letter routing instead of being dropped. fetch throws
     * pre-classified messages (timeout:/connect:/status/malformed:), so
-    * the cause is the bare message. */
+    * the cause is the bare message. A reject marker makes no call and
+    * yields its marker row, as in [[extract]]. */
   def extractQuarantine(spark: SparkSession, appliances: DataFrame)
       : Dataset[(Option[CpuStats], Option[String])] = {
     import spark.implicits._
-    val apps: Dataset[Appliance] =
-      appliances.select(col("ip"), col("hostname")).as[Appliance]
-    AsyncMap.mapConcurrentGlobalQuarantine(
-      apps, globalConcurrency,
-      // guard null getMessage: Some(null) would round-trip through the
-      // Option encoder as None, losing the cause entirely
-      describe = e => Option(e.getMessage).getOrElse(e.getClass.getSimpleName))(fetch)
+    Extractor.perRow(spark, appliances)((apps, call) =>
+      AsyncMap.mapConcurrentGlobalQuarantine(apps, globalConcurrency,
+        // guard null getMessage: Some(null) would round-trip through the
+        // Option encoder as None, losing the cause entirely
+        describe = e => Option(e.getMessage).getOrElse(e.getClass.getSimpleName))(call))(fetch)
   }
 
   /** One device-API round-trip. Throws with a classified message on any

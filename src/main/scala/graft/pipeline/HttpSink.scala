@@ -1,8 +1,7 @@
 package graft.pipeline
 
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.util.LongAccumulator
+import org.apache.spark.sql.{DataFrame, Row}
 
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
@@ -18,7 +17,10 @@ import java.time.Duration
   * in `batchSize` groups (count-based micro-batching, main.go:250) and
   * POSTs one JSON array per group; a failed batch is spilled to the
   * gzip-JSON dead-letter dir ([[Spill]]) instead of lost. A null row is a
-  * reject marker ([[Extractor]]): it is counted and never posted.
+  * reject marker ([[Extractor]]): it is counted and never posted. Load,
+  * stream and replay all deliver through one partition loop
+  * ([[deliver]]); they differ only in the key of a batch and in whether a
+  * failed batch spills.
   *
   * Scale notes: one shared HttpClient per executor JVM (never per row);
   * sink parallelism = partition count of the input, decoupled from
@@ -49,21 +51,15 @@ object HttpSink {
     HttpClient.newBuilder().connectTimeout(Duration.ofSeconds(10)).build()
 
   /** One POST attempt per retry budget; exponential backoff between.
-    *
     * Every attempt shares ONE idempotency key, so a batch the endpoint
     * received but failed to acknowledge is droppable server-side on the
-    * retry. The default key is a fresh UUID per *delivery* (a deliberate
-    * re-run of the same input must not be deduped as a duplicate); pass
-    * `key` to widen the scope — Spill.replay keys each batch by
-    * `<spillFile>#<batchIndex>` so replay ROUNDS of the same file share
-    * keys and a partially-replayed file cannot double-deliver. */
-  def postBatchWithRetry(
-      cfg: Config, jsonRows: Seq[String], key: Option[String] = None): Either[String, Unit] = {
-    val k = key.getOrElse(java.util.UUID.randomUUID().toString)
+    * retry. */
+  private def postBatchWithRetry(
+      cfg: Config, jsonRows: Seq[String], key: String): Either[String, Unit] = {
     var attempt = 0
     var last: Either[String, Unit] = Left("unattempted")
     while (attempt <= cfg.maxRetries) {
-      last = postBatch(cfg, jsonRows, k)
+      last = postBatch(cfg, jsonRows, key)
       if (last.isRight) return last
       attempt += 1
       if (attempt <= cfg.maxRetries)
@@ -91,14 +87,11 @@ object HttpSink {
   }
 
   /** Sink a frame of wire-format rows (single string column `json`, see
-    * Transform.deviceDataJson). Returns per-run delivery stats.
-    *
-    * `spillOnFailure=false` is the replay mode: a failed batch is only
-    * counted, never re-spilled — the original dead-letter files stay the
-    * single durable copy, so repeated failed replays cannot duplicate
-    * records in the spill dir. */
-  def write(json: DataFrame, cfg: Config, spillOnFailure: Boolean = true): Stats =
-    writeInternal(json, cfg, spillOnFailure, keyFor = None)
+    * Transform.deviceDataJson) and spill each batch that fails. Every
+    * batch carries a fresh UUID key: a deliberate re-run of the same input
+    * must not be deduped as a duplicate. Returns per-run delivery stats. */
+  def write(json: DataFrame, cfg: Config): Stats =
+    deliver(json, cfg, spill = true)((_, _, _, _) => java.util.UUID.randomUUID().toString)._1
 
   /** Keyed write for RETRIED deliveries (the streaming micro-batch path):
     * every POST carries the deterministic idempotency key
@@ -129,9 +122,8 @@ object HttpSink {
     * look new to the endpoint (one-time duplicates). Drain or fully
     * deliver in-flight streams before deploying a key-format change. */
   def writeKeyed(json: DataFrame, cfg: Config, keyPrefix: String): Stats =
-    writeInternal(json, cfg, spillOnFailure = false,
-      keyFor = Some((pid: Int, group: Long, batch: Seq[String]) =>
-        s"$keyPrefix#p$pid#$group@${cfg.batchSize}#${contentMd5(batch)}"))
+    deliver(json, cfg, spill = false)((pid, _, group, batch) =>
+      s"$keyPrefix#p$pid#$group@${cfg.batchSize}#${contentMd5(batch)}")._1
 
   private def contentMd5(batch: Seq[String]): String = {
     val md = java.security.MessageDigest.getInstance("MD5")
@@ -145,46 +137,60 @@ object HttpSink {
     md.digest().map("%02x".format(_)).mkString
   }
 
-  private def writeInternal(
-      json: DataFrame, cfg: Config, spillOnFailure: Boolean,
-      keyFor: Option[(Int, Long, Seq[String]) => String]): Stats = {
-    val spark = json.sparkSession
-    val sentB = spark.sparkContext.longAccumulator("sink.sentBatches")
-    val sentR = spark.sparkContext.longAccumulator("sink.sentRecords")
-    val spillB = spark.sparkContext.longAccumulator("sink.spilledBatches")
-    val spillR = spark.sparkContext.longAccumulator("sink.spilledRecords")
-    val rejected = spark.sparkContext.longAccumulator("sink.rejectedRows")
-    writeWith(json, cfg, spillOnFailure, keyFor, sentB, sentR, spillB, spillR, rejected)
-    Stats(sentB.value, sentR.value, spillB.value, spillR.value, rejected.value)
-  }
-
-  /** The accumulators are updated in result tasks only, where Spark
+  /** The one delivery loop, behind [[write]], [[writeKeyed]] and
+    * [[Spill.replay]]. Column 0 of `json` is the wire row (null = reject
+    * marker). An optional column 1 names each row's segment, whose rows
+    * are consecutive within a partition (a spill file on replay); without
+    * it the whole partition is one segment. Batches of at most `batchSize`
+    * rows never cross a segment; batch i of a segment is posted under
+    * `key(partitionId, segment, i, rows)`, and spilled on failure only
+    * when `spill`. Returns the stats and the segments delivered in full.
+    *
+    * The accumulators are updated in result tasks only, where Spark
     * applies the updates of one successful attempt per partition and drops
     * those of failed attempts: every count is exact under task retry. */
-  private def writeWith(
-      json: DataFrame, cfg: Config, spillOnFailure: Boolean,
-      keyFor: Option[(Int, Long, Seq[String]) => String],
-      sentB: LongAccumulator, sentR: LongAccumulator,
-      spillB: LongAccumulator, spillR: LongAccumulator, rejected: LongAccumulator): Unit = {
-    json.foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
+  private[pipeline] def deliver(json: DataFrame, cfg: Config, spill: Boolean)(
+      key: (Int, String, Int, Seq[String]) => String): (Stats, Set[String]) = {
+    val sc = json.sparkSession.sparkContext
+    val sentB = sc.longAccumulator("sink.sentBatches")
+    val sentR = sc.longAccumulator("sink.sentRecords")
+    val spillB = sc.longAccumulator("sink.spilledBatches")
+    val spillR = sc.longAccumulator("sink.spilledRecords")
+    val rejected = sc.longAccumulator("sink.rejectedRows")
+    val delivered = sc.collectionAccumulator[String]("sink.deliveredSegments")
+    val segmented = json.columns.length > 1
+    json.foreachPartition { (rows: Iterator[Row]) =>
       val pid = Option(TaskContext.get()).map(_.partitionId()).getOrElse(0)
-      var groupIdx = -1L
-      val wire = rows.map(_.getString(0)).filter { j =>
-        if (j == null) rejected.add(1)
-        j != null
-      }
-      wire.grouped(cfg.batchSize).foreach { batch =>
-        groupIdx += 1
-        postBatchWithRetry(cfg, batch, keyFor.map(f => f(pid, groupIdx, batch))) match {
-          case Right(_) =>
-            sentB.add(1); sentR.add(batch.size)
-          case Left(err) =>
-            if (spillOnFailure) Spill.writeBatch(cfg.spillDir, pid, batch)
-            spillB.add(1); spillR.add(batch.size)
-            System.err.println(s"[sink] worker $pid: batch of ${batch.size} failed ($err)" +
-              (if (spillOnFailure) "; spilled" else "; kept in original spill files"))
+      val wire = rows.filter { r =>
+        val marker = r.isNullAt(0)
+        if (marker) rejected.add(1)
+        !marker
+      }.buffered
+      while (wire.hasNext) {
+        val segment = if (segmented) wire.head.getString(1) else ""
+        val segRows = new Iterator[String] {
+          def hasNext: Boolean = wire.hasNext && (!segmented || wire.head.getString(1) == segment)
+          def next(): String = wire.next().getString(0)
         }
+        var whole = true
+        segRows.grouped(cfg.batchSize).zipWithIndex.foreach { case (batch, i) =>
+          postBatchWithRetry(cfg, batch, key(pid, segment, i, batch)) match {
+            case Right(_) =>
+              sentB.add(1); sentR.add(batch.size)
+            case Left(err) =>
+              whole = false
+              if (spill) Spill.writeBatch(cfg.spillDir, pid, batch)
+              spillB.add(1); spillR.add(batch.size)
+              System.err.println(s"[sink] worker $pid: batch $i of ${batch.size} rows" +
+                (if (segmented) s" from $segment" else "") + s" failed ($err)" +
+                (if (spill) "; spilled" else "; not spilled"))
+          }
+        }
+        if (whole) delivered.add(segment)
       }
     }
+    import scala.jdk.CollectionConverters._
+    (Stats(sentB.value, sentR.value, spillB.value, spillR.value, rejected.value),
+      delivered.value.asScala.toSet)
   }
 }

@@ -35,16 +35,6 @@ object Model {
     StructField("ip", StringType),
     StructField("hostname", StringType)))
 
-  val cpuStatsSchema: StructType = StructType(Seq(
-    StructField("name", StringType),
-    StructField("timestamp", LongType),
-    StructField("cpu_number", StringType),
-    StructField("pIdle", StringType),
-    StructField("pUser", StringType),
-    StructField("pSys", StringType),
-    StructField("pIRQ", StringType),
-    StructField("pNice", StringType)))
-
   val indicatorSchema: StructType = StructType(Seq(
     StructField("name", StringType),
     StructField("value", DoubleType)))

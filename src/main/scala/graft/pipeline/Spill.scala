@@ -19,10 +19,12 @@ import java.util.zip.GZIPOutputStream
   * Divergence from the reference, on purpose (SURVEY.md §2.2): the
   * reference deletes a spill file right after re-*enqueueing* its records
   * (main.go:329-337), leaving a crash window that loses the batch. Here
-  * replay deletes a file only after the whole replay frame was
-  * successfully re-*delivered* — at-least-once with no loss window
-  * (duplicates on partial redelivery remain possible; exactly-once is the
-  * streaming upgrade in graft.streaming).
+  * replay delivers through the same sink loop as a live load and deletes
+  * a file only after every one of its rows was re-*delivered* —
+  * at-least-once with no loss window (a keyed endpoint drops the
+  * already-delivered batches of a partially-replayed file, an unkeyed
+  * one may store them twice; exactly-once is the streaming upgrade in
+  * graft.streaming).
   *
   * On a cluster the spill dir would be shared storage (HDFS/S3); the
   * format is plain gzip JSON precisely so `spark.read.json` replays it
@@ -87,15 +89,17 @@ object Spill {
             lit(0)))
   }
 
-  /** Replay with PER-FILE delivery granularity: each spill file's rows are
-    * posted as their own batches and the file is deleted as soon as ITS
-    * rows are fully delivered — one still-failing file no longer pins
-    * every already-delivered file into the next replay round.
+  /** Replay through the sink's one delivery loop ([[HttpSink.deliver]])
+    * with each spill file as a segment: a file's rows go out as their own
+    * batches, and the file is deleted as soon as ITS rows are all
+    * delivered — one still-failing file does not pin the delivered ones
+    * into the next replay round.
     *
-    * Within-file partials are covered by the idempotency key: replay
-    * batches are keyed `<spillFile>#<batchIndex>`, stable across replay
-    * rounds (same file, same batching), so a keyed sink drops the second
-    * copy of the already-delivered half of a partially-replayed file.
+    * Replay batches are keyed `<spillFile>#<batchIndex>@<batchSize>`,
+    * stable across replay rounds, so a keyed sink drops the second copy of
+    * the delivered part of a partially-replayed file. batchSize is in the
+    * key because under another batch size the same index covers a
+    * DIFFERENT row extent, and deduping it would silently drop tail rows.
     * Failed batches are NOT re-spilled (the original files remain the
     * single durable copy). One distributed job regardless of file count —
     * multiLine JSON reads each gzip file whole in one task, so a file's
@@ -105,43 +109,14 @@ object Spill {
     val files = listSpillFiles(cfg.spillDir)
     if (files.isEmpty) return (0L, 0)
     val json = Transform.deviceDataJson(readRaw(spark, files))
-      .withColumn("__src", input_file_name())
-    val sentR = spark.sparkContext.longAccumulator("replay.sentRecords")
-    val okFiles = spark.sparkContext.collectionAccumulator[String]("replay.okFiles")
-    json.foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
-      val fileOk = scala.collection.mutable.LinkedHashMap.empty[String, Boolean]
-      val buf = scala.collection.mutable.ArrayBuffer.empty[String]
-      var cur: String = null
-      var batchIdx = 0
-      def flush(): Unit = if (buf.nonEmpty) {
-        // batchSize is part of the key: under a different batch size the
-        // same index covers a DIFFERENT row extent, and a keyed sink
-        // deduping old-extent keys would silently drop the tail rows —
-        // re-delivery (at-least-once) is the correct failure mode there.
-        val key = s"${cur.substring(cur.lastIndexOf('/') + 1)}#$batchIdx@${cfg.batchSize}"
-        val ok = HttpSink.postBatchWithRetry(cfg, buf.toSeq, Some(key)).isRight
-        if (ok) sentR.add(buf.size)
-        else System.err.println(
-          s"[replay] batch of ${buf.size} from $cur failed; file kept for next replay")
-        fileOk.update(cur, fileOk.getOrElse(cur, true) && ok)
-        batchIdx += 1
-        buf.clear()
-      }
-      rows.foreach { r =>
-        val f = r.getString(1)
-        if (f != cur) { flush(); cur = f; batchIdx = 0; fileOk.getOrElseUpdate(f, true) }
-        buf += r.getString(0)
-        if (buf.size >= cfg.batchSize) flush()
-      }
-      flush()
-      fileOk.foreach { case (f, ok) => if (ok) okFiles.add(f) }
-    }
+      .withColumn("segment", input_file_name())
+    val (stats, delivered) = HttpSink.deliver(json, cfg, spill = false)((_, file, i, _) =>
+      s"${baseName(file)}#$i@${cfg.batchSize}")
     // file paths come back as URIs; match on the (uuid-unique) basename
-    val okNames = {
-      import scala.jdk.CollectionConverters._
-      okFiles.value.asScala.map(u => u.substring(u.lastIndexOf('/') + 1)).toSet
-    }
+    val okNames = delivered.map(baseName)
     val deleted = files.count(f => okNames(f.getName) && Files.deleteIfExists(f.toPath))
-    (sentR.value, deleted)
+    (stats.sentRecords, deleted)
   }
+
+  private def baseName(path: String): String = path.substring(path.lastIndexOf('/') + 1)
 }

@@ -9,34 +9,30 @@ import org.apache.spark.sql.functions._
   * Cast semantics (SURVEY.md §1.3): the reference parses metric strings
   * with the error discarded, so garbage becomes 0.0 (main.go:214-218) and
   * `utilization = 100 - idle` yields 100.0 for unparseable idle. The
-  * engine's default is Spark-native NULL propagation (`strict`); the
-  * compatibility path (`lenient`) reproduces silent-zero exactly.
+  * engine reproduces that silent zero exactly ([[lenientDouble]]).
   */
 object Transform {
 
   /** Lenient cast: unparseable numeric string -> 0.0 (reference compat). */
   def lenientDouble(c: Column): Column = coalesce(c.cast("double"), lit(0.0))
 
-  /** Strict cast: unparseable -> NULL (idiomatic Spark). */
-  def strictDouble(c: Column): Column = c.cast("double")
-
   /** CpuStats-shaped frame -> DeviceData-shaped frame with the 5-indicator
     * ARRAY<STRUCT<name,value>> in the reference's fixed order
     * (main.go:220-226). Input columns: name, timestamp, cpu_number,
     * pIdle, pUser, pSys, pIRQ, pNice.
     */
-  def toDeviceData(cpu: DataFrame, lenient: Boolean = true): DataFrame = {
-    val cast: Column => Column = if (lenient) lenientDouble else strictDouble
+  def toDeviceData(cpu: DataFrame): DataFrame = {
     cpu.select(
       col("name"),
       col("cpu_number"),
       col("timestamp"),
       array(
-        struct(lit("utilization").as("name"), (lit(100.0) - cast(col("pIdle"))).as("value")),
-        struct(lit("nice").as("name"), cast(col("pNice")).as("value")),
-        struct(lit("user").as("name"), cast(col("pUser")).as("value")),
-        struct(lit("system").as("name"), cast(col("pSys")).as("value")),
-        struct(lit("irq").as("name"), cast(col("pIRQ")).as("value"))).as("indicators"))
+        struct(lit("utilization").as("name"),
+          (lit(100.0) - lenientDouble(col("pIdle"))).as("value")),
+        struct(lit("nice").as("name"), lenientDouble(col("pNice")).as("value")),
+        struct(lit("user").as("name"), lenientDouble(col("pUser")).as("value")),
+        struct(lit("system").as("name"), lenientDouble(col("pSys")).as("value")),
+        struct(lit("irq").as("name"), lenientDouble(col("pIRQ")).as("value"))).as("indicators"))
   }
 
   /** Wire-format JSON for one DeviceData row — matches the reference's

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.pipeline.{HttpSink, Transform}
+import graft.pipeline.{ApplianceSource, HttpSink, Model, Transform}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.Row
@@ -28,18 +28,17 @@ import java.nio.file.{Files, Paths}
 object StreamingEtl {
 
   /** Wrap a CpuStats-shaped streaming frame with the standard transform
-    * and the idempotent batched HTTP sink. Caller starts the query. */
+    * and the idempotent batched HTTP sink, triggered AvailableNow (drain
+    * everything pending, then stop). Caller starts the query. */
   def writer(
       cpuStream: DataFrame,
       sink: HttpSink.Config,
       commitLogDir: String,
-      loadPartitions: Int = 10,
-      lenient: Boolean = true,
-      trigger: Trigger = Trigger.AvailableNow()): DataStreamWriter[Row] = {
-    val device = Transform.toDeviceData(cpuStream, lenient)
+      loadPartitions: Int = 10): DataStreamWriter[Row] = {
+    val device = Transform.toDeviceData(cpuStream)
     device.writeStream
       .outputMode("append")
-      .trigger(trigger)
+      .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         deliverBatch(batch, batchId, sink, commitLogDir, loadPartitions)
       }
@@ -72,11 +71,10 @@ object StreamingEtl {
     // Key prefix ties to this stream's commit log (stable across restarts
     // of the same checkpoint, distinct between streams sharing a sink).
     val streamTag = Integer.toHexString(commitLogDir.hashCode)
-    // spillOnFailure=false (inside writeKeyed): in streaming the
-    // checkpoint retry IS the durability mechanism. Spilling here would
-    // leave dead-letter copies of records the retried micro-batch
-    // delivers anyway — a systematic double-delivery path for any
-    // Spill.replay sharing this Config.
+    // writeKeyed never spills: in streaming the checkpoint retry IS the
+    // durability mechanism. Spilling here would leave dead-letter copies
+    // of records the retried micro-batch delivers anyway — a systematic
+    // double-delivery path for any Spill.replay sharing this Config.
     val stats = HttpSink.writeKeyed(json, sink, keyPrefix = s"$streamTag#b$batchId")
     if (stats.spilledBatches > 0)
       throw new IllegalStateException(
@@ -92,15 +90,13 @@ object StreamingEtl {
   def csvSource(
       spark: org.apache.spark.sql.SparkSession,
       dir: String,
-      fixedTimestamp: Option[Long] = None,
-      maxFilesPerTrigger: Int = 10): DataFrame = {
-    import org.apache.spark.sql.functions._
+      fixedTimestamp: Option[Long] = None): DataFrame = {
     val raw = spark.readStream
-      .schema("ip STRING, hostname STRING")
+      .schema(Model.applianceSchema)
       .option("header", "false")
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
+      .option("maxFilesPerTrigger", "10")
       .csv(dir)
-      .where(col("ip").isNotNull && col("hostname").isNotNull)
+      .where(ApplianceSource.valid)
     graft.pipeline.ProjectionExtractor(fixedTimestamp).extract(spark, raw)
   }
 

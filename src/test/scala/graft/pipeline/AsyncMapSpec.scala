@@ -11,7 +11,7 @@ class AsyncMapSpec extends SparkSpec {
 
   test("all inputs processed; failures dropped like reference O5") {
     val ds = spark.range(0, 1000).as[Long]
-    val out = AsyncMap.mapConcurrent(ds, 64) { i =>
+    val out = AsyncMap.mapConcurrentGlobal(ds, 64) { i =>
       if (i % 100 == 7) throw new RuntimeException("boom") else i * 2
     }.collect()
     assert(out.length == 990)
@@ -62,7 +62,8 @@ class AsyncMapSpec extends SparkSpec {
 
   test("quarantine variant keeps failures as error rows (O5 upgrade)") {
     val ds = spark.range(0, 100).as[Long]
-    val out = AsyncMap.mapConcurrentQuarantine(ds, 16) { i =>
+    val out = AsyncMap.mapConcurrentGlobalQuarantine(ds, 16,
+      describe = e => s"${e.getClass.getSimpleName}: ${e.getMessage}") { i =>
       if (i % 10 == 3) throw new RuntimeException(s"bad-$i") else i * 2
     }.collect()
     val ok = out.collect { case (Some(v), None) => v }

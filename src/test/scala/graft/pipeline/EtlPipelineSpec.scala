@@ -2,6 +2,8 @@ package graft.pipeline
 
 import graft.SparkSpec
 
+import org.apache.spark.sql.functions.spark_partition_id
+
 import java.nio.file.Files
 
 /** End-to-end pipeline + sink + spill/replay integration against the
@@ -228,6 +230,55 @@ class EtlPipelineSpec extends SparkSpec {
       assert(server.receivedRecordCount == 40, "no record delivered twice")
       assert(server.duplicateCount == 1, "the replayed duplicate was key-deduped")
     } finally server.stop()
+  }
+
+  test("replay of several spill files in one partition: batches and keys never cross a file") {
+    import spark.implicits._
+    val server = new MockLoadServer()
+    val spillDir = freshSpill()
+    // three files whose row counts batchSize 4 does not divide; file f's
+    // rows are named f<f>-d<i>, so a payload shows which files it holds
+    val sizes = Seq(7, 5, 9)
+    val fileOf = sizes.zipWithIndex.map { case (n, f) =>
+      val rows = (0 until n).map(i => DeviceData(s"f$f-d$i", "0", 1L, Seq(Indicator("irq", 0.5))))
+      s"f$f" -> Spill.writeBatch(spillDir, f,
+        Transform.deviceDataJson(rows.toDF()).as[String].collect().toSeq).getName
+    }.toMap
+    val cfg = HttpSink.Config(server.loadUrl, "t", batchSize = 4, spillDir = spillDir)
+    // pack every file into one read partition
+    val packing = Seq("spark.sql.files.openCostInBytes" -> "1", "spark.sql.files.minPartitionNum" -> "1")
+    val saved = packing.map { case (k, _) => k -> spark.conf.getOption(k) }
+    packing.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      val parts = Spill.readRaw(spark, Spill.listSpillFiles(spillDir))
+        .select(spark_partition_id()).distinct().count()
+      assert(parts == 1, s"the spill files were read in $parts partitions, not one")
+
+      // round 1: the batch holding f1-d4 (f1's second, of one row) fails
+      server.failContaining.set(Some("\"f1-d4\""))
+      val (sent1, del1) = Spill.replay(spark, cfg)
+      assert(sent1 == 7 + 9 + 4 && del1 == 2, s"sent=$sent1 deleted=$del1")
+      assert(Spill.listSpillFiles(spillDir).map(_.getName) == Seq(fileOf("f1")))
+
+      val byFile = server.receivedKeyed.map { case (key, body) =>
+        val tags = "\"name\":\"(f\\d)-d".r.findAllMatchIn(body).map(_.group(1)).toSet
+        assert(tags.size == 1, s"one POST carried rows of files $tags")
+        val file = fileOf(tags.head)
+        assert(key.startsWith(file + "#"), s"key $key on a payload of $file")
+        file -> key.stripPrefix(file + "#")
+      }.groupBy(_._1).map { case (f, ks) => f -> ks.map(_._2).sorted }
+      assert(byFile == Map(fileOf("f0") -> Seq("0@4", "1@4"), fileOf("f1") -> Seq("0@4"),
+        fileOf("f2") -> Seq("0@4", "1@4", "2@4")), byFile.toString)
+
+      // round 2 delivers f1's second batch; its first is key-deduped
+      server.failContaining.set(None)
+      val (_, del2) = Spill.replay(spark, cfg)
+      assert(del2 == 1 && Spill.listSpillFiles(spillDir).isEmpty)
+      assert(server.receivedRecordCount == sizes.sum && server.duplicateCount == 1)
+    } finally {
+      saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+      server.stop()
+    }
   }
 
   test("HttpExtractor e2e: real GET per appliance feeds the full pipeline") {

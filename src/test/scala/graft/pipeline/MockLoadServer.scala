@@ -14,17 +14,19 @@ import scala.jdk.CollectionConverters._
   *
   * Failure-injection knobs for the sink tests: set `failStatus` to make
   * /load return an error status (spill path), clear it to recover
-  * (replay path).
+  * (replay path); set `failContaining` to fail only the payloads that
+  * hold a given text.
   */
 final class MockLoadServer(delayMillis: Long = 0) {
   private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
-  private val bodies = new CopyOnWriteArrayList[String]()
+  private val keyed = new CopyOnWriteArrayList[(String, String)]()
   private val auths = new CopyOnWriteArrayList[String]()
   // X-Idempotency-Key dedup (the keyed-endpoint contract HttpSink targets):
   // a replayed payload with a seen key is acknowledged but not re-counted.
   private val seenKeys = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
   private val dupCount = new java.util.concurrent.atomic.AtomicInteger(0)
   val failStatus = new AtomicReference[Option[Int]](None)
+  val failContaining = new AtomicReference[Option[String]](None)
   /** Fail the next N /load requests with 503, then recover (transient-blip
     * injection for the retry path). */
   val failNext = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -51,6 +53,8 @@ final class MockLoadServer(delayMillis: Long = 0) {
         case _ if failNext.getAndUpdate(n => math.max(0, n - 1)) > 0 =>
           respond(x, 503, """{"status":"transient"}""")
         case Some(code) => respond(x, code, """{"status":"error"}""")
+        case None if failContaining.get().exists(body.contains) =>
+          respond(x, 500, """{"status":"error"}""")
         case None if acceptBudget.get() >= 0 &&
             acceptBudget.getAndUpdate(n => math.max(0, n - 1)) <= 0 =>
           respond(x, 503, """{"status":"budget-exhausted"}""")
@@ -60,7 +64,7 @@ final class MockLoadServer(delayMillis: Long = 0) {
             dupCount.incrementAndGet()
             respond(x, 200, """{"status":"duplicate"}""")
           } else {
-            bodies.add(body)
+            keyed.add(key.getOrElse("") -> body)
             auths.add(Option(x.getRequestHeaders.getFirst("Authorization")).getOrElse(""))
             respond(x, 200, """{"status":"success"}""")
           }
@@ -103,14 +107,16 @@ final class MockLoadServer(delayMillis: Long = 0) {
   def loadUrl: String = s"http://127.0.0.1:$port/load"
   def deviceUrlTemplate: String = s"http://127.0.0.1:$port/device?ip={ip}&hostname={hostname}"
   def deviceRequestCount: Int = deviceHits.get()
-  def receivedBodies: Seq[String] = bodies.asScala.toSeq
+  def receivedBodies: Seq[String] = receivedKeyed.map(_._2)
   def receivedAuths: Seq[String] = auths.asScala.toSeq
+  /** (X-Idempotency-Key, payload) of each stored payload. */
+  def receivedKeyed: Seq[(String, String)] = keyed.asScala.toSeq
   // one "cpu_number" key per DeviceData record (indicator structs only
   // carry name/value)
   def receivedRecordCount: Int =
     receivedBodies.map(b => b.sliding(12).count(_ == "\"cpu_number\"")).sum
   /** Payloads acknowledged as duplicates via idempotency key (never stored). */
   def duplicateCount: Int = dupCount.get()
-  def reset(): Unit = { bodies.clear(); auths.clear(); seenKeys.clear(); dupCount.set(0) }
+  def reset(): Unit = { keyed.clear(); auths.clear(); seenKeys.clear(); dupCount.set(0) }
   def stop(): Unit = { server.stop(0); pool.shutdownNow() }
 }

@@ -13,15 +13,9 @@ class TransformSpec extends SparkSpec {
     Seq(CpuStats("dev-1", 1751450637L, "0", idle, "3", "1", "0.5", "0")).toDF()
 
   test("lenient cast: garbage metric becomes 0.0, so utilization = 100.0") {
-    val out = Transform.toDeviceData(cpuRow("garbage"), lenient = true)
+    val out = Transform.toDeviceData(cpuRow("garbage"))
       .selectExpr("inline(indicators)").as[(String, Double)].collect()
     assert(out.head == ("utilization", 100.0))
-  }
-
-  test("strict mode: garbage metric becomes NULL and propagates") {
-    val out = Transform.toDeviceData(cpuRow("garbage"), lenient = false)
-      .selectExpr("indicators[0].value").collect()
-    assert(out.head.isNullAt(0))
   }
 
   test("indicator names and order match the reference exactly") {

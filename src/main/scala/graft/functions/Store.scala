@@ -32,7 +32,8 @@ import org.apache.spark.sql.functions._
   * when the surviving entry validates; otherwise ours replaces it, so a
   * torn entry can never become permanent. After a publish, the family
   * (`<kind>_v*`, all fingerprints and versions) is pruned to [[keep]]
-  * entries, least recently used first; a load counts as use.
+  * entries, least recently used first (a load counts as use), and the
+  * entries of kinds outside the closed set [[kinds]] are deleted.
   *
   * Validation. A load checks the expected column set plus the caller's
   * `check`; an entry failing either (older shape, torn write, bad
@@ -43,6 +44,12 @@ import org.apache.spark.sql.functions._
   * count as their builds.
   */
 object Store {
+
+  /** Every kind the code reads, closed: [[loadOrBuild]] takes no other,
+    * and a publish deletes the entries of any kind outside it from its
+    * root ([[prune]]), so a kind that code stops reading leaves no
+    * entries behind. `xrace` is [[graft.tools.StoreRaceProbe]]'s. */
+  val kinds: Set[String] = Set("bt_pairs", "fuzzy_clusters", "ivf", "kmv", "xrace")
 
   /** Entries kept per kind family. Families are code-bounded (one per
     * kind), so a long-lived root holds at most keep * |kinds| entries
@@ -84,6 +91,7 @@ object Store {
       fp: (Long, Long, Long))(expectCols: Seq[String],
       check: DataFrame => Boolean = _ => true,
       dir: String = root(kind))(build: => DataFrame): DataFrame = {
+    require(kinds(kind), s"unknown store kind $kind; add it to Store.kinds")
     val (n, x, s) = fp
     val path = Paths.get(dir, s"${kind}_v${version}_fp${java.lang.Long.toHexString(x)}" +
       s"_fs${java.lang.Long.toHexString(s)}_n$n")
@@ -93,7 +101,7 @@ object Store {
       val built = build
       publish(path, built)(valid(path).nonEmpty)
       StoreEvents.record(kind, (System.nanoTime() - t0) / 1e9)
-      prune(path, s"${kind}_v")
+      prune(path, kind)
       valid(path).getOrElse(built)
     }
   }
@@ -160,22 +168,26 @@ object Store {
       java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis()))
     catch { case _: Throwable => () }
 
+  /** An entry's directory name, `<kind>_v<version>_fp…`: group 1 is the kind. */
+  private val entryName = "^(.+)_v\\d+_fp[0-9a-f]+_fs[0-9a-f]+_n\\d+$".r
+
   /** After publishing `kept`, delete all but the newest keep-1 other
-    * entries of its family (never in-flight tmp siblings). Safe under
-    * races: a reader whose entry vanishes mid-load fails validation and
+    * entries of its kind's family (all versions and fingerprints), and
+    * every entry of a kind outside [[kinds]]; never an in-flight tmp
+    * sibling or a directory that is not an entry. Safe under races: a
+    * reader whose entry vanishes mid-load fails validation and
     * rebuilds, so eviction can cost a rebuild, never a wrong result.
     * Best-effort: IO failures are swallowed, the publish already
     * succeeded. */
-  private def prune(kept: Path, family: String): Unit =
+  private def prune(kept: Path, kind: String): Unit =
     try {
-      val others = Using.resource(Files.list(kept.getParent))(_.iterator().asScala
-        .filter { p =>
-          val name = p.getFileName.toString
-          Files.isDirectory(p) && name.startsWith(family) &&
-            !name.contains(".tmp-") && name != kept.getFileName.toString
-        }.toVector)
-      others.sortBy(p => -Try(Files.getLastModifiedTime(p).toMillis).getOrElse(0L))
-        .drop(keep - 1).foreach(p => Try(deleteRecursively(p)))
+      val entries = Using.resource(Files.list(kept.getParent))(_.iterator().asScala
+        .filter(p => Files.isDirectory(p) && p.getFileName != kept.getFileName).toVector)
+        .flatMap(p => entryName.findFirstMatchIn(p.getFileName.toString).map(m => m.group(1) -> p))
+      val (family, orphans) = entries.filter { case (k, _) => k == kind || !kinds(k) }
+        .partition(_._1 == kind)
+      (family.map(_._2).sortBy(p => -Try(Files.getLastModifiedTime(p).toMillis).getOrElse(0L))
+        .drop(keep - 1) ++ orphans.map(_._2)).foreach(p => Try(deleteRecursively(p)))
     } catch { case _: java.io.IOException => () }
 }
 

@@ -1,10 +1,13 @@
 package graft.pipeline
 
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.SQLExecution
 
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
+import java.nio.charset.StandardCharsets.UTF_8
 import java.time.Duration
 
 /** Batched, authenticated HTTP JSON sink — the reference's load stage
@@ -24,8 +27,9 @@ import java.time.Duration
   *
   * Scale notes: one shared HttpClient per executor JVM (never per row);
   * sink parallelism = partition count of the input, decoupled from
-  * shuffle partitions via `EtlPipeline`'s repartition; payloads are built
-  * from pre-serialized JSON strings so the sink does zero row encoding.
+  * shuffle partitions via `EtlPipeline`'s repartition; each batch's body
+  * is built once from the rows' UTF-8 bytes, and the same bytes are
+  * posted, hashed into the batch key and spilled.
   */
 object HttpSink {
 
@@ -54,12 +58,11 @@ object HttpSink {
     * Every attempt shares ONE idempotency key, so a batch the endpoint
     * received but failed to acknowledge is droppable server-side on the
     * retry. */
-  private def postBatchWithRetry(
-      cfg: Config, jsonRows: Seq[String], key: String): Either[String, Unit] = {
+  private def postWithRetry(cfg: Config, body: Array[Byte], key: String): Either[String, Unit] = {
     var attempt = 0
     var last: Either[String, Unit] = Left("unattempted")
     while (attempt <= cfg.maxRetries) {
-      last = postBatch(cfg, jsonRows, key)
+      last = post(cfg, body, key)
       if (last.isRight) return last
       attempt += 1
       if (attempt <= cfg.maxRetries)
@@ -68,23 +71,39 @@ object HttpSink {
     last
   }
 
+  /** The JSON array of a batch of wire rows, as UTF-8 bytes: `[`, the
+    * rows joined by `,`, `]`. The sink posts it, [[Spill]] writes it. */
+  private[pipeline] def payload(rows: Seq[Array[Byte]]): Array[Byte] = {
+    val out = new Array[Byte](rows.iterator.map(_.length + 1).sum + 1)
+    out(0) = '['
+    var at = 1
+    rows.foreach { r =>
+      if (at > 1) { out(at) = ','; at += 1 }
+      System.arraycopy(r, 0, out, at, r.length)
+      at += r.length
+    }
+    out(at) = ']'
+    out
+  }
+
   def postBatch(
       cfg: Config, jsonRows: Seq[String],
-      idempotencyKey: String = java.util.UUID.randomUUID().toString): Either[String, Unit] = {
-    val payload = jsonRows.mkString("[", ",", "]")
+      idempotencyKey: String = java.util.UUID.randomUUID().toString): Either[String, Unit] =
+    post(cfg, payload(jsonRows.map(_.getBytes(UTF_8))), idempotencyKey)
+
+  private def post(cfg: Config, body: Array[Byte], idempotencyKey: String): Either[String, Unit] =
     try {
       val req = HttpRequest.newBuilder(URI.create(cfg.url))
         .timeout(cfg.timeout)
         .header("Content-Type", "application/json")
         .header("Authorization", s"Bearer ${cfg.authToken}")
         .header("X-Idempotency-Key", idempotencyKey)
-        .POST(HttpRequest.BodyPublishers.ofString(payload))
+        .POST(HttpRequest.BodyPublishers.ofByteArray(body))
         .build()
       val resp = client.send(req, HttpResponse.BodyHandlers.ofString())
       if (resp.statusCode() >= 200 && resp.statusCode() < 300) Right(())
       else Left(s"status ${resp.statusCode()}: ${resp.body().take(200)}")
     } catch { case e: Exception => Left(s"${e.getClass.getSimpleName}: ${e.getMessage}") }
-  }
 
   /** Sink a frame of wire-format rows (single string column `json`, see
     * Transform.deviceDataJson) and spill each batch that fails. Every
@@ -125,10 +144,9 @@ object HttpSink {
     deliver(json, cfg, spill = false)((pid, _, group, batch) =>
       s"$keyPrefix#p$pid#$group@${cfg.batchSize}#${contentMd5(batch)}")._1
 
-  private def contentMd5(batch: Seq[String]): String = {
+  private def contentMd5(batch: Seq[Array[Byte]]): String = {
     val md = java.security.MessageDigest.getInstance("MD5")
-    batch.foreach { s =>
-      val b = s.getBytes("UTF-8")
+    batch.foreach { b =>
       // length framing: without it ["ab","c"] and ["a","bc"] — different
       // payloads — would hash (and therefore key) identically
       md.update(java.nio.ByteBuffer.allocate(4).putInt(b.length).array())
@@ -150,7 +168,7 @@ object HttpSink {
     * applies the updates of one successful attempt per partition and drops
     * those of failed attempts: every count is exact under task retry. */
   private[pipeline] def deliver(json: DataFrame, cfg: Config, spill: Boolean)(
-      key: (Int, String, Int, Seq[String]) => String): (Stats, Set[String]) = {
+      key: (Int, String, Int, Seq[Array[Byte]]) => String): (Stats, Set[String]) = {
     val sc = json.sparkSession.sparkContext
     val sentB = sc.longAccumulator("sink.sentBatches")
     val sentR = sc.longAccumulator("sink.sentRecords")
@@ -159,36 +177,42 @@ object HttpSink {
     val rejected = sc.longAccumulator("sink.rejectedRows")
     val delivered = sc.collectionAccumulator[String]("sink.deliveredSegments")
     val segmented = json.columns.length > 1
-    json.foreachPartition { (rows: Iterator[Row]) =>
-      val pid = Option(TaskContext.get()).map(_.partitionId()).getOrElse(0)
-      val wire = rows.filter { r =>
-        val marker = r.isNullAt(0)
-        if (marker) rejected.add(1)
-        !marker
-      }.buffered
-      while (wire.hasNext) {
-        val segment = if (segmented) wire.head.getString(1) else ""
-        val segRows = new Iterator[String] {
-          def hasNext: Boolean = wire.hasNext && (!segmented || wire.head.getString(1) == segment)
-          def next(): String = wire.next().getString(0)
-        }
-        var whole = true
-        segRows.grouped(cfg.batchSize).zipWithIndex.foreach { case (batch, i) =>
-          postBatchWithRetry(cfg, batch, key(pid, segment, i, batch)) match {
-            case Right(_) =>
-              sentB.add(1); sentR.add(batch.size)
-            case Left(err) =>
-              whole = false
-              if (spill) Spill.writeBatch(cfg.spillDir, pid, batch)
-              spillB.add(1); spillR.add(batch.size)
-              System.err.println(s"[sink] worker $pid: batch $i of ${batch.size} rows" +
-                (if (segmented) s" from $segment" else "") + s" failed ($err)" +
-                (if (spill) "; spilled" else "; not spilled"))
+    // The rows are read as Catalyst rows, so a wire row's UTF-8 bytes are
+    // copied out as they are, with no String decode and re-encode; the
+    // run is still one SQL execution of `json`'s plan, as a Dataset
+    // action would make it.
+    val qe = json.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("foreachPartition"))(qe.toRdd.foreachPartition {
+      (rows: Iterator[InternalRow]) =>
+        val pid = Option(TaskContext.get()).map(_.partitionId()).getOrElse(0)
+        val wire = rows.flatMap { r =>
+          if (r.isNullAt(0)) { rejected.add(1); None }
+          else Some((r.getUTF8String(0).getBytes, if (segmented) r.getUTF8String(1).toString else ""))
+        }.buffered
+        while (wire.hasNext) {
+          val segment = wire.head._2
+          val segRows = new Iterator[Array[Byte]] {
+            def hasNext: Boolean = wire.hasNext && wire.head._2 == segment
+            def next(): Array[Byte] = wire.next()._1
           }
+          var whole = true
+          segRows.grouped(cfg.batchSize).zipWithIndex.foreach { case (batch, i) =>
+            val body = payload(batch)
+            postWithRetry(cfg, body, key(pid, segment, i, batch)) match {
+              case Right(_) =>
+                sentB.add(1); sentR.add(batch.size)
+              case Left(err) =>
+                whole = false
+                if (spill) Spill.writeBatch(cfg.spillDir, pid, body)
+                spillB.add(1); spillR.add(batch.size)
+                System.err.println(s"[sink] worker $pid: batch $i of ${batch.size} rows" +
+                  (if (segmented) s" from $segment" else "") + s" failed ($err)" +
+                  (if (spill) "; spilled" else "; not spilled"))
+            }
+          }
+          if (whole) delivered.add(segment)
         }
-        if (whole) delivered.add(segment)
-      }
-    }
+    })
     import scala.jdk.CollectionConverters._
     (Stats(sentB.value, sentR.value, spillB.value, spillR.value, rejected.value),
       delivered.value.asScala.toSet)

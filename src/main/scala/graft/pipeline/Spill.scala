@@ -32,11 +32,15 @@ import java.util.zip.GZIPOutputStream
   */
 object Spill {
 
-  def writeBatch(spillDir: String, workerId: Int, jsonRows: Seq[String]): File = {
+  def writeBatch(spillDir: String, workerId: Int, jsonRows: Seq[String]): File =
+    writeBatch(spillDir, workerId, HttpSink.payload(jsonRows.map(_.getBytes("UTF-8"))))
+
+  /** Spill one batch's body, the JSON array the sink failed to post. */
+  def writeBatch(spillDir: String, workerId: Int, payload: Array[Byte]): File = {
     Files.createDirectories(Paths.get(spillDir))
     val tmp = new File(spillDir, s".tmp_${UUID.randomUUID()}")
     val out = new GZIPOutputStream(Files.newOutputStream(tmp.toPath))
-    try out.write(jsonRows.mkString("[", ",", "]").getBytes("UTF-8"))
+    try out.write(payload)
     finally out.close()
     // atomic publish so replay never sees a half-written file
     val dest = new File(spillDir, s"buffer_failed_worker${workerId}_${UUID.randomUUID()}.json.gz")

@@ -1,7 +1,9 @@
 package graft.pipeline
 
+import graft.expressions.DeviceDataJson
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** The reference's transform (O6-O8, /root/reference/etl/main.go:213-234)
   * as pure Catalyst expressions — no UDFs, fully codegen'd.
@@ -35,15 +37,26 @@ object Transform {
         struct(lit("irq").as("name"), lenientDouble(col("pIRQ")).as("value"))).as("indicators"))
   }
 
-  /** Wire-format JSON for one DeviceData row — matches the reference's
-    * `json.Marshal` field names/order (main.go:33-52), so a payload built
-    * from these strings is byte-compatible with the reference sink's.
-    * A reject marker (null `name`, see [[Extractor]]) becomes a null
-    * string, which [[HttpSink]] counts and skips.
+  /** Wire-format JSON for each DeviceData row, as one string column
+    * `json`: the reference's `json.Marshal` field names and order
+    * (main.go:33-52), so a payload built from these rows is
+    * byte-compatible with the reference sink's.
+    *
+    * The writer is [[graft.expressions.DeviceDataJson]], one codegen'd
+    * expression, and its bytes are those of
+    * `to_json(struct(name, cpu_number, timestamp, indicators))` on every
+    * row: Jackson's string escapes, `Double.toString` numbers, NaN and
+    * the infinities as quoted strings. A null field is left out, as
+    * `to_json` leaves it out. A reject marker (null `name`, see
+    * [[Extractor]]) becomes a null string, which [[HttpSink]] counts and
+    * skips. Fields that are constant in the plan (under
+    * [[ProjectionExtractor]]: cpu_number, timestamp and the indicators)
+    * are serialized once per plan, so each row costs one escaped name
+    * plus one copy of the constant tail.
     */
-  def deviceDataJson(deviceData: DataFrame): DataFrame =
-    deviceData.select(
-      when(col("name").isNotNull, to_json(struct(
-        col("name"), col("cpu_number"), col("timestamp"), col("indicators"))))
-        .as("json"))
+  def deviceDataJson(deviceData: DataFrame): DataFrame = {
+    val field = (c: String) => ColumnBridge.expression(col(c))
+    deviceData.select(ColumnBridge.column(DeviceDataJson(
+      field("name"), field("cpu_number"), field("timestamp"), field("indicators"))).as("json"))
+  }
 }

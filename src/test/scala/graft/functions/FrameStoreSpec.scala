@@ -36,9 +36,9 @@ class FrameStoreSpec extends SparkSpec {
       builds += 1
       b.groupBy("k").agg(sum("v").cast("long").as("s"))
     }
-    val first = stored("t", 1, b,
+    val first = stored("bt_pairs", 1, b,
       Seq("k", "s"), dir)(build)
-    val again = stored("t", 1, b,
+    val again = stored("bt_pairs", 1, b,
       Seq("k", "s"), dir)(build)
     assert(builds == 1, "second call must not rebuild")
     assert(first.collect().map(_.toSeq).toSet ==
@@ -51,8 +51,8 @@ class FrameStoreSpec extends SparkSpec {
     val b2 = base(Seq((1L, 11L)))
     var builds = 0
     def mk(src: DataFrame): DataFrame = { builds += 1; src }
-    stored("t", 1, b1, Seq("k", "v"), dir)(mk(b1))
-    stored("t", 1, b2, Seq("k", "v"), dir)(mk(b2))
+    stored("bt_pairs", 1, b1, Seq("k", "v"), dir)(mk(b1))
+    stored("bt_pairs", 1, b2, Seq("k", "v"), dir)(mk(b2))
     assert(builds == 2, "changed content must miss the cache")
   }
 
@@ -79,8 +79,8 @@ class FrameStoreSpec extends SparkSpec {
     assert(f1._3 != f2._3, "sum limb must distinguish the edit")
     var builds = 0
     def mk(src: DataFrame): DataFrame = { builds += 1; src }
-    stored("t", 1, b1, Seq("k", "v"), dir)(mk(b1))
-    stored("t", 1, b2, Seq("k", "v"), dir)(mk(b2))
+    stored("bt_pairs", 1, b1, Seq("k", "v"), dir)(mk(b1))
+    stored("bt_pairs", 1, b2, Seq("k", "v"), dir)(mk(b2))
     assert(builds == 2, "even-duplicate edit must miss the cache")
   }
 
@@ -89,8 +89,8 @@ class FrameStoreSpec extends SparkSpec {
     val b = base(Seq((1L, 10L)))
     var builds = 0
     def mk: DataFrame = { builds += 1; b }
-    stored("t", 1, b, Seq("k", "v"), dir)(mk)
-    stored("t", 2, b, Seq("k", "v"), dir)(mk)
+    stored("bt_pairs", 1, b, Seq("k", "v"), dir)(mk)
+    stored("bt_pairs", 2, b, Seq("k", "v"), dir)(mk)
     assert(builds == 2)
   }
 
@@ -99,9 +99,9 @@ class FrameStoreSpec extends SparkSpec {
     val b = base(Seq((1L, 10L), (2L, 20L)))
     // persist a frame under kind=t v1 whose columns do NOT match what
     // the consumer expects — must be treated as absent
-    stored("t", 1, b, Seq("k", "v"), dir)(b)
+    stored("bt_pairs", 1, b, Seq("k", "v"), dir)(b)
     var rebuilt = false
-    val out = stored("t", 1, b,
+    val out = stored("bt_pairs", 1, b,
       Seq("k", "v", "extra"), dir) {
       rebuilt = true
       b.withColumn("extra", lit(0L))
@@ -132,9 +132,9 @@ class FrameStoreSpec extends SparkSpec {
     val proj = li.select(col("l_orderkey"), col("l_partkey"),
       col("l_quantity"))
     val cols = Seq("u", "v", "w_uv", "w_vu")
-    val built = stored("bt_pairs_spec", 1, proj,
+    val built = stored("bt_pairs", 1, proj,
       cols, dir)(graft.operators.AgreementQueries.btPairs(li))
-    val loaded = stored("bt_pairs_spec", 1, proj,
+    val loaded = stored("bt_pairs", 1, proj,
       cols, dir)(sys.error("must not rebuild"))
     val key = (df: DataFrame) => df.select(cols.map(col): _*)
       .collect().map(_.toSeq).toSet
@@ -160,7 +160,7 @@ class FrameStoreSpec extends SparkSpec {
     val fs = (1 to 2).map { _ =>
       Future {
         gate.await()
-        stored("race", 1, b,
+        stored("xrace", 1, b,
           Seq("k", "v"), dir.toString)(b)
       }
     }
@@ -172,7 +172,7 @@ class FrameStoreSpec extends SparkSpec {
       try l.iterator().asScala.map(_.getFileName.toString).toVector
       finally l.close()
     }
-    assert(names.count(_.startsWith("race_v")) == 1,
+    assert(names.count(_.startsWith("xrace_v")) == 1,
       s"exactly one published entry expected, saw: $names")
     assert(!names.exists(_.contains(".tmp-")), s"tmp residue: $names")
   }
@@ -184,26 +184,46 @@ class FrameStoreSpec extends SparkSpec {
     val dir = tmpDir()
     (1 to Store.keep + 2).foreach { i =>
       val b = base(Seq((i.toLong, i * 10L)))
-      stored("ev", 1, b, Seq("k", "v"),
+      stored("kmv", 1, b, Seq("k", "v"),
         dir.toString)(b)
       Thread.sleep(15) // distinct mtimes so age ranking is deterministic
     }
-    // a sibling kind must be untouched by ev's pruning
-    stored("evother", 1, base(Seq((9L, 90L))),
+    // a sibling kind must be untouched by kmv's pruning
+    stored("ivf", 1, base(Seq((9L, 90L))),
       Seq("k", "v"), dir.toString)(base(Seq((9L, 90L))))
     val names = {
       val l = Files.list(dir)
       try l.iterator().asScala.map(_.getFileName.toString).toVector
       finally l.close()
     }
-    assert(names.count(_.startsWith("ev_v")) <= Store.keep,
+    assert(names.count(_.startsWith("kmv_v")) <= Store.keep,
       s"family exceeded the eviction bound: $names")
-    assert(names.exists(_.startsWith("evother_v")),
+    assert(names.exists(_.startsWith("ivf_v")),
       "pruning one family must not touch another")
     // the just-published (newest) entry always survives eviction
     val last = base(Seq((Store.keep + 2L, (Store.keep + 2) * 10L)))
-    stored("ev", 1, last, Seq("k", "v"),
+    stored("kmv", 1, last, Seq("k", "v"),
       dir.toString)(sys.error("newest entry must have survived eviction"))
+  }
+
+  test("a publish deletes the entries of kinds outside Store.kinds, and only those") {
+    import scala.jdk.CollectionConverters._
+    val dir = tmpDir()
+    stored("ivf", 1, base(Seq((1L, 10L))), Seq("k", "v"), dir.toString)(base(Seq((1L, 10L))))
+    val orphan = dir.resolve("fuzzy_clusters_clean_v1_fp11dbbd25f6db7ed2_fs3c0ffee_n500")
+    val notAnEntry = dir.resolve("notes_v1")
+    Seq(orphan, notAnEntry).foreach(d => Files.write(Files.createDirectories(d).resolve("part"), Array[Byte](1)))
+    stored("kmv", 1, base(Seq((2L, 20L))), Seq("k", "v"), dir.toString)(base(Seq((2L, 20L))))
+    val names = {
+      val l = Files.list(dir)
+      try l.iterator().asScala.map(_.getFileName.toString).toSet
+      finally l.close()
+    }
+    assert(!names(orphan.getFileName.toString), s"orphan entry left: $names")
+    assert(names(notAnEntry.getFileName.toString), s"a non-store directory was deleted: $names")
+    assert(names.count(n => n.startsWith("ivf_v") || n.startsWith("kmv_v")) == 2, names.toString)
+    intercept[IllegalArgumentException](stored("fuzzy_clusters_clean", 1, base(Seq((3L, 30L))),
+      Seq("k", "v"), dir.toString)(base(Seq((3L, 30L)))))
   }
 
   test("eviction is LRU: a LOADED entry outlives younger unused publishes") {
@@ -213,26 +233,26 @@ class FrameStoreSpec extends SparkSpec {
     // time — loads must count as use.
     val dir = tmpDir()
     val hot = base(Seq((1L, 10L)))
-    stored("lru", 1, hot, Seq("k", "v"),
+    stored("ivf", 1, hot, Seq("k", "v"),
       dir.toString)(hot)
     Thread.sleep(15)
     (2 to Store.keep).foreach { i =>
       // re-LOAD the hot entry (the session-start pattern), then publish
       // a fresh throwaway fingerprint after it
-      stored("lru", 1, hot, Seq("k", "v"),
+      stored("ivf", 1, hot, Seq("k", "v"),
         dir.toString)(sys.error("hot entry must load, not rebuild"))
       Thread.sleep(15)
       val cold = base(Seq((i.toLong, i * 100L)))
-      stored("lru", 1, cold, Seq("k", "v"),
+      stored("ivf", 1, cold, Seq("k", "v"),
         dir.toString)(cold)
       Thread.sleep(15)
     }
     // bound reached; one more unused publish must evict a THROWAWAY,
     // never the hot entry
     val straw = base(Seq((99L, 990L)))
-    stored("lru", 1, straw, Seq("k", "v"),
+    stored("ivf", 1, straw, Seq("k", "v"),
       dir.toString)(straw)
-    stored("lru", 1, hot, Seq("k", "v"),
+    stored("ivf", 1, hot, Seq("k", "v"),
       dir.toString)(sys.error("hot (recently loaded) entry was evicted"))
   }
 }

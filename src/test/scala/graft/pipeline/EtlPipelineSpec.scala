@@ -351,6 +351,9 @@ class EtlPipelineSpec extends SparkSpec {
 
   test("load job: one CSV scan, one positional exchange, no sort, partitions within one row") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+    import graft.expressions.DeviceDataJson
+    import org.apache.spark.sql.catalyst.expressions.StructsToJson
+    import org.apache.spark.sql.catalyst.expressions.objects.Invoke
     import org.apache.spark.sql.catalyst.plans.physical.ShufflePartitionIdPassThrough
     import org.apache.spark.sql.execution.{FileSourceScanExec, InputAdapter, ProjectExec, SortExec, SparkPlan, WholeStageCodegenExec}
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -417,6 +420,20 @@ class EtlPipelineSpec extends SparkSpec {
       }
       assert(belowProjects(exchanges.head.child) eq scans.head,
         s"only a Project may sit between the scan and the exchange:\n${plan.get}")
+
+      // the wire JSON comes from the DeviceData writer, compiled into a
+      // whole-stage codegen stage, and never from Jackson's to_json
+      val exprs = Plan.flatMap(plan.get)(_.expressions.flatMap(_.collect { case e => e }))
+      assert(!exprs.exists {
+        case _: StructsToJson => true
+        case i: Invoke => i.targetObject.dataType.catalogString.contains("StructsToJson")
+        case _ => false
+      }, plan.get.toString)
+      def stage(p: SparkPlan): Seq[SparkPlan] =
+        p +: (p match { case _: InputAdapter => Nil; case o => o.children.flatMap(stage) })
+      val writerStages = Plan.collect(plan.get) { case w: WholeStageCodegenExec => w }
+        .filter(w => stage(w.child).exists(_.expressions.exists(_.exists(_.isInstanceOf[DeviceDataJson]))))
+      assert(writerStages.size == 1, plan.get.toString)
 
       val counts = rowsRead.asScala.toMap
       assert(counts.keySet == (0 until 10).toSet, counts.toString)

@@ -13,8 +13,10 @@ import org.apache.spark.sql.functions._
   * fan-out becomes task parallelism + AsyncMap, per-worker buffers become
   * `grouped(batchSize)` in the sink, and the bounded-channel backpressure
   * is Spark's pull-based iterators. Replay happens *before* the live run
-  * and through the same sink (fixing the reference's enqueue-then-delete
-  * loss window).
+  * and re-posts each spilled batch under its key (fixing the reference's
+  * enqueue-then-delete loss window). Each run draws one batch-key tag on
+  * the driver ([[HttpSink.batchKey]]): a retried load task re-posts its
+  * batches under the same keys, and a deliberate re-run under new ones.
   *
   * Routing (the pipeline's one exchange, main.go:143-145) sends row i of
   * an input split to load partition `pmod(monotonically_increasing_id, n)`
@@ -91,7 +93,8 @@ class EtlPipeline(spark: SparkSession, cfg: EtlConfig) {
     val (replayed, deleted) = Spill.replay(spark, cfg.sink)
     val t1 = System.nanoTime()
 
-    val stats = HttpSink.write(Transform.deviceDataJson(loadRows()), cfg.sink)
+    val stats = HttpSink.write(Transform.deviceDataJson(loadRows()), cfg.sink,
+      tag = java.util.UUID.randomUUID().toString, spill = true)
     val t2 = System.nanoTime()
 
     EtlRunStats(

@@ -3,7 +3,9 @@ package graft.pipeline
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.unsafe.Platform
 
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
@@ -20,10 +22,21 @@ import java.time.Duration
   * in `batchSize` groups (count-based micro-batching, main.go:250) and
   * POSTs one JSON array per group; a failed batch is spilled to the
   * gzip-JSON dead-letter dir ([[Spill]]) instead of lost. A null row is a
-  * reject marker ([[Extractor]]): it is counted and never posted. Load,
-  * stream and replay all deliver through one partition loop
-  * ([[deliver]]); they differ only in the key of a batch and in whether a
-  * failed batch spills.
+  * reject marker ([[Extractor]]): it is counted and never posted.
+  *
+  * One batch key for every delivery ([[batchKey]]): batch i of partition
+  * p goes out as `X-Idempotency-Key: <tag>_p<p>_<i>_<batchSize>_<hash>`,
+  * where the hash is 128 bits of the posted body. The load draws its tag
+  * once per run, so a deliberate re-run is never deduped; a stream uses
+  * its own tag plus the micro-batch id. A retried task that yields the
+  * same rows in the same order rebuilds the same keys, so a keyed endpoint
+  * drops what the failed attempt already posted, and a spill file, named
+  * after its key, is replaced rather than doubled; [[Spill.replay]]
+  * re-sends a spilled body under its key. This holds on the
+  * [[ProjectionExtractor]] path, whose exchange is DETERMINATE. The
+  * [[AsyncMap]] extractors emit rows in completion order, so a retried
+  * batch there hashes differently: no record is lost, but one may be
+  * stored twice.
   *
   * Scale notes: one shared HttpClient per executor JVM (never per row);
   * sink parallelism = partition count of the input, decoupled from
@@ -58,7 +71,7 @@ object HttpSink {
     * Every attempt shares ONE idempotency key, so a batch the endpoint
     * received but failed to acknowledge is droppable server-side on the
     * retry. */
-  private def postWithRetry(cfg: Config, body: Array[Byte], key: String): Either[String, Unit] = {
+  private[pipeline] def postWithRetry(cfg: Config, body: Array[Byte], key: String): Either[String, Unit] = {
     var attempt = 0
     var last: Either[String, Unit] = Left("unattempted")
     while (attempt <= cfg.maxRetries) {
@@ -86,6 +99,9 @@ object HttpSink {
     out
   }
 
+  /** One POST of one batch, outside any delivery: perfbench times the
+    * sink's wire cost with it. No pipeline path calls it; they all key
+    * through [[write]]. */
   def postBatch(
       cfg: Config, jsonRows: Seq[String],
       idempotencyKey: String = java.util.UUID.randomUUID().toString): Either[String, Unit] =
@@ -105,78 +121,46 @@ object HttpSink {
       else Left(s"status ${resp.statusCode()}: ${resp.body().take(200)}")
     } catch { case e: Exception => Left(s"${e.getClass.getSimpleName}: ${e.getMessage}") }
 
-  /** Sink a frame of wire-format rows (single string column `json`, see
-    * Transform.deviceDataJson) and spill each batch that fails. Every
-    * batch carries a fresh UUID key: a deliberate re-run of the same input
-    * must not be deduped as a duplicate. Returns per-run delivery stats. */
-  def write(json: DataFrame, cfg: Config): Stats =
-    deliver(json, cfg, spill = true)((_, _, _, _) => java.util.UUID.randomUUID().toString)._1
-
-  /** Keyed write for RETRIED deliveries (the streaming micro-batch path):
-    * every POST carries the deterministic idempotency key
-    * `<keyPrefix>#p<pid>#<groupIdx>@<batchSize>#<contentMd5>`, stable
-    * across re-runs of the same delivery, so a keyed endpoint drops the
-    * already-received prefix of a crashed-mid-way delivery instead of
-    * storing it twice.
+  /** The one batch key: `<tag>_p<pid>_<i>_<size>_<hash>`, the hash two
+    * seeded XXH64s of the body (128 bits; a guard against accidental
+    * aliasing, not against an adversary). The body hash is what keeps two
+    * different payloads at one position apart: a stream whose commit log
+    * was wiped restarts its batch ids at 0, and its new rows must not be
+    * acknowledged as duplicates. Only `[A-Za-z0-9._-]` appear, so the key
+    * is safe in a file name ([[Spill]]), a Hadoop path and a URI.
     *
-    * The content hash is load-bearing: without it the key identifies only
-    * a POSITION, and two different payloads could alias — a checkpoint
-    * wipe that restarts batchIds at 0 against an endpoint whose key store
-    * persists (corrected-feed reprocessing) would have its new rows ACKed
-    * as duplicates and silently dropped. With it, aliasing requires the
-    * same position AND the same bytes, in which case dedup is the desired
-    * outcome.
-    *
-    * The caller MUST hand over a frame with a DETERMINISTIC partition
-    * layout (content-hash partitioning + sortWithinPartitions — see
-    * StreamingEtl.deliverBatch); under a nondeterministic layout the same
-    * key would cover a different row extent on retry and a keyed sink
-    * would drop undelivered rows (same contract as Spill.replay's
-    * `<file>#<batchIdx>` keys). Never spills: the retry of the whole
-    * delivery is the durability mechanism.
-    *
-    * KEY-FORMAT STABILITY: the key string (including the md5 framing) is
-    * a wire contract with the endpoint's dedup store. Changing it while a
-    * crashed delivery is pending redelivery makes the retried batches
-    * look new to the endpoint (one-time duplicates). Drain or fully
-    * deliver in-flight streams before deploying a key-format change. */
-  def writeKeyed(json: DataFrame, cfg: Config, keyPrefix: String): Stats =
-    deliver(json, cfg, spill = false)((pid, _, group, batch) =>
-      s"$keyPrefix#p$pid#$group@${cfg.batchSize}#${contentMd5(batch)}")._1
-
-  private def contentMd5(batch: Seq[Array[Byte]]): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    batch.foreach { b =>
-      // length framing: without it ["ab","c"] and ["a","bc"] — different
-      // payloads — would hash (and therefore key) identically
-      md.update(java.nio.ByteBuffer.allocate(4).putInt(b.length).array())
-      md.update(b)
-    }
-    md.digest().map("%02x".format(_)).mkString
+    * KEY-FORMAT STABILITY: the key is a wire contract with the endpoint's
+    * dedup store. Changing it while a crashed delivery is pending
+    * redelivery makes the redelivered batches look new (one-time
+    * duplicates). Drain or fully deliver in-flight streams before
+    * deploying a key-format change. */
+  private[pipeline] def batchKey(tag: String, pid: Int, i: Int, size: Int, body: Array[Byte]): String = {
+    def h(seed: Long) = XXH64.hashUnsafeBytes(body, Platform.BYTE_ARRAY_OFFSET, body.length, seed)
+    f"${tag}_p${pid}_${i}_${size}_${h(0L)}%016x${h(0x9e3779b97f4a7c15L)}%016x"
   }
 
-  /** The one delivery loop, behind [[write]], [[writeKeyed]] and
-    * [[Spill.replay]]. Column 0 of `json` is the wire row (null = reject
-    * marker). An optional column 1 names each row's segment, whose rows
-    * are consecutive within a partition (a spill file on replay); without
-    * it the whole partition is one segment. Batches of at most `batchSize`
-    * rows never cross a segment; batch i of a segment is posted under
-    * `key(partitionId, segment, i, rows)`, and spilled on failure only
-    * when `spill`. Returns the stats and the segments delivered in full.
+  /** Sink a frame of wire-format rows (column 0 is the JSON row, see
+    * Transform.deviceDataJson; null = reject marker). Batch i of a
+    * partition is posted under `batchKey(tag, partitionId, i, batchSize,
+    * body)`; a batch that still fails after the retries is spilled under
+    * that key when `spill`, and otherwise only counted. A streaming
+    * caller does not spill: the retry of its micro-batch is its
+    * durability mechanism.
+    *
+    * The caller hands over a frame whose partitions hold the same rows in
+    * the same order on every attempt wherever it wants a retry deduped.
     *
     * The accumulators are updated in result tasks only, where Spark
     * applies the updates of one successful attempt per partition and drops
     * those of failed attempts: every count is exact under task retry. */
-  private[pipeline] def deliver(json: DataFrame, cfg: Config, spill: Boolean)(
-      key: (Int, String, Int, Seq[Array[Byte]]) => String): (Stats, Set[String]) = {
+  def write(json: DataFrame, cfg: Config, tag: String, spill: Boolean): Stats = {
+    require(tag.matches("[A-Za-z0-9._-]+"), s"batch key tag '$tag' must match [A-Za-z0-9._-]+")
     val sc = json.sparkSession.sparkContext
     val sentB = sc.longAccumulator("sink.sentBatches")
     val sentR = sc.longAccumulator("sink.sentRecords")
     val spillB = sc.longAccumulator("sink.spilledBatches")
     val spillR = sc.longAccumulator("sink.spilledRecords")
     val rejected = sc.longAccumulator("sink.rejectedRows")
-    val delivered = sc.collectionAccumulator[String]("sink.deliveredSegments")
-    val segmented = json.columns.length > 1
     // The rows are read as Catalyst rows, so a wire row's UTF-8 bytes are
     // copied out as they are, with no String decode and re-encode; the
     // run is still one SQL execution of `json`'s plan, as a Dataset
@@ -186,35 +170,22 @@ object HttpSink {
       (rows: Iterator[InternalRow]) =>
         val pid = Option(TaskContext.get()).map(_.partitionId()).getOrElse(0)
         val wire = rows.flatMap { r =>
-          if (r.isNullAt(0)) { rejected.add(1); None }
-          else Some((r.getUTF8String(0).getBytes, if (segmented) r.getUTF8String(1).toString else ""))
-        }.buffered
-        while (wire.hasNext) {
-          val segment = wire.head._2
-          val segRows = new Iterator[Array[Byte]] {
-            def hasNext: Boolean = wire.hasNext && wire.head._2 == segment
-            def next(): Array[Byte] = wire.next()._1
+          if (r.isNullAt(0)) { rejected.add(1); None } else Some(r.getUTF8String(0).getBytes)
+        }
+        wire.grouped(cfg.batchSize).zipWithIndex.foreach { case (batch, i) =>
+          val body = payload(batch)
+          val key = batchKey(tag, pid, i, cfg.batchSize, body)
+          postWithRetry(cfg, body, key) match {
+            case Right(_) =>
+              sentB.add(1); sentR.add(batch.size)
+            case Left(err) =>
+              if (spill) Spill.writeBatch(cfg.spillDir, pid, key, body)
+              spillB.add(1); spillR.add(batch.size)
+              System.err.println(s"[sink] worker $pid: batch $i of ${batch.size} rows failed ($err)" +
+                (if (spill) "; spilled" else "; not spilled"))
           }
-          var whole = true
-          segRows.grouped(cfg.batchSize).zipWithIndex.foreach { case (batch, i) =>
-            val body = payload(batch)
-            postWithRetry(cfg, body, key(pid, segment, i, batch)) match {
-              case Right(_) =>
-                sentB.add(1); sentR.add(batch.size)
-              case Left(err) =>
-                whole = false
-                if (spill) Spill.writeBatch(cfg.spillDir, pid, body)
-                spillB.add(1); spillR.add(batch.size)
-                System.err.println(s"[sink] worker $pid: batch $i of ${batch.size} rows" +
-                  (if (segmented) s" from $segment" else "") + s" failed ($err)" +
-                  (if (spill) "; spilled" else "; not spilled"))
-            }
-          }
-          if (whole) delivered.add(segment)
         }
     })
-    import scala.jdk.CollectionConverters._
-    (Stats(sentB.value, sentR.value, spillB.value, spillR.value, rejected.value),
-      delivered.value.asScala.toSet)
+    Stats(sentB.value, sentR.value, spillB.value, spillR.value, rejected.value)
   }
 }

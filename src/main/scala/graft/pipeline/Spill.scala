@@ -3,47 +3,52 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import com.fasterxml.jackson.databind.ObjectMapper
+
 import java.io.File
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.util.UUID
-import java.util.zip.GZIPOutputStream
+import java.util.zip.{GZIPInputStream, GZIPOutputStream}
+import scala.util.Try
 
 /** Dead-letter spill + replay protocol (reference O15-O18,
   * /root/reference/etl/main.go:311-394).
   *
-  * Spill files are gzip streams holding one JSON array of DeviceData wire
-  * rows, named `buffer_failed_worker<pid>_<uuid>.json.gz` — same format
-  * and name shape as the reference (main.go:271,378-394), with a uuid so
-  * concurrent workers never collide.
+  * A spill file is one failed POST: a gzip stream holding exactly the
+  * JSON array the sink could not deliver, named
+  * `buffer_failed_worker<pid>_<key>.json.gz` after that POST's batch key
+  * ([[HttpSink.batchKey]]) — the reference's format and name shape
+  * (main.go:271,378-394), with the key where the reference has nothing.
+  * A retried task that spills the same batch again replaces the file
+  * under the same name instead of adding a second one.
+  *
+  * Replay is a deferred retry: it re-posts each file's bytes under the
+  * key in its name, so an endpoint that already holds the batch (a retry
+  * delivered it live) drops the copy by key. Files named before keys
+  * (`buffer_failed_worker<pid>_<uuid>.json.gz`) and the reference's own
+  * `buffer_failed_worker<pid>.json.gz` replay under their name stem.
   *
   * Divergence from the reference, on purpose (SURVEY.md §2.2): the
   * reference deletes a spill file right after re-*enqueueing* its records
-  * (main.go:329-337), leaving a crash window that loses the batch. Here
-  * replay delivers through the same sink loop as a live load and deletes
-  * a file only after every one of its rows was re-*delivered* —
-  * at-least-once with no loss window (a keyed endpoint drops the
-  * already-delivered batches of a partially-replayed file, an unkeyed
-  * one may store them twice; exactly-once is the streaming upgrade in
-  * graft.streaming).
+  * (main.go:329-337), leaving a crash window that loses the batch. Here a
+  * file is deleted only after its POST was acknowledged; a file is either
+  * delivered whole or kept whole.
   *
   * On a cluster the spill dir would be shared storage (HDFS/S3); the
-  * format is plain gzip JSON precisely so `spark.read.json` replays it
-  * with no custom reader.
+  * format is plain gzip JSON precisely so `spark.read.json` reads it with
+  * no custom reader.
   */
 object Spill {
 
-  def writeBatch(spillDir: String, workerId: Int, jsonRows: Seq[String]): File =
-    writeBatch(spillDir, workerId, HttpSink.payload(jsonRows.map(_.getBytes("UTF-8"))))
-
-  /** Spill one batch's body, the JSON array the sink failed to post. */
-  def writeBatch(spillDir: String, workerId: Int, payload: Array[Byte]): File = {
+  /** Spill one failed POST's body under its batch key. A file of the same
+    * key is replaced atomically: replay never sees a half-written file. */
+  def writeBatch(spillDir: String, workerId: Int, key: String, payload: Array[Byte]): File = {
     Files.createDirectories(Paths.get(spillDir))
     val tmp = new File(spillDir, s".tmp_${UUID.randomUUID()}")
     val out = new GZIPOutputStream(Files.newOutputStream(tmp.toPath))
     try out.write(payload)
     finally out.close()
-    // atomic publish so replay never sees a half-written file
-    val dest = new File(spillDir, s"buffer_failed_worker${workerId}_${UUID.randomUUID()}.json.gz")
+    val dest = new File(spillDir, s"buffer_failed_worker${workerId}_$key.json.gz")
     Files.move(tmp.toPath, dest.toPath, StandardCopyOption.ATOMIC_MOVE)
     dest
   }
@@ -54,18 +59,22 @@ object Spill {
     else d.listFiles((_, n) => n.startsWith("buffer_failed_worker") && n.endsWith(".json.gz")).toSeq
   }
 
-  /** The one spill-file read recipe (schema + multiLine gzip JSON) —
-    * readSpilled and replay both go through here so the format cannot
-    * drift between them.
+  /** The batch key a spill file is replayed under: the name between
+    * `buffer_failed_worker<pid>_` and `.json.gz`, or the whole stem when
+    * the name has no key part (the reference's own files). */
+  private[pipeline] def keyOf(fileName: String): String = {
+    val stem = fileName.stripSuffix(".json.gz")
+    "^buffer_failed_worker\\d+_(.+)$".r.findFirstMatchIn(stem).fold(stem)(_.group(1))
+  }
+
+  /** The spill-file read recipe behind [[readSpilled]] (schema + multiLine
+    * gzip JSON).
     *
-    * LOAD-BEARING FORMAT ASSUMPTION: replay's idempotency key
-    * `<file>#<batchIdx>@<batchSize>` is stable across replay rounds ONLY
-    * because multiLine JSON files are unsplittable — each file is read
-    * whole, in one task, with stable intra-file row order, so batch index
-    * i always covers the same row extent. Switching this recipe to a
-    * splittable format (e.g. line-delimited JSON) would alias keys over
-    * different extents and a keyed sink would silently drop undelivered
-    * tail rows. SpillRoundtripSpec's "each spill file occupies exactly one
+    * LOAD-BEARING FORMAT ASSUMPTION: a spill file is ONE JSON array, so
+    * it must be read whole, in one task. multiLine JSON files are
+    * unsplittable, which gives exactly that; a splittable recipe (e.g.
+    * line-delimited JSON) would cut an array apart and read corrupt rows.
+    * SpillRoundtripSpec's "each spill file occupies exactly one
     * partition" test breaks loudly if this recipe ever changes.
     * (package-visible so that test exercises the real recipe) */
   private[pipeline] def readRaw(spark: SparkSession, files: Seq[File]): DataFrame =
@@ -93,34 +102,31 @@ object Spill {
             lit(0)))
   }
 
-  /** Replay through the sink's one delivery loop ([[HttpSink.deliver]])
-    * with each spill file as a segment: a file's rows go out as their own
-    * batches, and the file is deleted as soon as ITS rows are all
-    * delivered — one still-failing file does not pin the delivered ones
-    * into the next replay round.
-    *
-    * Replay batches are keyed `<spillFile>#<batchIndex>@<batchSize>`,
-    * stable across replay rounds, so a keyed sink drops the second copy of
-    * the delivered part of a partially-replayed file. batchSize is in the
-    * key because under another batch size the same index covers a
-    * DIFFERENT row extent, and deduping it would silently drop tail rows.
-    * Failed batches are NOT re-spilled (the original files remain the
-    * single durable copy). One distributed job regardless of file count —
-    * multiLine JSON reads each gzip file whole in one task, so a file's
-    * rows are always consecutive within a partition. Returns
-    * (replayedRecords, deletedFiles). */
-  def replay(spark: SparkSession, cfg: HttpSink.Config): (Long, Int) = {
-    val files = listSpillFiles(cfg.spillDir)
-    if (files.isEmpty) return (0L, 0)
-    val json = Transform.deviceDataJson(readRaw(spark, files))
-      .withColumn("segment", input_file_name())
-    val (stats, delivered) = HttpSink.deliver(json, cfg, spill = false)((_, file, i, _) =>
-      s"${baseName(file)}#$i@${cfg.batchSize}")
-    // file paths come back as URIs; match on the (uuid-unique) basename
-    val okNames = delivered.map(baseName)
-    val deleted = files.count(f => okNames(f.getName) && Files.deleteIfExists(f.toPath))
-    (stats.sentRecords, deleted)
-  }
+  @transient private lazy val mapper = new ObjectMapper()
 
-  private def baseName(path: String): String = path.substring(path.lastIndexOf('/') + 1)
+  /** Re-post every spill file, in one Spark job over the file list: each
+    * file's gunzipped bytes go out as one POST under [[keyOf]] its name,
+    * with the sink's retries, and are never re-spilled (the file stays the
+    * one durable copy). The files whose POST was acknowledged are
+    * deleted; a file that fails, or does not hold a JSON array, is kept
+    * whole for the next round. Returns (replayedRecords, deletedFiles),
+    * the records counted as the delivered arrays' sizes. */
+  def replay(spark: SparkSession, cfg: HttpSink.Config): (Long, Int) = {
+    val files = listSpillFiles(cfg.spillDir).map(_.getPath)
+    if (files.isEmpty) return (0L, 0)
+    val sc = spark.sparkContext
+    val delivered = sc.parallelize(files, math.min(files.size, sc.defaultParallelism)).flatMap { path =>
+      val file = new File(path)
+      val sent = Try {
+        val in = new GZIPInputStream(Files.newInputStream(file.toPath))
+        val body = try in.readAllBytes() finally in.close()
+        val records = mapper.readTree(body)
+        require(records.isArray, "not a JSON array")
+        HttpSink.postWithRetry(cfg, body, keyOf(file.getName)).map(_ => records.size.toLong)
+      }.fold(e => Left(e.toString), identity)
+      sent.left.foreach(err => System.err.println(s"[replay] ${file.getName} kept ($err)"))
+      sent.toOption.map(path -> _)
+    }.collect()
+    (delivered.map(_._2).sum, delivered.count { case (p, _) => Files.deleteIfExists(Paths.get(p)) })
+  }
 }

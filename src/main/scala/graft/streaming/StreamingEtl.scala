@@ -20,10 +20,13 @@ import java.nio.file.{Files, Paths}
   * between delivery and checkpoint does not double-send. The streaming
   * path never writes dead-letter spill files (checkpoint retry is the
   * durability mechanism; a spill copy would be redelivered by the retry
-  * anyway and then double-delivered by any later Spill.replay). Within a
-  * batch, partial redelivery can still duplicate — full exactly-once
-  * needs a transactional sink, which a plain HTTP POST endpoint cannot
-  * offer.
+  * anyway and then delivered again by any later Spill.replay). A batch
+  * that crashes part-way is redelivered whole, and every batch key
+  * ([[HttpSink.batchKey]]) comes back the same, so a keyed endpoint drops
+  * the prefix that already landed: each record is stored once. An
+  * endpoint that ignores the key stores that prefix twice; only a
+  * transactional sink could prevent it, which a plain HTTP POST endpoint
+  * cannot offer.
   */
 object StreamingEtl {
 
@@ -49,14 +52,14 @@ object StreamingEtl {
     * Crash-mid-batch is the hard case the layout below exists for: if the
     * query dies AFTER some HTTP groups landed but BEFORE the commit
     * marker, checkpoint retry redelivers the whole micro-batch. Every
-    * group therefore carries a DETERMINISTIC idempotency key
-    * (`<stream>#b<batchId>#p<pid>#<group>@<size>`, HttpSink.writeKeyed),
-    * and the frame is laid out deterministically — hash-partitioned on
-    * the serialized row content and sorted within partitions — so the
-    * retried delivery reproduces the exact same (key -> row extent)
-    * mapping no matter how the source re-ordered the replayed rows. A
-    * keyed endpoint then drops the already-received prefix: zero loss,
-    * zero duplicates (proven end to end in StreamingSpec). */
+    * group is written under the sink's one batch key with the tag
+    * `<stream>.b<batchId>` ([[HttpSink.write]]), and the frame is laid out
+    * deterministically — hash-partitioned on the serialized row content
+    * and sorted within partitions — so the retried delivery reproduces the
+    * exact same (key -> row extent) mapping no matter how the source
+    * re-ordered the replayed rows. A keyed endpoint then drops the
+    * already-received prefix: zero loss, zero duplicates (proven end to
+    * end in StreamingSpec). */
   def deliverBatch(
       batch: DataFrame,
       batchId: Long,
@@ -68,14 +71,14 @@ object StreamingEtl {
     val json = Transform.deviceDataJson(batch)
       .repartition(loadPartitions, org.apache.spark.sql.functions.col("json"))
       .sortWithinPartitions("json")
-    // Key prefix ties to this stream's commit log (stable across restarts
+    // The key tag ties to this stream's commit log (stable across restarts
     // of the same checkpoint, distinct between streams sharing a sink).
     val streamTag = Integer.toHexString(commitLogDir.hashCode)
-    // writeKeyed never spills: in streaming the checkpoint retry IS the
-    // durability mechanism. Spilling here would leave dead-letter copies
-    // of records the retried micro-batch delivers anyway — a systematic
+    // No spill: in streaming the checkpoint retry IS the durability
+    // mechanism. Spilling here would leave dead-letter copies of records
+    // the retried micro-batch delivers anyway — a systematic
     // double-delivery path for any Spill.replay sharing this Config.
-    val stats = HttpSink.writeKeyed(json, sink, keyPrefix = s"$streamTag#b$batchId")
+    val stats = HttpSink.write(json, sink, tag = s"$streamTag.b$batchId", spill = false)
     if (stats.spilledBatches > 0)
       throw new IllegalStateException(
         s"batch $batchId: ${stats.spilledBatches} groups undeliverable; failing the micro-batch for checkpoint retry")

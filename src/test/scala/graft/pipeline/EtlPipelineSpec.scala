@@ -2,8 +2,6 @@ package graft.pipeline
 
 import graft.SparkSpec
 
-import org.apache.spark.sql.functions.spark_partition_id
-
 import java.nio.file.Files
 
 /** End-to-end pipeline + sink + spill/replay integration against the
@@ -192,93 +190,113 @@ class EtlPipelineSpec extends SparkSpec {
     } finally server.stop()
   }
 
-  test("within-file partial replay: idempotency key stops the delivered half from duplicating") {
+  test("replay re-sends a spilled POST under its live key; a second copy is dropped by that key") {
     val server = new MockLoadServer()
     val spillDir = freshSpill()
     try {
-      // ONE spill file of 40 records, replayed as two 20-row batches
-      server.failStatus.set(Some(500))
+      // one load partition, two batches of 20; the second (devices 21-40)
+      // is refused and spills
       val cfg = EtlConfig(
         csvPath = writeCsv(40),
         sink = HttpSink.Config(server.loadUrl, "t", batchSize = 20, spillDir = spillDir),
         extractor = ProjectionExtractor(Some(1751450637L)),
         loadPartitions = 1)
-      new EtlPipeline(spark, cfg).run()
-      val files = Spill.listSpillFiles(spillDir)
-      assert(files.size == 2) // 40 rows / batchSize 20 -> two spilled batches
-      // merge into one file so a single file spans two replay batches
-      val merged = Spill.readSpilled(spark, spillDir).drop("worker_id")
-      val rows = graft.pipeline.Transform.deviceDataJson(merged)
-        .collect().map(_.getString(0)).sorted.toSeq
-      files.foreach(f => java.nio.file.Files.delete(f.toPath))
-      Spill.writeBatch(spillDir, 0, rows)
-      assert(Spill.listSpillFiles(spillDir).size == 1)
+      server.failContaining.set(Some("\"device-40\""))
+      val s1 = new EtlPipeline(spark, cfg).run()
+      assert(s1.sink.sentRecords == 20 && s1.sink.spilledRecords == 20)
+      val Seq((liveKey, _)) = server.receivedKeyed
+      assert(liveKey.matches("[A-Za-z0-9._-]+_p0_0_20_[0-9a-f]{32}"), liveKey)
+      val tag = liveKey.substring(0, liveKey.indexOf("_p0_0_20_"))
 
-      // round 1: first batch POST fails, second succeeds -> file KEPT
-      server.failStatus.set(None)
-      server.reset()
-      server.failNext.set(1)
+      // the spill file is the failed POST, named after its key
+      val Seq(file) = Spill.listSpillFiles(spillDir)
+      val gz = Files.readAllBytes(file.toPath)
+      val body = new java.util.zip.GZIPInputStream(new java.io.ByteArrayInputStream(gz)).readAllBytes()
+      assert(file.getName == s"buffer_failed_worker0_${HttpSink.batchKey(tag, 0, 1, 20, body)}.json.gz")
+
+      server.failContaining.set(None)
       val (sent1, del1) = Spill.replay(spark, cfg.sink)
-      assert(sent1 == 20 && del1 == 0)
-      assert(Spill.listSpillFiles(spillDir).size == 1)
+      assert(sent1 == 20 && del1 == 1 && Spill.listSpillFiles(spillDir).isEmpty)
+      assert(server.receivedKeyed.drop(1) == Seq(Spill.keyOf(file.getName) -> new String(body, "UTF-8")))
 
-      // round 2 re-posts both batches: the already-delivered one is
-      // dropped by its idempotency key, the failed one lands
-      val (sent2, del2) = Spill.replay(spark, cfg.sink)
-      assert(del2 == 1)
-      assert(Spill.listSpillFiles(spillDir).isEmpty)
+      // a crash between the acknowledgement and the delete leaves the
+      // file behind: the next replay is acknowledged but not stored
+      Files.write(file.toPath, gz)
+      val (_, del2) = Spill.replay(spark, cfg.sink)
+      assert(del2 == 1 && Spill.listSpillFiles(spillDir).isEmpty)
       assert(server.receivedRecordCount == 40, "no record delivered twice")
       assert(server.duplicateCount == 1, "the replayed duplicate was key-deduped")
     } finally server.stop()
   }
 
-  test("replay of several spill files in one partition: batches and keys never cross a file") {
+  test("replay: one POST per spill file, its spilled bytes under its file's key; a failed file is kept whole") {
     import spark.implicits._
     val server = new MockLoadServer()
     val spillDir = freshSpill()
-    // three files whose row counts batchSize 4 does not divide; file f's
-    // rows are named f<f>-d<i>, so a payload shows which files it holds
+    // three files whose row counts the batch size 4 does not divide; file
+    // f's rows are named f<f>-d<i>
     val sizes = Seq(7, 5, 9)
-    val fileOf = sizes.zipWithIndex.map { case (n, f) =>
+    val posts = sizes.zipWithIndex.map { case (n, f) =>
       val rows = (0 until n).map(i => DeviceData(s"f$f-d$i", "0", 1L, Seq(Indicator("irq", 0.5))))
-      s"f$f" -> Spill.writeBatch(spillDir, f,
-        Transform.deviceDataJson(rows.toDF()).as[String].collect().toSeq).getName
-    }.toMap
+      val body = HttpSink.payload(
+        Transform.deviceDataJson(rows.toDF()).as[String].collect().map(_.getBytes("UTF-8")).toSeq)
+      val key = HttpSink.batchKey("spec", f, 0, n, body)
+      Spill.writeBatch(spillDir, f, key, body)
+      key -> new String(body, "UTF-8")
+    }
     val cfg = HttpSink.Config(server.loadUrl, "t", batchSize = 4, spillDir = spillDir)
-    // pack every file into one read partition
-    val packing = Seq("spark.sql.files.openCostInBytes" -> "1", "spark.sql.files.minPartitionNum" -> "1")
-    val saved = packing.map { case (k, _) => k -> spark.conf.getOption(k) }
-    packing.foreach { case (k, v) => spark.conf.set(k, v) }
     try {
-      val parts = Spill.readRaw(spark, Spill.listSpillFiles(spillDir))
-        .select(spark_partition_id()).distinct().count()
-      assert(parts == 1, s"the spill files were read in $parts partitions, not one")
-
-      // round 1: the batch holding f1-d4 (f1's second, of one row) fails
+      // round 1: the one POST of f1 (it holds f1-d4) fails
       server.failContaining.set(Some("\"f1-d4\""))
       val (sent1, del1) = Spill.replay(spark, cfg)
-      assert(sent1 == 7 + 9 + 4 && del1 == 2, s"sent=$sent1 deleted=$del1")
-      assert(Spill.listSpillFiles(spillDir).map(_.getName) == Seq(fileOf("f1")))
+      assert(sent1 == 7 + 9 && del1 == 2, s"sent=$sent1 deleted=$del1")
+      assert(Spill.listSpillFiles(spillDir).map(_.getName) ==
+        Seq(s"buffer_failed_worker1_${posts(1)._1}.json.gz"))
+      assert(server.receivedKeyed.toSet == Set(posts(0), posts(2)))
 
-      val byFile = server.receivedKeyed.map { case (key, body) =>
-        val tags = "\"name\":\"(f\\d)-d".r.findAllMatchIn(body).map(_.group(1)).toSet
-        assert(tags.size == 1, s"one POST carried rows of files $tags")
-        val file = fileOf(tags.head)
-        assert(key.startsWith(file + "#"), s"key $key on a payload of $file")
-        file -> key.stripPrefix(file + "#")
-      }.groupBy(_._1).map { case (f, ks) => f -> ks.map(_._2).sorted }
-      assert(byFile == Map(fileOf("f0") -> Seq("0@4", "1@4"), fileOf("f1") -> Seq("0@4"),
-        fileOf("f2") -> Seq("0@4", "1@4", "2@4")), byFile.toString)
-
-      // round 2 delivers f1's second batch; its first is key-deduped
+      // round 2: the kept file goes out whole, in one POST
       server.failContaining.set(None)
-      val (_, del2) = Spill.replay(spark, cfg)
-      assert(del2 == 1 && Spill.listSpillFiles(spillDir).isEmpty)
-      assert(server.receivedRecordCount == sizes.sum && server.duplicateCount == 1)
-    } finally {
-      saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
-      server.stop()
+      val (sent2, del2) = Spill.replay(spark, cfg)
+      assert(sent2 == 5 && del2 == 1 && Spill.listSpillFiles(spillDir).isEmpty)
+      assert(server.receivedKeyed.size == 3 && server.receivedKeyed.toSet == posts.toSet)
+      assert(server.receivedRecordCount == sizes.sum && server.duplicateCount == 0)
+    } finally server.stop()
+  }
+
+  test("legacy and reference-named spill files each replay once under their name stem") {
+    val server = new MockLoadServer()
+    val spillDir = freshSpill()
+    def row(i: Int) =
+      s"""{"name":"device-$i","cpu_number":"0","timestamp":1,"indicators":[{"name":"irq","value":0.5}]}"""
+    def gzip(name: String, rows: Seq[String]): String = {
+      val body = rows.mkString("[", ",", "]")
+      val out = new java.util.zip.GZIPOutputStream(Files.newOutputStream(java.nio.file.Paths.get(spillDir, name)))
+      try out.write(body.getBytes("UTF-8")) finally out.close()
+      body
     }
+    val uuid = java.util.UUID.randomUUID().toString
+    val legacy = gzip(s"buffer_failed_worker3_$uuid.json.gz", (1 to 3).map(row))
+    val reference = gzip("buffer_failed_worker3.json.gz", (4 to 7).map(row))
+    val keyed = (8 to 9).map(row).mkString("[", ",", "]")
+    val key = HttpSink.batchKey("spec", 7, 0, 2, keyed.getBytes("UTF-8"))
+    Spill.writeBatch(spillDir, 7, key, keyed.getBytes("UTF-8"))
+    try {
+      // worker ids come back from all three name shapes
+      val workers = Spill.readSpilled(spark, spillDir).select("worker_id").collect().map(_.getInt(0))
+      assert(workers.sorted.toSeq == Seq.fill(7)(3) ++ Seq(7, 7))
+
+      // a file that is not gzip JSON is kept, and the others still go out
+      val corrupt = java.nio.file.Paths.get(spillDir, "buffer_failed_worker5_torn.json.gz")
+      Files.write(corrupt, "not gzip".getBytes("UTF-8"))
+      val cfg = HttpSink.Config(server.loadUrl, "t", spillDir = spillDir)
+      assert(Spill.replay(spark, cfg) == ((9L, 3)))
+      assert(Spill.listSpillFiles(spillDir).map(_.toPath) == Seq(corrupt))
+      Files.delete(corrupt)
+      assert(server.receivedKeyed.toSet ==
+        Set(uuid -> legacy, "buffer_failed_worker3" -> reference, key -> keyed))
+      assert(Spill.replay(spark, cfg) == ((0L, 0)))
+      assert(server.receivedRecordCount == 9 && server.duplicateCount == 0)
+    } finally server.stop()
   }
 
   test("HttpExtractor e2e: real GET per appliance feeds the full pipeline") {

@@ -8,7 +8,7 @@ import java.nio.file.Files
 
 /** Property test (SURVEY.md §5.2-3): spill-write -> replay-read preserves
   * the record multiset, for arbitrary DeviceData batches across arbitrary
-  * worker ids, and worker ids round-trip through the filenames. */
+  * worker ids, and worker ids round-trip through the key-named files. */
 class SpillRoundtripSpec extends SparkSpec {
   import spark.implicits._
 
@@ -23,6 +23,13 @@ class SpillRoundtripSpec extends SparkSpec {
     inds <- Gen.listOfN(5, indicatorGen)
   } yield DeviceData(s"device-$id", "0", ts, inds)
 
+  /** Spill `rows` as one failed POST, named after its batch key as the
+    * sink names it. */
+  private def spill(dir: String, worker: Int, rows: Seq[String]): java.io.File = {
+    val body = HttpSink.payload(rows.map(_.getBytes("UTF-8")))
+    Spill.writeBatch(dir, worker, HttpSink.batchKey("spec", worker, 0, rows.size, body), body)
+  }
+
   test("spill write -> read round-trips the multiset, any batch shape") {
     val spillDir = Files.createTempDirectory("graft-prop-spill").toString
     val batches = (0 until 5).map { w =>
@@ -32,7 +39,7 @@ class SpillRoundtripSpec extends SparkSpec {
     batches.foreach { case (w, recs) =>
       val json = Transform.deviceDataJson(recs.toDF())
         .as[String].collect().toSeq
-      Spill.writeBatch(spillDir, w, json)
+      spill(spillDir, w, json)
     }
     val back = Spill.readSpilled(spark, spillDir)
     val expected = batches.flatMap(_._2)
@@ -51,16 +58,17 @@ class SpillRoundtripSpec extends SparkSpec {
   }
 
   test("each spill file occupies exactly one partition (replay key contract)") {
-    // Replay's idempotency key assumes every file is read whole in one
-    // task (unsplittable multiLine JSON) with a single contiguous row
-    // extent per (file, batchIdx). If the read recipe ever changes to a
-    // splittable format this breaks loudly instead of silently aliasing
-    // keys. Uses many rows per file so a splittable recipe WOULD split.
+    // A spill file is one JSON array, so readSpilled must read every file
+    // whole in one task (unsplittable multiLine JSON). If the read recipe
+    // ever changes to a splittable format this breaks loudly instead of
+    // reading arrays cut apart. (Replay posts a file's bytes as they are
+    // and no longer reads through this recipe.) Uses many rows per file
+    // so a splittable recipe WOULD split.
     val spillDir = Files.createTempDirectory("graft-onepart-spill").toString
     (0 until 4).foreach { w =>
       val recs = Iterator.continually(deviceGen.sample).flatten.take(500).toSeq
       val json = Transform.deviceDataJson(recs.toDF()).as[String].collect().toSeq
-      Spill.writeBatch(spillDir, w, json)
+      spill(spillDir, w, json)
     }
     val files = Spill.listSpillFiles(spillDir)
     val parts = Spill.readRaw(spark, files)
@@ -72,7 +80,7 @@ class SpillRoundtripSpec extends SparkSpec {
     parts.foreach { r =>
       assert(r.getAs[Long]("nparts") == 1L,
         s"spill file ${r.getAs[String]("src")} spans ${r.getAs[Long]("nparts")} partitions " +
-          "— the replay idempotency key extent contract is broken")
+          "— the one-array-per-file read contract is broken")
       assert(r.getAs[Long]("rows") == 500L)
     }
   }
@@ -82,7 +90,7 @@ class SpillRoundtripSpec extends SparkSpec {
     val json = Transform.deviceDataJson(
       Seq(DeviceData("d", "0", 1L, Seq(Indicator("irq", 0.5)))).toDF())
       .as[String].collect().toSeq
-    val f = Spill.writeBatch(spillDir, 3, json)
+    val f = spill(spillDir, 3, json)
     // corrupt the name: strip the digits (reference main.go:365-371 -> 0)
     val bad = new java.io.File(spillDir, "buffer_failed_workerX_y.json.gz")
     java.nio.file.Files.move(f.toPath, bad.toPath)
